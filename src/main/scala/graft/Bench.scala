@@ -168,35 +168,15 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Bench contract is local[32]; SPARK_GRAFT_CPUS overrides for ad-hoc
     // profiling (Verify keeps its own local[4] default per BASELINE.md).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Session-wide extension surface (ADVICE r9): the injected SQL
-    // functions + NativeTextRewrite rule are registered at construction,
-    // so every query plans under the same session state rather than
-    // order-dependently after q_sql_native_funcs happens to run.
-    graft.plans.GraftExtensions.register(spark)
-    // The reference engine is fully in-memory (its only source is a
-    // caller-materialized vector); cache the input tables for parity.
-    // Spark's CacheManager substitutes the InMemoryRelation into every
-    // query that scans the same file. NOT pre-spread: a measured
-    // experiment (r9) caching every table repartitioned to local[N]
-    // made the two image codecs 4-5x faster but taxed the other 200+
-    // queries ~0.3 s each in stage/task overhead (suite 113.6 -> 159 s)
-    // — the spread belongs INSIDE the few compute-bound queries, not on
-    // every cached scan.
-    Tables.names.foreach { n =>
-      try Tables(spark, sfDir, n).cache().count()
-      catch { case _: Throwable => () }
-    }
+    val cpus = Session.cpus(Session.allCores)
+    val spark = Session(cpus)
+    // Input tables are cached, NOT pre-spread: a measured experiment
+    // (r9) caching every table repartitioned to local[N] made the two
+    // image codecs 4-5x faster but taxed the other 200+ queries
+    // ~0.3 s each in stage/task overhead (suite 113.6 -> 159 s) — the
+    // spread belongs INSIDE the few compute-bound queries, not on every
+    // cached scan.
+    Session.cacheTables(spark, sfDir)
     // Ad-hoc profiling: SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the run.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -251,9 +231,9 @@ object Bench {
     // Load markers bracket the timed passes (after warm-up, so JIT of the
     // suite itself never pollutes the gauge).
     val loadBefore = loadavg1m()
-    val calibBefore = calibrateMs(cpus.toInt)
-    val membwBefore = calibrateMembwMs(cpus.toInt)
-    val schedBefore = calibrateSchedMs(cpus.toInt)
+    val calibBefore = calibrateMs(cpus)
+    val membwBefore = calibrateMembwMs(cpus)
+    val schedBefore = calibrateSchedMs(cpus)
     val samples = scala.collection.mutable.Map[String, List[(Double, Long, Long)]]()
       .withDefaultValue(Nil)
     // A timed-pass failure skips only that sample; the median is taken
@@ -265,9 +245,9 @@ object Bench {
         Caches.releaseAll()
       }
     }
-    val calibAfter = calibrateMs(cpus.toInt)
-    val membwAfter = calibrateMembwMs(cpus.toInt)
-    val schedAfter = calibrateSchedMs(cpus.toInt)
+    val calibAfter = calibrateMs(cpus)
+    val membwAfter = calibrateMembwMs(cpus)
+    val schedAfter = calibrateSchedMs(cpus)
     val loadAfter = loadavg1m()
     // The BASELINE.md adjudication, executed rather than re-derived by
     // readers: ambient tax from the markers, and the quiet-equivalent
@@ -308,7 +288,7 @@ object Bench {
     // the report like the three window legs; computed after the timed
     // passes, flags only, never divides.
     val waitFrac = Calibration.waitDominatedFrac(
-      results.map { case (_, v) => (v._1, v._3) }, cpus.toInt)
+      results.map { case (_, v) => (v._1, v._3) }, cpus)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v._1 }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v._1 >= 0 => v._1 }.sum

@@ -1,22 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke of the driver's t1 check: SparkEntry.entry must return >0
   * rows on sf0.001. Usage: sbt "runMain graft.Smoke".
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark) // uniform session surface (ADVICE r9)
+    val spark = Session(4)
     val df = SparkEntry.entry(spark)
     df.show(5)
     println(s"ENTRY_ROWS=${df.count()}")

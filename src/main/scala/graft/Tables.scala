@@ -61,9 +61,6 @@ object Tables {
       minBytesPerTask: Long = 64L << 10): DataFrame = {
     val target = df.sparkSession.sessionState.conf.numShufflePartitions
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_SPREAD"))
-      System.err.println(s"[spreadAtScale] bytes=$bytes target=$target " +
-        s"fire=${bytes >= BigInt(target.toLong) * minBytesPerTask}")
     if (bytes >= BigInt(target.toLong) * minBytesPerTask) spreadIfUnderSplit(df)
     else df
   }

@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Session-wide extension surface (ADVICE r9): registered at
-    // construction so plans are not order-dependent on q_sql_native_funcs.
-    graft.plans.GraftExtensions.register(spark)
+    val spark = Session(Session.cpus(4))
     new java.io.File(outDir).mkdirs()
     // Ad-hoc iteration: SPARK_GRAFT_VERIFY_ONLY=q_a,q_b restricts the dump
     // (driver always runs the full surface — this is local tooling only).

@@ -1,12 +1,11 @@
 package graft.jobs
 
-import java.util.UUID
-import java.util.concurrent.ConcurrentHashMap
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+
+import graft.QueryMetrics
 
 /** Job-lifecycle parity with the reference engine's public API
   * (`MapReduceFramework.h:18-24`):
@@ -21,66 +20,20 @@ import org.apache.spark.sql.SparkSession
   * stages are SHUFFLE (`MapReduceFramework.h:8-13`). Percentage is
   * completed/total tasks of the current stage, exactly like the
   * reference's per-record counters (`MapReduceFramework.cpp:317-352`).
-  * Progress is fed by a SparkListener keyed on a job group, so any action
-  * — including multi-job AQE queries — reports sensibly.
+  * Progress comes from the session's [[QueryMetrics]] collector, keyed on
+  * the handle's job group, so any action — including multi-job AQE
+  * queries — reports sensibly.
   */
 final case class JobState(stage: String, percentage: Double)
 
-final class JobHandle[T] private[jobs] (
-    groupId: String,
-    fut: Future[T],
-    listener: GroupProgressListener,
-    spark: SparkSession) {
+final class JobHandle[T] private[jobs] (fut: Future[T], group: QueryMetrics.Group) {
 
   /** Non-blocking progress poll (getJobState parity). */
-  def state: JobState = listener.state
-
-  def isCompleted: Boolean = fut.isCompleted
-
-  /** Blocks until the job finishes and returns its result (waitForJob). */
-  def await(): T = Await.result(fut, Duration.Inf)
-
-  /** Detach the progress listener (closeJobHandle). Idempotent. */
-  def close(): Unit = spark.sparkContext.removeSparkListener(listener)
-}
-
-private[jobs] final class GroupProgressListener(groupId: String) extends SparkListener {
-  private case class StageProg(jobId: Int, index: Int, total: Int, var done: Int)
-  private val stages = new ConcurrentHashMap[Int, StageProg]()
-  private val groupJobs = ConcurrentHashMap.newKeySet[Int]()
-  private val jobStageIds = new ConcurrentHashMap[Int, Seq[Int]]()
-  @volatile private var finished = false
-
-  override def onJobStart(ev: SparkListenerJobStart): Unit = {
-    if (Option(ev.properties).exists(_.getProperty("spark.jobGroup.id") == groupId)) {
-      groupJobs.add(ev.jobId)
-      jobStageIds.put(ev.jobId, ev.stageIds)
-      ev.stageInfos.zipWithIndex.foreach { case (si, idx) =>
-        stages.putIfAbsent(si.stageId, StageProg(ev.jobId, idx, si.numTasks, 0))
-      }
-    }
-  }
-
-  override def onTaskEnd(ev: SparkListenerTaskEnd): Unit = {
-    // failed/killed/speculative task ends must not advance progress
-    if (ev.reason == org.apache.spark.Success) {
-      val p = stages.get(ev.stageId)
-      if (p != null) p.synchronized { p.done = math.min(p.done + 1, p.total) }
-    }
-  }
-
-  override def onStageSubmitted(ev: SparkListenerStageSubmitted): Unit = ()
-
-  private[jobs] def markFinished(): Unit = finished = true
-
   def state: JobState = {
-    if (finished) return JobState("REDUCE", 1.0)
-    import scala.jdk.CollectionConverters._
-    val ps = stages.values.asScala.toSeq
-    if (ps.isEmpty) return JobState("UNDEFINED", 0.0)
+    if (fut.isCompleted) return JobState("REDUCE", 1.0)
+    val jobStages = group.latestJob
+    if (jobStages.isEmpty) return JobState("UNDEFINED", 0.0)
     // current = the earliest incomplete stage of the latest job; else done
-    val latestJob = ps.map(_.jobId).max
-    val jobStages = ps.filter(_.jobId == latestJob).sortBy(_.index)
     val cur = jobStages.find(p => p.done < p.total).getOrElse(jobStages.last)
     val label =
       if (jobStages.length == 1) "MAP"
@@ -89,6 +42,14 @@ private[jobs] final class GroupProgressListener(groupId: String) extends SparkLi
       else "SHUFFLE"
     JobState(label, if (cur.total == 0) 1.0 else cur.done.toDouble / cur.total)
   }
+
+  def isCompleted: Boolean = fut.isCompleted
+
+  /** Blocks until the job finishes and returns its result (waitForJob). */
+  def await(): T = Await.result(fut, Duration.Inf)
+
+  /** Drop the job's progress state (closeJobHandle). Idempotent. */
+  def close(): Unit = group.close()
 }
 
 object Jobs {
@@ -100,17 +61,12 @@ object Jobs {
     * session build time).
     */
   def start[T](spark: SparkSession, name: String = "graft-job")(body: => T): JobHandle[T] = {
-    val groupId = s"graft-${UUID.randomUUID()}"
-    val listener = new GroupProgressListener(groupId)
-    spark.sparkContext.addSparkListener(listener)
+    val group = QueryMetrics.open(spark.sparkContext)
     val fut = Future {
-      spark.sparkContext.setJobGroup(groupId, name, interruptOnCancel = true)
+      spark.sparkContext.setJobGroup(group.id, name, interruptOnCancel = true)
       try body
-      finally {
-        spark.sparkContext.clearJobGroup()
-        listener.markFinished()
-      }
+      finally spark.sparkContext.clearJobGroup()
     }
-    new JobHandle[T](groupId, fut, listener, spark)
+    new JobHandle[T](fut, group)
   }
 }

@@ -267,10 +267,10 @@ object AdvancedJoins {
     (spark, dir) => {
       // path + table names carry the Spark applicationId so two
       // concurrent sessions benching the same dir never race on the
-      // overwrite; a once-per-path JVM shutdown hook removes the /tmp
+      // overwrite; a once-per-path JVM shutdown hook removes the
       // bucket files (they are a demonstration workspace, not a sink)
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_bucketed_$key"
+      val wh = StoreToken.workspace("bucketed", key)
       BucketedWorkspace.cleanupOnExit(wh)
       val ordersT = s"g_orders_bucketed_$key"
       val custT = s"g_customer_bucketed_$key"
@@ -303,7 +303,7 @@ object AdvancedJoins {
     marketBasket, bucketedJoin)
 }
 
-/** Collision-resistant per-(session, fixture-dir) suffix for /tmp store
+/** Collision-resistant per-(session, fixture-dir) suffix for store
   * workspaces and their catalog table names (ADVICE r12: the previous
   * `dir.hashCode` hex is a 32-bit String hash — two distinct fixture
   * dirs colliding in one JVM would silently serve one dir's persisted
@@ -312,6 +312,14 @@ object AdvancedJoins {
   * dir string scopes fixture dirs within a session.
   */
 private[operators] object StoreToken {
+  /** Parent of every store workspace: the JVM's `java.io.tmpdir`, so a
+    * run that gives its JVM a private temp dir keeps its stores there.
+    */
+  val root: String = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")).toString
+
+  /** Workspace `graft_<kind>_<key>` under [[root]]. */
+  def workspace(kind: String, key: String): String = s"$root/graft_${kind}_$key"
+
   def apply(spark: org.apache.spark.sql.SparkSession, dir: String): String = {
     val app = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -409,12 +417,12 @@ private[graft] object VintageWrite {
     }
 }
 
-/** Session-scoped /tmp workspace for the bucketed-layout demonstration:
+/** Session-scoped temp workspace for the bucketed-layout demonstration:
   * registers at most one JVM shutdown hook per path that removes the
   * bucket files on exit, so repeated builds within a session reuse the
   * path and nothing leaks across runs.
   */
-private[operators] object BucketedWorkspace {
+private[graft] object BucketedWorkspace {
   private val hooked = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   def cleanupOnExit(path: String): Unit =

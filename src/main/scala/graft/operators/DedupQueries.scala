@@ -1634,7 +1634,7 @@ object DedupQueries {
     "q_dedup_incremental",
     (spark, dir) => {
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_incstore_$key"
+      val wh = StoreToken.workspace("incstore", key)
       val exactT = s"g_inc_exact_$key"
       val bandsT = s"g_inc_bands_$key"
       val docs = Tables.spreadIfUnderSplitAtScale(
@@ -1774,7 +1774,7 @@ object DedupQueries {
     "q_store_append",
     (spark, dir) => {
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_incstore2_$key"
+      val wh = StoreToken.workspace("incstore2", key)
       val bandsT = bandStoreTable(spark, dir)
       val docs = Tables.spreadIfUnderSplitAtScale(
         Tables(spark, dir, "documents").select(col("doc_id"), col("text")))
@@ -1877,7 +1877,7 @@ object DedupQueries {
     "q_store_delete",
     (spark, dir) => {
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_delstore_$key"
+      val wh = StoreToken.workspace("delstore", key)
       val (bandsT, bandsT2) = delStoreTables(spark, dir)
       val docs = Tables.spreadIfUnderSplitAtScale(
         Tables(spark, dir, "documents").select(col("doc_id"), col("text")))

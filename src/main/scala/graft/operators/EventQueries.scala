@@ -790,7 +790,7 @@ object EventQueries {
     "q_session_store",
     (spark, dir) => {
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_sessstore_$key"
+      val wh = StoreToken.workspace("sessstore", key)
       val sT = s"g_session_store_$key"
       val cut = lit("2024-01-16 00:00:00").cast("timestamp")
       val evs = Tables(spark, dir, "events")
@@ -904,7 +904,7 @@ object EventQueries {
     "q_session_expire",
     (spark, dir) => {
       val key = graft.operators.StoreToken(spark, dir)
-      val wh = s"/tmp/graft_sessttl_$key"
+      val wh = StoreToken.workspace("sessttl", key)
       val (fullT, liveT) = expireStoreTables(spark, dir)
       val cut = lit("2024-01-16 00:00:00").cast("timestamp")
       val cutUs = 1705363200000000L // 2024-01-16 00:00:00 UTC in µs

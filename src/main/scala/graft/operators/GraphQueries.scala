@@ -1017,7 +1017,7 @@ object GraphQueries {
     "q_triangle_store",
     (spark, dir) => {
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_tristore_$key"
+      val wh = StoreToken.workspace("tristore", key)
       val adjT = s"g_tri_adj_$key"
       val cenT = s"g_tri_census_$key"
       // no (o, p) pre-distinct — see q_triangle_count (r17): every use

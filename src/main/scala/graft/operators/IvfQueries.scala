@@ -418,7 +418,7 @@ object IvfQueries {
     "q_ivf_store",
     (spark, dir) => {
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_ivfstore_$key"
+      val wh = StoreToken.workspace("ivfstore", key)
       val sT = s"g_ivf_store_$key"
       val e = Tables(spark, dir, "embeddings")
       val cents = broadcast(e.filter(col("vec_id") < 10)
@@ -567,7 +567,7 @@ object IvfQueries {
   private[graft] def ensureIvfStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     val key = StoreToken(spark, dir)
-    val wh = s"/tmp/graft_ivfstore2_$key"
+    val wh = StoreToken.workspace("ivfstore2", key)
     val sT = ivfStoreTable(spark, dir)
     StoreOnce(wh) {
       BucketedWorkspace.cleanupOnExit(wh)
@@ -835,7 +835,7 @@ object IvfQueries {
   private[graft] def ivfDeleteStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
     val key = StoreToken(spark, dir)
-    (s"g_ivfdel_$key", s"/tmp/graft_ivfdel_$key")
+    (s"g_ivfdel_$key", StoreToken.workspace("ivfdel", key))
   }
 
   /** PARTITION-TARGETED DELETION from the persisted IVF index (VERDICT
@@ -993,7 +993,7 @@ object IvfQueries {
   private[graft] def ivfExpireStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
     val key = StoreToken(spark, dir)
-    (s"g_ivf_exp_$key", s"/tmp/graft_ivfexp_$key")
+    (s"g_ivf_exp_$key", StoreToken.workspace("ivfexp", key))
   }
 
   /** The IVF retention verb, re-runnable: on the two-level (vintage,
@@ -1122,7 +1122,7 @@ object IvfQueries {
   private[graft] def ivfLifecycleStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String, String) = {
     val key = StoreToken(spark, dir)
-    (s"g_ivf_lc_$key", s"g_ivf_lcc_$key", s"/tmp/graft_ivflc_$key")
+    (s"g_ivf_lc_$key", s"g_ivf_lcc_$key", StoreToken.workspace("ivflc", key))
   }
 
   /** The ladder's retention verb, re-runnable (drop-twice ≡ drop-once):

@@ -305,7 +305,7 @@ object PipelineQueries {
   private[graft] def ensureCorpusStores(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
     val key = StoreToken(spark, dir)
-    val wh = s"/tmp/graft_corpusinc_$key"
+    val wh = StoreToken.workspace("corpusinc", key)
     val (hT, bT) = corpusStoreTables(spark, dir)
     val (_, _, _, score) = TextOps.qualityScore(col("text"))
     val base = Tables.spreadIfUnderSplitAtScale(
@@ -561,7 +561,7 @@ object PipelineQueries {
     (spark, dir) => {
       val (hT, bT) = ensureCorpusStores(spark, dir)
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_cdel_$key"
+      val wh = StoreToken.workspace("cdel", key)
       val (hT2, tombT) = corpusDeleteTables(spark, dir)
       StoreOnce(wh) {
         BucketedWorkspace.cleanupOnExit(wh)
@@ -748,7 +748,7 @@ object PipelineQueries {
       dir: String): Unit = {
     val (aT, bT, _) = corpusRefcountTables(spark, dir)
     val key = StoreToken(spark, dir)
-    val wh = s"/tmp/graft_rc_$key"
+    val wh = StoreToken.workspace("rc", key)
     val dec = refcountKeptOf(spark, dir, col("doc_id") % 10 === 5)
       .groupBy(col("h")).agg(count(lit(1)).as("dec"))
     spark.table(aT).join(broadcast(dec), Seq("h"), "left")
@@ -822,7 +822,7 @@ object PipelineQueries {
     (spark, dir) => {
       val (aT, bT, cT) = corpusRefcountTables(spark, dir)
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_rc_$key"
+      val wh = StoreToken.workspace("rc", key)
       def keptOf(filter: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
         refcountKeptOf(spark, dir, filter)
       StoreOnce(wh) {

@@ -1242,7 +1242,7 @@ object SketchQueries {
     "q_hll_store",
     (spark, dir) => {
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_hllstore_$key"
+      val wh = StoreToken.workspace("hllstore", key)
       val regT = hllStoreTable(spark, dir)
       val o = Tables(spark, dir, "orders")
       def regsOf(rel: DataFrame, vintage: String): DataFrame = hllRegsOf(rel, vintage)
@@ -1401,7 +1401,7 @@ object SketchQueries {
     "q_cms_store",
     (spark, dir) => {
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_cmsstore_$key"
+      val wh = StoreToken.workspace("cmsstore", key)
       val cT = cmsStoreTable(spark, dir)
       val words = graft.Caches.persisted(cmsWordsOf(spark, dir))
       def counters(rel: DataFrame, vintage: String): DataFrame =
@@ -1531,7 +1531,7 @@ object SketchQueries {
     "q_bloom_store",
     (spark, dir) => {
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_bloomstore_$key"
+      val wh = StoreToken.workspace("bloomstore", key)
       val bT = bloomStoreTable(spark, dir)
       val positioned = graft.Caches.persisted(bloomPositionedOf(spark, dir))
       StoreOnce(wh) {
@@ -1675,7 +1675,7 @@ object SketchQueries {
     "q_quantile_store",
     (spark, dir) => {
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_qstore_$key"
+      val wh = StoreToken.workspace("qstore", key)
       val hT = quantileStoreTable(spark, dir)
       val o = quantileCentsOf(spark, dir)
       val spanD = quantileSpanOf(o)
@@ -1755,7 +1755,7 @@ object SketchQueries {
   private[graft] def expireStoreTables(spark: org.apache.spark.sql.SparkSession,
       dir: String): Map[String, (String, String)] = {
     val key = StoreToken(spark, dir)
-    val wh = s"/tmp/graft_expstore_$key"
+    val wh = StoreToken.workspace("expstore", key)
     Map(
       "hll_distinct" -> (s"g_exp_hll_$key", s"$wh/hll"),
       "cms_top1" -> (s"g_exp_cms_$key", s"$wh/cms"),
@@ -1819,7 +1819,7 @@ object SketchQueries {
     "q_sketch_expire",
     (spark, dir) => {
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_expstore_$key"
+      val wh = StoreToken.workspace("expstore", key)
       val tabs = expireStoreTables(spark, dir)
       val o = Tables(spark, dir, "orders")
       val oc = quantileCentsOf(spark, dir)

@@ -717,7 +717,7 @@ object VectorQueries {
     "q_ann_incremental",
     (spark, dir) => {
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_annstore_$key"
+      val wh = StoreToken.workspace("annstore", key)
       val storeT = s"g_ann_store_$key"
       val e = Tables(spark, dir, "embeddings")
       val base = e.filter(col("vec_id") % 10 =!= 0)
@@ -877,7 +877,7 @@ object VectorQueries {
   private[graft] def ensureAnnStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     val key = StoreToken(spark, dir)
-    val wh = s"/tmp/graft_annstore2_$key"
+    val wh = StoreToken.workspace("annstore2", key)
     val storeT = annStoreTable(spark, dir)
     StoreOnce(wh) {
       graft.operators.BucketedWorkspace.cleanupOnExit(wh)
@@ -959,9 +959,9 @@ object VectorQueries {
   /** Filesystem paths of the grown and compacted index workspaces — for
     * the file-count assertions in the compaction spec. */
   private[graft] def annStorePath(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = s"/tmp/graft_annstore2_${StoreToken(spark, dir)}/index"
+      dir: String): String = StoreToken.workspace("annstore2", StoreToken(spark, dir)) + "/index"
   private[graft] def compactStorePath(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = s"/tmp/graft_anncompact_${StoreToken(spark, dir)}/index"
+      dir: String): String = StoreToken.workspace("anncompact", StoreToken(spark, dir)) + "/index"
 
   /** COMPACTION of the persisted ANN store — the maintenance verb that
     * completes the store lifecycle (create / append / delete /
@@ -988,7 +988,7 @@ object VectorQueries {
     (spark, dir) => {
       val srcT = ensureAnnStore(spark, dir)
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_anncompact_$key"
+      val wh = StoreToken.workspace("anncompact", key)
       val cT = compactStoreTable(spark, dir)
       StoreOnce(wh) {
         graft.operators.BucketedWorkspace.cleanupOnExit(wh)
@@ -1073,7 +1073,7 @@ object VectorQueries {
   private[graft] def annDeleteTable(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = s"g_ann_del_${StoreToken(spark, dir)}"
   private[graft] def annDeletePath(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = s"/tmp/graft_anndel_${StoreToken(spark, dir)}/index"
+      dir: String): String = StoreToken.workspace("anndel", StoreToken(spark, dir)) + "/index"
 
   /** DELETION from the persisted ANN store (VERDICT r13 task 3) —
     * q_store_delete's GDPR verb extended to the vector indexes: purging
@@ -1103,7 +1103,7 @@ object VectorQueries {
     (spark, dir) => {
       val srcT = ensureAnnStore(spark, dir)
       val key = StoreToken(spark, dir)
-      val wh = s"/tmp/graft_anndel_$key"
+      val wh = StoreToken.workspace("anndel", key)
       val dT = annDeleteTable(spark, dir)
       StoreOnce(wh) {
         graft.operators.BucketedWorkspace.cleanupOnExit(wh)
@@ -1184,7 +1184,7 @@ object VectorQueries {
   private[graft] def lifecycleStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String, String) = {
     val key = StoreToken(spark, dir)
-    (s"g_lc_store_$key", s"g_lc_compact_$key", s"/tmp/graft_lcstore_$key")
+    (s"g_lc_store_$key", s"g_lc_compact_$key", StoreToken.workspace("lcstore", key))
   }
 
   /** The lifecycle ladder's ingest-time bucket expression: plane depth
@@ -1377,7 +1377,7 @@ object VectorQueries {
   private[graft] def annExpireStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
     val key = StoreToken(spark, dir)
-    (s"g_ann_exp_$key", s"/tmp/graft_annexp_$key")
+    (s"g_ann_exp_$key", StoreToken.workspace("annexp", key))
   }
 
   /** The ANN retention verb, re-runnable (drop-twice ≡ drop-once):

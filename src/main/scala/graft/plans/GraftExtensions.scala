@@ -5,14 +5,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions hook registering the engine's native expressions
-  * for SQL use:
+  * for SQL use: pass it to a session builder's `withExtensions`, or call
+  * `register(spark)` on a built session (as [[graft.Session]] does), then
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
   * spark.sql("SELECT cosine_sim(a.embedding, b.embedding) FROM ...")
   * }}}
-  *
-  * `register(spark)` does the same on an already-built session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

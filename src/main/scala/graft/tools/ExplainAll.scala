@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Dumps the formatted physical plan of every declared query to a
   * markdown file — the plan-audit artifact (are filters pushed, joins
@@ -13,16 +13,7 @@ object ExplainAll {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.register(spark) // uniform session surface (ADVICE r9)
+    val spark = Session(4)
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by graft.tools.ExplainAll at ")
       .append(dir).append(")\n\n")

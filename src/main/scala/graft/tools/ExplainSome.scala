@@ -2,8 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
+
+import graft.Session
 
 /** Dumps `.explain("formatted")` of the named queries to
   * <outDir>/<query>_<tag>.txt — the per-change plan evidence the
@@ -17,22 +18,8 @@ object ExplainSome {
     val outDir = args(1)
     val tag = args(2)
     val ids = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.register(spark)
-    graft.Tables.names.foreach { n =>
-      try graft.Tables(spark, dir, n).cache().count()
-      catch { case _: Throwable => () }
-    }
+    val spark = Session(Session.cpus(Session.allCores))
+    Session.cacheTables(spark, dir)
     Files.createDirectories(Paths.get(outDir))
     ids.foreach { id =>
       val q = graft.Registry.byName(id)

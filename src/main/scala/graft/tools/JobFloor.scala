@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Session
 
 /** Micro-measurement of the session's fixed per-job / per-task / per-stage
   * costs (r16, guide §1): how much of a bench query's wall clock is
@@ -12,16 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object JobFloor {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.cpus(Session.allCores))
     def med(n: Int)(body: => Unit): Double = {
       (1 to 3).foreach(_ => body) // warm-up
       val ts = (1 to n).map { _ =>

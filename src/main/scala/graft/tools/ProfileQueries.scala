@@ -1,9 +1,6 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import graft.{Caches, QueryMetrics, Registry, Session}
 
 /** Per-query cost anatomy for the optimization rounds (guide §1): where
   * does a timed pass's wall clock go? Splits one execution into
@@ -13,83 +10,50 @@ import org.apache.spark.sql.SparkSession
   *   - plan_ms: analysis + optimization + physical planning of the final
   *     action, from the QueryPlanningTracker;
   *   - exec_ms: the count() action itself;
-  *   - jobs / stages / tasks: scheduler work the action generated;
+  *   - jobs / stages / tasks: scheduler work the pass generated;
   *   - task_ms: summed executor task time (run time, not queue time);
-  *   - shuffle_w/r: bytes through exchanges.
+  *   - shuffle_w/r: bytes through exchanges;
+  *   - per_job: [job id, wall ms, call site] of every job, which shows
+  *     exactly where a 30-job query spends its scheduling floor.
   * exec_ms ≫ task_ms/cores with small task counts = per-stage scheduling
   * latency (sequential stage chains); task_ms ≈ exec_ms × cores = real
   * compute. Usage:
   *   sbt "runMain graft.tools.ProfileQueries /root/testdata/sf0.1 q_a q_b"
   * Reports the SECOND run of each query (warm caches, JIT done), matching
-  * Bench's steady-state protocol.
+  * Bench's steady-state protocol; only the measured pass's own job group
+  * is counted.
   */
 object ProfileQueries {
+  private def str(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
   def main(args: Array[String]): Unit = {
     val dir = args.head
     val ids = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
-    graft.Tables.names.foreach { n =>
-      try graft.Tables(spark, dir, n).cache().count()
-      catch { case _: Throwable => () }
-    }
-    val jobs = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val tasks = new AtomicInteger(0)
-    val taskMs = new AtomicLong(0L)
-    val shufW = new AtomicLong(0L)
-    val shufR = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(s.stageInfo.numTasks)
-        val m = s.stageInfo.taskMetrics
-        if (m != null) {
-          taskMs.addAndGet(m.executorRunTime)
-          shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        }
-        ()
-      }
-    })
-    def resetCounters(): Unit = {
-      jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); shufW.set(0); shufR.set(0)
-    }
+    val spark = Session(Session.cpus(Session.allCores))
+    Session.cacheTables(spark, dir)
     ids.foreach { id =>
-      val q = graft.Registry.byName(id)
+      val q = Registry.byName(id)
       // pass 1: warm-up (JIT, codegen, footer caches), untimed
       try { q.build(spark, dir).count(); () }
       catch { case e: Throwable => System.err.println(s"[profile] $id warm-up: ${e.getMessage}") }
-      graft.Caches.releaseAll()
-      // deterministic drain (ADVICE r16): don't let a loaded machine leak
-      // the warm-up's tail stages into the measured pass's counters
-      org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext, 10000)
-      resetCounters()
+      Caches.releaseAll()
       val t0 = System.nanoTime()
-      val df = q.build(spark, dir)
-      val tBuild = System.nanoTime()
-      df.count()
-      val tExec = System.nanoTime()
-      org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark.sparkContext, 10000)
-      val tr = df.queryExecution.tracker
-      val phases = tr.phases.map { case (k, v) => s""""$k":${v.durationMs}""" }
-        .mkString("{", ",", "}")
+      val ((df, tBuild, tExec), r) = QueryMetrics.measure(spark) {
+        val df = q.build(spark, dir)
+        val tBuild = System.nanoTime()
+        df.count()
+        (df, tBuild, System.nanoTime())
+      }
+      val phases = df.queryExecution.tracker.phases
+        .map { case (k, v) => s""""$k":${v.durationMs}""" }.mkString("{", ",", "}")
+      val perJob = r.jobs.map(j => s"[${j.id},${j.ms},${str(j.callSite)}]").mkString("[", ",", "]")
       println(s"""{"id":"$id","build_ms":${(tBuild - t0) / 1000000},""" +
         s""""exec_ms":${(tExec - tBuild) / 1000000},"phases":$phases,""" +
-        s""""jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},""" +
-        s""""task_ms":${taskMs.get},"shuffle_w":${shufW.get},"shuffle_r":${shufR.get}}""")
-      graft.Caches.releaseAll()
+        s""""jobs":${r.jobs.size},"stages":${r.stagesCompleted},"tasks":${r.tasks},""" +
+        s""""task_ms":${r.taskMs},"shuffle_w":${r.shuffleWriteBytes},""" +
+        s""""shuffle_r":${r.shuffleReadBytes},"per_job":$perJob}""")
+      Caches.releaseAll()
     }
     spark.stop()
   }

@@ -1,92 +1,24 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 
-/** Stage-metric meter: runs an action under a [[SparkListener]] and
-  * returns the total shuffle bytes it wrote and read (VERDICT r15 task
-  * 2). This turns "the twin's 100 TB case is shuffle BYTES" from prose
+import graft.{Caches, QueryMetrics, Registry, Session}
+
+/** Shuffle-byte meter (VERDICT r15 task 2): runs an action under its own
+  * [[QueryMetrics]] job group and returns the shuffle bytes it wrote and
+  * read. This turns "the twin's 100 TB case is shuffle BYTES" from prose
   * into a pinned number — an approximate twin whose oracle passes but
   * whose plan still moves the full data mass (the reverted first
   * q_jaccard_approx design, and the reverted capped-LPA twin) now fails
   * a byte assertion instead of surviving until a bench window exposes
-  * it.
-  *
-  * Mechanics: stage task metrics are aggregated driver-side and
-  * delivered on `onStageCompleted`; the listener bus is ASYNC, so after
-  * the action returns the meter polls until every submitted stage has
-  * completed and the readings hold still for two consecutive polls
-  * (bounded at 10 s — a metrics delivery failure must not hang a spec).
-  * Skipped stages (shuffle reuse) never submit, so reuse of a prior
-  * stage's shuffle output is counted zero — which is the honest
-  * accounting for "bytes this query moved".
-  *
-  * Scoping (VERDICT r16 task 1): the body runs under a unique job
-  * group, and only stages submitted with that group id are counted —
-  * concurrent jobs on the shared session (AQE cleanup, other specs'
-  * broadcast builds, background cache work) no longer pollute the
-  * reading. Broadcast-exchange and AQE subquery jobs run on side
-  * threads but capture the submitting thread's locals
-  * (withThreadLocalCaptured), so they carry the group and are counted.
+  * it. Only the group's own stages are counted, so concurrent jobs on
+  * the shared session never pollute a reading (VERDICT r16 task 1).
   */
 object ShuffleMeter {
+  type Reading = QueryMetrics.Reading
 
-  final case class Reading(
-      shuffleWriteBytes: Long,
-      shuffleReadBytes: Long,
-      stagesCompleted: Int)
-
-  def measure[A](spark: SparkSession)(body: => A): (A, Reading) = {
-    val group = s"shuffle-meter-${java.util.UUID.randomUUID()}"
-    val write = new AtomicLong(0L)
-    val read = new AtomicLong(0L)
-    val submitted = new AtomicInteger(0)
-    val completed = new AtomicInteger(0)
-    val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
-        if (s.properties != null &&
-          group == s.properties.getProperty("spark.jobGroup.id")) {
-          mine.add(s.stageInfo.stageId)
-          submitted.incrementAndGet()
-        }
-        ()
-      }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        if (mine.contains(s.stageInfo.stageId)) {
-          val m = s.stageInfo.taskMetrics
-          if (m != null) {
-            write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          }
-          completed.incrementAndGet()
-        }
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "shuffle-meter", interruptOnCancel = false)
-    try {
-      val a = body
-      // settle the async bus: submitted == completed AND stable twice
-      var last = (-1, -1L, -1L)
-      var stable = 0
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (stable < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        val now = (completed.get, write.get, read.get)
-        if (now == last && completed.get >= submitted.get) stable += 1
-        else stable = 0
-        last = now
-      }
-      (a, Reading(write.get, read.get, completed.get))
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
+  def measure[A](spark: SparkSession)(body: => A): (A, Reading) =
+    QueryMetrics.measure(spark)(body)
 
   /** Measure one declared query by id under the steady-state protocol:
     * an untimed warm-up pass settles file-listing/footer caches and any
@@ -98,11 +30,11 @@ object ShuffleMeter {
     */
   def measureQuery(spark: SparkSession, id: String, dir: String)
       : (Long, Reading) = {
-    val q = graft.Registry.byName(id)
+    val q = Registry.byName(id)
     q.build(spark, dir).count()
-    graft.Caches.releaseAll()
+    Caches.releaseAll()
     val (rows, r) = measure(spark) { q.build(spark, dir).count() }
-    graft.Caches.releaseAll()
+    Caches.releaseAll()
     (rows, r)
   }
 }
@@ -116,17 +48,7 @@ object ShuffleCompare {
   def main(args: Array[String]): Unit = {
     val ids = args.dropRight(1).toSeq
     val dir = args.last
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = Session(Session.cpus(4))
     ids.foreach { id =>
       // measureQuery warms up internally (steady-state protocol)
       val (rows, r) = ShuffleMeter.measureQuery(spark, id, dir)

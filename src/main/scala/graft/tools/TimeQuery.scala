@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Ad-hoc timing harness: runs one declared query N times and prints each
   * wall time + the final executed plan. Usage:
@@ -11,24 +11,11 @@ object TimeQuery {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark) // uniform session surface (ADVICE r9)
+    val spark = Session(Session.cpus(4))
     // SPARK_GRAFT_CACHE_TABLES=1 reproduces Bench's cached-table session
     // (plan shapes can differ: InMemoryRelation stats vs file stats)
     if (sys.env.get("SPARK_GRAFT_CACHE_TABLES").contains("1"))
-      graft.Tables.names.foreach { n =>
-        try graft.Tables(spark, dir, n).cache().count()
-        catch { case _: Throwable => () }
-      }
+      Session.cacheTables(spark, dir)
     val q = graft.Registry.byName(name)
     for (i <- 1 to reps) {
       val t0 = System.nanoTime()

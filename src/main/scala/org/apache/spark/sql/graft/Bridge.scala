@@ -13,13 +13,18 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Deterministically drain the async listener bus (ADVICE r16: the
-    * profiling tools' fixed 300/500 ms sleeps can under-drain on a
-    * loaded machine, mis-attributing a warm-up's tail stages to the
-    * measured pass). Swallows the timeout — a slow bus must degrade a
-    * profile, never hang or kill it.
+  /** Deterministically drain the async listener bus: every event posted
+    * before the call has been delivered when it returns. Swallows the
+    * timeout — a slow bus must degrade a reading, never hang or kill it.
     */
   def waitListenerBusEmpty(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
     try sc.listenerBus.waitUntilEmpty(timeoutMs)
     catch { case _: java.util.concurrent.TimeoutException => () }
+
+  /** The listeners registered on `sc`'s bus. */
+  def listeners(sc: org.apache.spark.SparkContext)
+      : Seq[org.apache.spark.scheduler.SparkListenerInterface] = {
+    import scala.jdk.CollectionConverters._
+    sc.listenerBus.listeners.asScala.toSeq
+  }
 }

@@ -49,16 +49,12 @@ class PlanSpec extends AnyFunSuite {
     val customer = Tables(spark, dir, "customer")
     spark.sql("DROP TABLE IF EXISTS orders_b")
     spark.sql("DROP TABLE IF EXISTS customer_b")
-    // a fresh JVM gets an empty in-memory catalog, but the warehouse
-    // DIRECTORY survives the previous run — remove it on disk too
+    // managed tables land in the session's per-JVM temp warehouse, never
+    // in the working directory
     val wh = new java.io.File(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    Seq("orders_b", "customer_b").map(new java.io.File(wh, _))
-      .filter(_.exists()).foreach(rm)
+      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath).getCanonicalPath
+    val cwd = new java.io.File(System.getProperty("user.dir")).getCanonicalPath
+    assert(!(wh + "/").startsWith(cwd + "/"), s"warehouse $wh is under $cwd")
     orders.write.mode("overwrite")
       .bucketBy(4, "o_custkey").sortBy("o_custkey").saveAsTable("orders_b")
     customer.write.mode("overwrite")

@@ -3,30 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared session across all suites (SURVEY.md §5.2 harness shape:
-  * local[4], 4 shuffle partitions, UTC).
+  * local[4], 4 shuffle partitions, UTC), whatever `SPARK_GRAFT_CPUS` says.
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    // let AQE re-plan partition counts inside cached-plan materializations
-    // (off by default): at 100 TB it sizes post-shuffle partitions by
-    // bytes; at bench scale it coalesces the 32-way shuffles of tiny
-    // iteration vectors that otherwise pay pure scheduling overhead
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    // the driver's synthetic parquet carries naive timestamp[us] columns;
-    // read them as session-UTC instants (TIMESTAMP) rather than NTZ so
-    // unix_micros/window/etc. keep their types — identical values under
-    // the pinned UTC session timezone
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  // Session-wide extension surface (ADVICE r9): registered at construction
-  // so suite plans never depend on which spec touched the catalog first.
-  plans.GraftExtensions.register(spark)
+  lazy val spark: SparkSession = Session(4)
 
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"

@@ -24,7 +24,7 @@ class ConfLockRaceSpec extends AnyFunSuite {
     // asserts no base row is ever lost on either store.
     import spark.implicits._
     val key = StoreToken(spark, dir)
-    val wh = s"/tmp/graft_conflock_race_$key"
+    val wh = StoreToken.workspace("conflock_race", key)
     BucketedWorkspace.deleteRecursively(new java.io.File(wh))
     BucketedWorkspace.cleanupOnExit(wh)
     val t1 = s"g_race_a_$key"

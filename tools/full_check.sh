@@ -3,6 +3,9 @@
 # Usage: bash tools/full_check.sh
 set -e
 cd "$(dirname "$0")/.."
+# sessions keep their warehouse in a per-JVM temp dir: nothing may write
+# managed tables into the working directory
+rm -rf spark-warehouse
 
 echo "=== compile + tests ==="
 sbt -batch test 2>&1 | grep -aE "Tests: succeeded|All tests passed|TESTS FAILED|Failed tests" | head -5
@@ -32,3 +35,8 @@ python3 tools/check.py /root/testdata/sf0.001 /tmp/graft_vnoaqe | tail -1
 echo "=== bench @ sf0.1 ==="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" 2>&1 \
   | grep -a '"metric"' | head -1
+
+if [ -e spark-warehouse ]; then
+  echo "FAIL: spark-warehouse/ appeared in the working directory" >&2
+  exit 1
+fi
