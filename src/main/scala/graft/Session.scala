@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 
 /** The one way graft builds a SparkSession. Every main, tool and spec
@@ -19,11 +17,7 @@ object Session {
     * removed at exit, so managed tables never land in the working
     * directory and never outlive the JVM that wrote them.
     */
-  private lazy val warehouse: String = {
-    val dir = Files.createTempDirectory("graft-warehouse").toString
-    operators.BucketedWorkspace.cleanupOnExit(dir)
-    dir
-  }
+  private lazy val warehouse: String = operators.Stores.tempDir("warehouse")
 
   /** A `local[cpus]` session with `cpus` shuffle partitions and the
     * engine's SQL functions and rewrite rule registered.

@@ -1596,7 +1596,7 @@ object DedupQueries {
     * delta (doc_id ≡ 0 mod 10, ~10% of documents) is deduped against the
     * EXISTING corpus (the other 90%) WITHOUT re-scanning the base
     * corpus. The base is represented by a persisted signature store,
-    * built once per session ([[graft.operators.StoreOnce]]) and written via the
+    * built once per session ([[StoreOnce]]) and written via the
     * q_bucketed_join bucketed sink (8 buckets, sorted, external parquet):
     *
     *   - `exact` store: (doc_id, h=md5(text)) bucketed on h;
@@ -1633,22 +1633,18 @@ object DedupQueries {
   private val dedupIncremental = Q(
     "q_dedup_incremental",
     (spark, dir) => {
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("incstore", key)
-      val exactT = s"g_inc_exact_$key"
-      val bandsT = s"g_inc_bands_$key"
+      val ws = Stores(spark, dir, "incstore")
+      val exactT = ws.table("inc_exact")
+      val bandsT = ws.table("inc_bands")
       val docs = Tables.spreadIfUnderSplitAtScale(
         Tables(spark, dir, "documents").select(col("doc_id"), col("text")))
       val base = docs.filter(col("doc_id") % 10 =!= 0)
       val delta = docs.filter(col("doc_id") % 10 === 0)
-      StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
-        base.select(col("doc_id"), md5(col("text")).as("h"))
-          .write.mode("overwrite").bucketBy(8, "h").sortBy("h")
-          .option("path", s"$wh/exact").saveAsTable(exactT)
-        bandKeyed(minhashSigs(shingleRelOf(base)))
-          .write.mode("overwrite").bucketBy(8, "bandkey").sortBy("bandkey")
-          .option("path", s"$wh/bands").saveAsTable(bandsT)
+      StoreOnce(ws.dir) {
+        Stores.create(base.select(col("doc_id"), md5(col("text")).as("h")),
+          exactT, ws.path("exact"), Some("h"))
+        Stores.create(bandKeyed(minhashSigs(shingleRelOf(base))),
+          bandsT, ws.path("bands"), Some("bandkey"))
       }
       val storeExact = spark.table(exactT).select(col("doc_id").as("m"), col("h"))
       val storeBands = spark.table(bandsT).select(
@@ -1731,10 +1727,10 @@ object DedupQueries {
     })
 
   /** q_store_append's catalog table: the vintage-PARTITIONED, bandkey-
-    * bucketed band-signature store ([[StoreToken]]-keyed).
+    * bucketed band-signature store.
     */
   private[graft] def bandStoreTable(spark: SparkSession, dir: String): String =
-    s"g_inc2_bands_${StoreToken(spark, dir)}"
+    Stores(spark, dir, "incstore2").table("inc2_bands")
 
   /** The day-2 band-signature append, re-runnable: a [[VintageWrite]]
     * dynamic overwrite of vintage=delta1 (append-twice ≡ append-once —
@@ -1753,7 +1749,7 @@ object DedupQueries {
     * q_dedup_incremental proved a delta dedups against a bucketed store
     * without re-scanning base text; this query proves the store GROWS
     * correctly AND survives a day-2 re-run. The base corpus's band
-    * signatures persist once (bucketBy(8, bandkey) under a vintage
+    * signatures persist once (8 buckets on bandkey under a vintage
     * partition — the same sink), yesterday's delta (doc_id ≡ 1 mod 10)
     * lands as a [[VintageWrite]] dynamic overwrite of its vintage
     * partition — one bucket-file set per vintage, never a base rewrite,
@@ -1773,21 +1769,17 @@ object DedupQueries {
   private val storeAppend = Q(
     "q_store_append",
     (spark, dir) => {
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("incstore2", key)
+      val ws = Stores(spark, dir, "incstore2")
       val bandsT = bandStoreTable(spark, dir)
       val docs = Tables.spreadIfUnderSplitAtScale(
         Tables(spark, dir, "documents").select(col("doc_id"), col("text")))
       val base = docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 1)
       val delta1 = docs.filter(col("doc_id") % 10 === 1)
       val delta2 = docs.filter(col("doc_id") % 10 === 0)
-      StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
-        bandKeyed(minhashSigs(shingleRelOf(base)))
-          .withColumn("vintage", lit("base"))
-          .write.mode("overwrite").partitionBy("vintage")
-          .bucketBy(8, "bandkey").sortBy("bandkey")
-          .option("path", s"$wh/bands").saveAsTable(bandsT)
+      StoreOnce(ws.dir) {
+        Stores.create(bandKeyed(minhashSigs(shingleRelOf(base)))
+            .withColumn("vintage", lit("base")),
+          bandsT, ws.path("bands"), Some("bandkey"), Stores.Vintage)
         // the nightly append: yesterday's signatures land as a DYNAMIC
         // overwrite of their vintage partition — re-runnable after a
         // mid-write failure without double-appending (VintageWrite)
@@ -1844,8 +1836,8 @@ object DedupQueries {
   /** q_store_delete's two catalog tables: the full signature store and
     * its post-deletion rewrite. */
   private[graft] def delStoreTables(spark: SparkSession, dir: String): (String, String) = {
-    val key = StoreToken(spark, dir)
-    (s"g_del_bands_$key", s"g_del_bands_v2_$key")
+    val ws = Stores(spark, dir, "delstore")
+    (ws.table("del_bands"), ws.table("del_bands_v2"))
   }
 
   /** DELETION from the persisted signature store — the missing third
@@ -1853,7 +1845,7 @@ object DedupQueries {
     * GDPR path ON THE INDEX: purging a document from the corpus is not
     * enough if its minhash signatures keep matching future deltas
     * against it. The store (band signatures of all non-today docs,
-    * bucketBy(8, bandkey) — the q_dedup_incremental sink) takes a
+    * 8 buckets on bandkey — the q_dedup_incremental sink) takes a
     * deletion request (doc_id ≡ 5 mod 10): the request-sized id set
     * BROADCASTS onto a store anti-join and the surviving rows rewrite
     * under the SAME bucket layout, so every later probe still rides the
@@ -1876,25 +1868,21 @@ object DedupQueries {
   private val storeDelete = Q(
     "q_store_delete",
     (spark, dir) => {
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("delstore", key)
+      val ws = Stores(spark, dir, "delstore")
       val (bandsT, bandsT2) = delStoreTables(spark, dir)
       val docs = Tables.spreadIfUnderSplitAtScale(
         Tables(spark, dir, "documents").select(col("doc_id"), col("text")))
       val base = docs.filter(col("doc_id") % 10 =!= 0)
-      StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
-        bandKeyed(minhashSigs(shingleRelOf(base)))
-          .write.mode("overwrite").bucketBy(8, "bandkey").sortBy("bandkey")
-          .option("path", s"$wh/bands").saveAsTable(bandsT)
+      StoreOnce(ws.dir) {
+        Stores.create(bandKeyed(minhashSigs(shingleRelOf(base))),
+          bandsT, ws.path("bands"), Some("bandkey"))
         // the deletion request: purge doc_id ≡ 5 (mod 10) — anti-join
         // rewrite preserving the bucket layout; the request id set is
         // bounded and broadcasts
         val delIds = broadcast(
           base.filter(col("doc_id") % 10 === 5).select(col("doc_id")))
-        spark.table(bandsT).join(delIds, Seq("doc_id"), "left_anti")
-          .write.mode("overwrite").bucketBy(8, "bandkey").sortBy("bandkey")
-          .option("path", s"$wh/bands_v2").saveAsTable(bandsT2)
+        Stores.create(spark.table(bandsT).join(delIds, Seq("doc_id"), "left_anti"),
+          bandsT2, ws.path("bands_v2"), Some("bandkey"))
       }
       val dBandsRaw = graft.Caches.persisted(
         bandKeyed(minhashSigs(shingleRelOf(docs.filter(col("doc_id") % 10 === 0)))))

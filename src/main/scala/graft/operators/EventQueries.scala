@@ -762,7 +762,7 @@ object EventQueries {
     * per-user state, and (b) still produce exactly what a full
     * recompute would — a session straddling midnight must not split.
     *
-    * The store (built once per ingest, [[graft.operators.StoreOnce]],
+    * The store (built once per ingest, [[StoreOnce]],
     * bucketed on user_id — the q_bucketed_join sink) holds ONE row per
     * user active before the cut (2024-01-16): the user's last event
     * time, last session id, and that open session's running (count,
@@ -789,16 +789,14 @@ object EventQueries {
   private val sessionStore = Q(
     "q_session_store",
     (spark, dir) => {
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("sessstore", key)
-      val sT = s"g_session_store_$key"
+      val ws = Stores(spark, dir, "sessstore")
+      val sT = ws.table("session_store")
       val cut = lit("2024-01-16 00:00:00").cast("timestamp")
       val evs = Tables(spark, dir, "events")
         .select(col("user_id"), col("event_id"), col("ts"),
           unix_micros(col("ts")).as("us"),
           floor(col("value") * 100 + 0.5).cast("long").as("vc"))
-      StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
+      StoreOnce(ws.dir) {
         val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
         val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val perSess = evs.filter(col("ts") < cut)
@@ -810,11 +808,11 @@ object EventQueries {
           .agg(count(lit(1)).cast("long").as("n"), sum(col("vc")).cast("long").as("c"),
             max(col("us")).as("mx"))
         val wLast = Window.partitionBy(col("user_id")).orderBy(col("sid").desc)
-        perSess.withColumn("rn", row_number().over(wLast)).filter(col("rn") === 1)
-          .select(col("user_id"), col("mx").as("last_us"), col("sid").as("last_sid"),
-            col("n").as("last_n"), col("c").as("last_c"))
-          .write.mode("overwrite").bucketBy(8, "user_id").sortBy("user_id")
-          .option("path", s"$wh/state").saveAsTable(sT)
+        Stores.create(perSess.withColumn("rn", row_number().over(wLast))
+            .filter(col("rn") === 1)
+            .select(col("user_id"), col("mx").as("last_us"), col("sid").as("last_sid"),
+              col("n").as("last_n"), col("c").as("last_c")),
+          sT, ws.path("state"), Some("user_id"))
       }
       val store = spark.table(sT)
       val today = evs.filter(col("ts") >= cut)
@@ -867,8 +865,8 @@ object EventQueries {
     * and its TTL-evicted rewrite. */
   private[graft] def expireStoreTables(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
-    val key = graft.operators.StoreToken(spark, dir)
-    (s"g_sess_ttl_full_$key", s"g_sess_ttl_live_$key")
+    val ws = Stores(spark, dir, "sessttl")
+    (ws.table("sess_ttl_full"), ws.table("sess_ttl_live"))
   }
 
   /** TTL EXPIRY of the open-session store — the retention verb of the
@@ -890,7 +888,7 @@ object EventQueries {
     * The store here extends q_session_store's row with the open
     * session's start_us (streaming session state holds its window
     * start); eviction = filter(last_us ≥ cut − TTL) rewritten under the
-    * SAME bucketBy(8, user_id) layout (plan-pinned bucketed read).
+    * SAME 8-bucket user_id layout (plan-pinned bucketed read).
     * from_store marks sessions stitched from retained state — visible
     * eviction semantics (property-tested on a planted corpus with a
     * retained stitcher, an evicted returner, and an evicted absentee).
@@ -903,8 +901,7 @@ object EventQueries {
   private val sessionExpire = Q(
     "q_session_expire",
     (spark, dir) => {
-      val key = graft.operators.StoreToken(spark, dir)
-      val wh = StoreToken.workspace("sessttl", key)
+      val ws = Stores(spark, dir, "sessttl")
       val (fullT, liveT) = expireStoreTables(spark, dir)
       val cut = lit("2024-01-16 00:00:00").cast("timestamp")
       val cutUs = 1705363200000000L // 2024-01-16 00:00:00 UTC in µs
@@ -913,8 +910,7 @@ object EventQueries {
         .select(col("user_id"), col("event_id"), col("ts"),
           unix_micros(col("ts")).as("us"),
           floor(col("value") * 100 + 0.5).cast("long").as("vc"))
-      graft.operators.StoreOnce(wh) {
-        graft.operators.BucketedWorkspace.cleanupOnExit(wh)
+      StoreOnce(ws.dir) {
         val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
         val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val perSess = evs.filter(col("ts") < cut)
@@ -926,16 +922,15 @@ object EventQueries {
           .agg(count(lit(1)).cast("long").as("n"), sum(col("vc")).cast("long").as("c"),
             max(col("us")).as("mx"), min(col("us")).as("mn"))
         val wLast = Window.partitionBy(col("user_id")).orderBy(col("sid").desc)
-        perSess.withColumn("rn", row_number().over(wLast)).filter(col("rn") === 1)
-          .select(col("user_id"), col("mx").as("last_us"), col("mn").as("start_us"),
-            col("n").as("last_n"), col("c").as("last_c"))
-          .write.mode("overwrite").bucketBy(8, "user_id").sortBy("user_id")
-          .option("path", s"$wh/full").saveAsTable(fullT)
+        Stores.create(perSess.withColumn("rn", row_number().over(wLast))
+            .filter(col("rn") === 1)
+            .select(col("user_id"), col("mx").as("last_us"), col("mn").as("start_us"),
+              col("n").as("last_n"), col("c").as("last_c")),
+          fullT, ws.path("full"), Some("user_id"))
         // the retention pass: evict state idle past the horizon,
         // preserving the bucket layout for the stitch join
-        spark.table(fullT).filter(col("last_us") >= cutUs - ttlUs)
-          .write.mode("overwrite").bucketBy(8, "user_id").sortBy("user_id")
-          .option("path", s"$wh/live").saveAsTable(liveT)
+        Stores.create(spark.table(fullT).filter(col("last_us") >= cutUs - ttlUs),
+          liveT, ws.path("live"), Some("user_id"))
       }
       val store = spark.table(liveT)
       val today = evs.filter(col("ts") >= cut)

@@ -1016,10 +1016,9 @@ object GraphQueries {
   private val triangleStore = Q(
     "q_triangle_store",
     (spark, dir) => {
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("tristore", key)
-      val adjT = s"g_tri_adj_$key"
-      val cenT = s"g_tri_census_$key"
+      val ws = Stores(spark, dir, "tristore")
+      val adjT = ws.table("tri_adj")
+      val cenT = ws.table("tri_census")
       // no (o, p) pre-distinct — see q_triangle_count (r17): every use
       // goes through pairsOf, whose pair-level DISTINCT absorbs the
       // fixture's rare (o, p) duplicate
@@ -1029,8 +1028,7 @@ object GraphQueries {
         rel.join(rel.withColumnRenamed("p", "q"), "o")
           .filter(col("p") < col("q"))
           .select(col("p").as("u"), col("q").as("v")).distinct()
-      StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
+      StoreOnce(ws.dir) {
         val bp = Caches.persisted(pairsOf(op.filter(col("o") % 10 =!= 0)))
         // the store is the SORTED-ADJACENCY form (node → nbrs array),
         // not doubled edge rows: the incremental channels then run as
@@ -1039,14 +1037,13 @@ object GraphQueries {
         // intersects sorted adjacencies (measured: the row-form
         // channels cost ~2× the oriented census; the array form is ~6×
         // cheaper than it)
-        bp.select(col("u").as("node"), col("v").as("nbr"))
-          .unionAll(bp.select(col("v").as("node"), col("u").as("nbr")))
-          .groupBy(col("node"))
-          .agg(sort_array(collect_list(col("nbr"))).as("nbrs"))
-          .write.mode("overwrite").bucketBy(8, "node").sortBy("node")
-          .option("path", s"$wh/adj").saveAsTable(adjT)
-        triangleCensus(bp).select(col("n_triangles"))
-          .write.mode("overwrite").option("path", s"$wh/census").saveAsTable(cenT)
+        Stores.create(bp.select(col("u").as("node"), col("v").as("nbr"))
+            .unionAll(bp.select(col("v").as("node"), col("u").as("nbr")))
+            .groupBy(col("node"))
+            .agg(sort_array(collect_list(col("nbr"))).as("nbrs")),
+          adjT, ws.path("adj"), Some("node"))
+        Stores.create(triangleCensus(bp).select(col("n_triangles")),
+          cenT, ws.path("census"), None)
       }
       val adj = spark.table(adjT)
       val baseTri = spark.table(cenT)

@@ -410,30 +410,21 @@ object IvfQueries {
     * turned from prose into a pinned plan.
     *
     * Scale posture: index build is one broadcast-centroid assignment
-    * pass (once per ingest, [[graft.operators.StoreOnce]]); each probe
+    * pass (once per ingest, [[StoreOnce]]); each probe
     * reads nprobe partitions + a broadcast 1-row probe vector; the
     * top-10 is a TakeOrdered head.
     */
   private val ivfStore = Q(
     "q_ivf_store",
     (spark, dir) => {
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("ivfstore", key)
-      val sT = s"g_ivf_store_$key"
+      val ws = Stores(spark, dir, "ivfstore")
+      val sT = ws.table("ivf_store")
       val e = Tables(spark, dir, "embeddings")
       val cents = broadcast(e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("cid"), col("embedding").as("cemb")))
-      StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
-        val byVec = Window.partitionBy(col("vec_id"))
-          .orderBy(col("ccos").desc, col("cid"))
-        e.filter(col("vec_id") % 10 =!= 0).crossJoin(cents)
-          .select(col("vec_id"), col("embedding"), col("cid"),
-            VectorOps.cosine(col("embedding"), col("cemb")).as("ccos"))
-          .withColumn("rn", row_number().over(byVec)).filter(col("rn") === 1)
-          .select(col("vec_id"), col("embedding"), col("cid").cast("int").as("cluster"))
-          .write.mode("overwrite").partitionBy("cluster")
-          .option("path", s"$wh/index").saveAsTable(sT)
+      StoreOnce(ws.dir) {
+        Stores.create(ivfAssigned(e.filter(col("vec_id") % 10 =!= 0), cents),
+          sT, ws.path("index"), None, "cluster")
       }
       // driver-side router: nprobe = 2 nearest centroids of the probe —
       // bounded model state (2 ints), the k-means-centroid precedent
@@ -514,8 +505,15 @@ object IvfQueries {
       .select(col("vec_id"), col("embedding"), col("cid").cast("int").as("cluster"))
   }
 
+  /** Day 0 of a grown IVF store: `assigned` lands as vintage=base of a
+    * (vintage, cluster)-partitioned table. */
+  private def createIvfBase(assigned: org.apache.spark.sql.DataFrame, t: String,
+      path: String): Unit =
+    Stores.create(assigned.withColumn("vintage", lit("base")), t, path, None,
+      Stores.Vintage, "cluster")
+
   private[graft] def ivfStoreTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = s"g_ivf_store2_${StoreToken(spark, dir)}"
+      dir: String): String = Stores(spark, dir, "ivfstore2").table("ivf_store2")
 
   /** The day-2 index append, re-runnable as a STATIC-PREFIX partition
     * overwrite: `PARTITION (vintage='delta1', cluster)` in static mode
@@ -545,19 +543,10 @@ object IvfQueries {
   private def ivfWriteVintage(spark: org.apache.spark.sql.SparkSession,
       dir: String, t: String, m: Int, vintage: String): Unit = {
     val e = Tables(spark, dir, "embeddings")
-    val v = s"src_${vintage}_$t"
-    ivfAssigned(e.filter(col("vec_id") % 10 === m), ivfCentsOf(spark, dir))
-      .select(col("vec_id"), col("embedding"), col("cluster"))
-      .createOrReplaceTempView(v)
-    // under ConfLock: static mode is the session default, but another
-    // store build may hold the conf at dynamic mid-write
-    ConfLock.withConf(spark,
-        "spark.sql.sources.partitionOverwriteMode", "static") {
-      spark.sql(s"INSERT OVERWRITE TABLE $t PARTITION (vintage='$vintage', cluster) " +
-        s"SELECT vec_id, embedding, cluster FROM $v")
-    }
-    spark.catalog.dropTempView(v)
-    ()
+    Stores.overwriteVintage(
+      ivfAssigned(e.filter(col("vec_id") % 10 === m), ivfCentsOf(spark, dir))
+        .select(col("vec_id"), col("embedding"), col("cluster")),
+      t, vintage, "cluster")
   }
 
   /** Builds the grown (base + delta1) (vintage, cluster)-partitioned IVF
@@ -566,16 +555,12 @@ object IvfQueries {
     * recipe for q_ivf_delete's delete-private copy. */
   private[graft] def ensureIvfStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val key = StoreToken(spark, dir)
-    val wh = StoreToken.workspace("ivfstore2", key)
+    val ws = Stores(spark, dir, "ivfstore2")
     val sT = ivfStoreTable(spark, dir)
-    StoreOnce(wh) {
-      BucketedWorkspace.cleanupOnExit(wh)
-      ivfAssigned(Tables(spark, dir, "embeddings")
-          .filter(col("vec_id") % 10 >= 2), ivfCentsOf(spark, dir))
-        .withColumn("vintage", lit("base"))
-        .write.mode("overwrite").partitionBy("vintage", "cluster")
-        .option("path", s"$wh/index").saveAsTable(sT)
+    StoreOnce(ws.dir) {
+      createIvfBase(ivfAssigned(Tables(spark, dir, "embeddings")
+          .filter(col("vec_id") % 10 >= 2), ivfCentsOf(spark, dir)),
+        sT, ws.path("index"))
       // day-2 maintenance: yesterday's vectors land inside their
       // (vintage, cluster) partitions as a static-prefix vintage
       // overwrite — idempotent under re-run, ingest-time centroids
@@ -834,8 +819,8 @@ object IvfQueries {
     * layout pins and the untouched-partition file assertions. */
   private[graft] def ivfDeleteStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
-    val key = StoreToken(spark, dir)
-    (s"g_ivfdel_$key", StoreToken.workspace("ivfdel", key))
+    val ws = Stores(spark, dir, "ivfdel")
+    (ws.table("ivfdel"), ws.dir)
   }
 
   /** PARTITION-TARGETED DELETION from the persisted IVF index (VERDICT
@@ -895,12 +880,9 @@ object IvfQueries {
             col("cos"), col("src"), col("purge_set"))
       }
       StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
         // the delete-private grown store (same recipe as ensureIvfStore)
-        ivfAssigned(e.filter(col("vec_id") % 10 >= 2), cents)
-          .withColumn("vintage", lit("base"))
-          .write.mode("overwrite").partitionBy("vintage", "cluster")
-          .option("path", s"$wh/index").saveAsTable(dT)
+        createIvfBase(ivfAssigned(e.filter(col("vec_id") % 10 >= 2), cents),
+          dT, s"$wh/index")
         ivfWriteDelta1(spark, dir, dT)
         // the pre-deletion serving state, materialized (the store is
         // about to mutate in place)
@@ -908,48 +890,11 @@ object IvfQueries {
           .write.mode("overwrite").parquet(s"$wh/pre")
         // manifest of the partitions the purge must NOT touch (the
         // purge set is all ≡5 mod 10 — base vintage only)
-        def manifest(root: java.io.File): Seq[String] = {
-          def walk(f: java.io.File): Seq[java.io.File] = {
-            val cs = f.listFiles()
-            if (cs == null) Seq(f)
-            else cs.toSeq.flatMap(walk)
-          }
-          walk(root).filter(_.isFile)
-            .map(f => s"${f.getAbsolutePath}:${f.length}:${f.lastModified}")
-            .sorted
-        }
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$wh/delta1_manifest.txt"),
-          manifest(new java.io.File(s"$wh/index/vintage=delta1"))
-            .mkString("\n").getBytes("UTF-8"))
+        Stores.manifest(s"$wh/delta1_manifest.txt",
+          Stores.files(s"$wh/index/vintage=delta1"))
         // THE PURGE: touched partitions only
-        val store = spark.table(dT)
-        val touched = store.filter(col("vec_id") % 10 === 5)
-          .select(col("vintage"), col("cluster")).distinct().collect()
-          .map(r => (r.getString(0), r.getAs[Number](1).intValue)).toSeq
-        if (touched.nonEmpty) {
-          val cond = touched.map { case (v, c) =>
-            col("vintage") === v && col("cluster") === c }.reduce(_ || _)
-          // stage the touched partitions' survivors (never the whole
-          // store), then swap them in as a dynamic partition overwrite
-          store.filter(cond && col("vec_id") % 10 =!= 5)
-            .select(col("vec_id"), col("embedding"), col("vintage"), col("cluster"))
-            .write.mode("overwrite").parquet(s"$wh/staged")
-          val staged = spark.read.parquet(s"$wh/staged")
-            .select(col("vec_id"), col("embedding"), col("vintage"), col("cluster"))
-          val alive = staged.select(col("vintage"), col("cluster")).distinct()
-            .collect().map(r => (r.getString(0), r.getAs[Number](1).intValue)).toSet
-          // fully-purged partitions: catalog drop + storage delete
-          touched.filterNot(alive).foreach { case (v, c) =>
-            spark.sql(s"ALTER TABLE $dT DROP IF EXISTS " +
-              s"PARTITION (vintage='$v', cluster=$c)")
-            BucketedWorkspace.deleteRecursively(
-              new java.io.File(s"$wh/index/vintage=$v/cluster=$c"))
-          }
-          if (alive.nonEmpty) VintageWrite(staged, dT)
-          spark.sql(s"REFRESH TABLE $dT")
-          ()
-        }
+        Stores.purgePartitions(spark, dT, s"$wh/index", s"$wh/staged",
+          col("vec_id") % 10 === 5)
       }
       spark.read.parquet(s"$wh/pre")
         .unionAll(probeDf(dT, "post"))
@@ -992,8 +937,8 @@ object IvfQueries {
   /** q_ivf_expire's expire-private store (table, workspace). */
   private[graft] def ivfExpireStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
-    val key = StoreToken(spark, dir)
-    (s"g_ivf_exp_$key", StoreToken.workspace("ivfexp", key))
+    val ws = Stores(spark, dir, "ivfexp")
+    (ws.table("ivf_exp"), ws.dir)
   }
 
   /** The IVF retention verb, re-runnable: on the two-level (vintage,
@@ -1005,19 +950,7 @@ object IvfQueries {
   private[graft] def ivfExpireDrop(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     val (t, wh) = ivfExpireStore(spark, dir)
-    // parse anchored to the expected key (ADVICE r14): splitting on '='
-    // silently mis-parses any partition value that itself contains '='
-    val clusters = spark.sql(s"SHOW PARTITIONS $t").collect()
-      .map(_.getString(0)).filter(_.startsWith("vintage=base/cluster="))
-      .map(_.stripPrefix("vintage=base/cluster="))
-    clusters.foreach { c =>
-      spark.sql(s"ALTER TABLE $t DROP IF EXISTS " +
-        s"PARTITION (vintage='base', cluster=$c)")
-    }
-    BucketedWorkspace.deleteRecursively(
-      new java.io.File(s"$wh/index/vintage=base"))
-    spark.sql(s"REFRESH TABLE $t")
-    ()
+    Stores.expire(spark, t, s"$wh/index", "base", Some("cluster"))
   }
 
   /** TIME-BASED VINTAGE RETENTION on the IVF index — the second half of
@@ -1069,11 +1002,8 @@ object IvfQueries {
             col("cos"), col("src"))
       }
       StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
-        ivfAssigned(e.filter(col("vec_id") % 10 >= 2), cents)
-          .withColumn("vintage", lit("base"))
-          .write.mode("overwrite").partitionBy("vintage", "cluster")
-          .option("path", s"$wh/index").saveAsTable(eT)
+        createIvfBase(ivfAssigned(e.filter(col("vec_id") % 10 >= 2), cents),
+          eT, s"$wh/index")
         ivfWriteDelta1(spark, dir, eT)
         probeDf("pre").coalesce(1)
           .write.mode("overwrite").parquet(s"$wh/pre")
@@ -1121,8 +1051,8 @@ object IvfQueries {
     * table, workspace) — for the per-rung ledger and layout pins. */
   private[graft] def ivfLifecycleStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String, String) = {
-    val key = StoreToken(spark, dir)
-    (s"g_ivf_lc_$key", s"g_ivf_lcc_$key", StoreToken.workspace("ivflc", key))
+    val ws = Stores(spark, dir, "ivflc")
+    (ws.table("ivf_lc"), ws.table("ivf_lcc"), ws.dir)
   }
 
   /** The ladder's retention verb, re-runnable (drop-twice ≡ drop-once):
@@ -1132,17 +1062,7 @@ object IvfQueries {
   private[graft] def ivfLifecycleExpireDrop(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     val (lT, _, wh) = ivfLifecycleStore(spark, dir)
-    val clusters = spark.sql(s"SHOW PARTITIONS $lT").collect()
-      .map(_.getString(0)).filter(_.startsWith("vintage=delta1/cluster="))
-      .map(_.stripPrefix("vintage=delta1/cluster="))
-    clusters.foreach { c =>
-      spark.sql(s"ALTER TABLE $lT DROP IF EXISTS " +
-        s"PARTITION (vintage='delta1', cluster=$c)")
-    }
-    BucketedWorkspace.deleteRecursively(
-      new java.io.File(s"$wh/index/vintage=delta1"))
-    spark.sql(s"REFRESH TABLE $lT")
-    ()
+    Stores.expire(spark, lT, s"$wh/index", "delta1", Some("cluster"))
   }
 
   /** THE IVF DAY-N LIFECYCLE LADDER (VERDICT r14 task 1): every IVF
@@ -1195,24 +1115,11 @@ object IvfQueries {
       val e = Tables(spark, dir, "embeddings")
       val cents = ivfCentsOf(spark, dir)
       StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
-        def walk(f: java.io.File): Seq[java.io.File] = {
-          val cs = f.listFiles()
-          if (cs == null) Seq(f) else cs.toSeq.flatMap(walk)
-        }
-        def dataFiles(root: String): Seq[java.io.File] =
-          walk(new java.io.File(root)).filter(f =>
-            f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        val ledger = scala.collection.mutable.ArrayBuffer[String]()
-        def rung(name: String): Unit = {
-          spark.sql(s"REFRESH TABLE $lT")
-          ledger += s"$name:${dataFiles(s"$wh/index").size}:${spark.table(lT).count()}"
-        }
+        val ledger = new Stores.Ledger(spark)
+        def rung(name: String): Unit = ledger.rung(name, lT, s"$wh/index")
         // day 0: create
-        ivfAssigned(e.filter(col("vec_id") % 10 >= 4), cents)
-          .withColumn("vintage", lit("base"))
-          .write.mode("overwrite").partitionBy("vintage", "cluster")
-          .option("path", s"$wh/index").saveAsTable(lT)
+        createIvfBase(ivfAssigned(e.filter(col("vec_id") % 10 >= 4), cents),
+          lT, s"$wh/index")
         rung("a_create")
         // days 1, 2: idempotent static-prefix vintage appends
         ivfWriteVintage(spark, dir, lT, 1, "delta1")
@@ -1222,35 +1129,11 @@ object IvfQueries {
         // delta2 must survive BOTH the delete and the expire untouched
         // on disk (delta1 is expired later, so only delta2 is assertable
         // at ladder end)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$wh/delta2_manifest.txt"),
-          dataFiles(s"$wh/index/vintage=delta2")
-            .map(f => s"${f.getAbsolutePath}:${f.length}:${f.lastModified}")
-            .sorted.mkString("\n").getBytes("UTF-8"))
+        Stores.manifest(s"$wh/delta2_manifest.txt",
+          Stores.dataFiles(s"$wh/index/vintage=delta2"))
         // day N: partition-targeted GDPR purge (≡5 — base vintage only)
-        val store = spark.table(lT)
-        val touched = store.filter(col("vec_id") % 10 === 5)
-          .select(col("vintage"), col("cluster")).distinct().collect()
-          .map(r => (r.getString(0), r.getAs[Number](1).intValue)).toSeq
-        if (touched.nonEmpty) {
-          val cond = touched.map { case (v, c) =>
-            col("vintage") === v && col("cluster") === c }.reduce(_ || _)
-          store.filter(cond && col("vec_id") % 10 =!= 5)
-            .select(col("vec_id"), col("embedding"), col("vintage"), col("cluster"))
-            .write.mode("overwrite").parquet(s"$wh/staged")
-          val staged = spark.read.parquet(s"$wh/staged")
-            .select(col("vec_id"), col("embedding"), col("vintage"), col("cluster"))
-          val alive = staged.select(col("vintage"), col("cluster")).distinct()
-            .collect().map(r => (r.getString(0), r.getAs[Number](1).intValue)).toSet
-          touched.filterNot(alive).foreach { case (v, c) =>
-            spark.sql(s"ALTER TABLE $lT DROP IF EXISTS " +
-              s"PARTITION (vintage='$v', cluster=$c)")
-            BucketedWorkspace.deleteRecursively(
-              new java.io.File(s"$wh/index/vintage=$v/cluster=$c"))
-          }
-          if (alive.nonEmpty) VintageWrite(staged, lT)
-          spark.sql(s"REFRESH TABLE $lT")
-        }
+        Stores.purgePartitions(spark, lT, s"$wh/index", s"$wh/staged",
+          col("vec_id") % 10 === 5)
         rung("d_delete")
         // day N+1: delta1 ages out of the retention horizon
         ivfLifecycleExpireDrop(spark, dir)
@@ -1258,17 +1141,13 @@ object IvfQueries {
         // day N+2: compaction — one cluster-hashed shuffle collapses each
         // surviving cluster's vintage-file ladder to ONE file, keeping
         // cluster as the partition column (the PartitionFilter pin)
-        spark.table(lT)
-          .select(col("vec_id"), col("embedding"),
-            col("cluster").cast("int").as("cluster"))
-          .repartition(col("cluster"))
-          .write.mode("overwrite").partitionBy("cluster")
-          .option("path", s"$wh/compact").saveAsTable(cT)
-        ledger += s"f_compact:${dataFiles(s"$wh/compact").size}:${spark.table(cT).count()}"
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$wh/ledger.txt"),
-          ledger.mkString("\n").getBytes("UTF-8"))
-        ()
+        Stores.create(spark.table(lT)
+            .select(col("vec_id"), col("embedding"),
+              col("cluster").cast("int").as("cluster"))
+            .repartition(col("cluster")),
+          cT, s"$wh/compact", None, "cluster")
+        ledger.rung("f_compact", cT, s"$wh/compact")
+        ledger.write(s"$wh/ledger.txt")
       }
       val routedIds = e.filter(col("vec_id") === 0)
         .select(col("embedding").as("p")).crossJoin(cents)

@@ -258,8 +258,8 @@ object PipelineQueries {
     * and the canonical band-signature store. */
   private[graft] def corpusStoreTables(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
-    val key = StoreToken(spark, dir)
-    (s"g_corpus_h_$key", s"g_corpus_bands_$key")
+    val ws = Stores(spark, dir, "corpusinc")
+    (ws.table("corpus_h"), ws.table("corpus_bands"))
   }
 
   /** DAY-2 OF THE WHOLE CORPUS PIPELINE — the composition proof
@@ -272,15 +272,15 @@ object PipelineQueries {
     * BAND-SIGNATURE store (and within-delta, arrival-order) → the
     * admitted-docs funnel, without re-reading any base text.
     *
-    * The base state is built once at ingest ([[graft.operators.StoreOnce]]),
+    * The base state is built once at ingest ([[StoreOnce]]),
     * running the exact q_corpus_pipeline stages over the base corpus:
     * quality ≥ 0.4 → exact keep-first → minhash-LSH + connected-
     * components canonical removal; then two stores persist — the
-    * distinct content hashes of the exact survivors (bucketBy(8, h);
+    * distinct content hashes of the exact survivors (8 buckets on h;
     * exact-stage semantics match a full recompute over base ∪ delta:
     * a delta doc equal to ANY quality-kept base doc is a duplicate,
     * canonical or not) and the band signatures of the CANONICAL
-    * survivors (bucketBy(8, bandkey) — near-dup admits against what the
+    * survivors (8 buckets on bandkey — near-dup admits against what the
     * corpus actually kept). Today's near channel reuses
     * q_dedup_incremental's estimated-Jaccard discipline (16-minhash
     * agreement ≥ 8/16 in the band join; within-delta matches test
@@ -304,15 +304,13 @@ object PipelineQueries {
     * names — shared by q_corpus_incremental and q_corpus_delete. */
   private[graft] def ensureCorpusStores(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
-    val key = StoreToken(spark, dir)
-    val wh = StoreToken.workspace("corpusinc", key)
+    val ws = Stores(spark, dir, "corpusinc")
     val (hT, bT) = corpusStoreTables(spark, dir)
     val (_, _, _, score) = TextOps.qualityScore(col("text"))
     val base = Tables.spreadIfUnderSplitAtScale(
         Tables(spark, dir, "documents").select(col("doc_id"), col("text")))
       .filter(col("doc_id") % 10 =!= 0)
-    StoreOnce(wh) {
-      BucketedWorkspace.cleanupOnExit(wh)
+    StoreOnce(ws.dir) {
       val kept = base.withColumn("score", score).filter(col("score") >= 0.4)
       val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
       val exact = graft.Caches.persisted(
@@ -326,20 +324,18 @@ object PipelineQueries {
       // never across), so every consumer's anti-join is unchanged; the
       // purge becomes counter arithmetic on the request instead of a
       // full-corpus orphan re-scan. One ingest pass either way.
-      kept.select(md5(col("text")).as("h"))
-        .groupBy(col("h")).agg(count(lit(1)).as("refs"))
-        .write.mode("overwrite").bucketBy(8, "h").sortBy("h")
-        .option("path", s"$wh/hashes").saveAsTable(hT)
+      Stores.create(kept.select(md5(col("text")).as("h"))
+          .groupBy(col("h")).agg(count(lit(1)).as("refs")),
+        hT, ws.path("hashes"), Some("h"))
       val sh = exact.select(col("doc_id"),
         explode(TextOps.distinctWordNGrams(col("text"), 3)).as("sh"))
       val dropIds = GraphQueries.componentsOf(DedupQueries.minhashCandidates(sh))
         .filter(col("node") =!= col("component"))
         .select(col("node").as("doc_id"))
       val canon = exact.join(dropIds, Seq("doc_id"), "left_anti")
-      DedupQueries.bandKeyed(DedupQueries.minhashSigs(
-          DedupQueries.shingleRelOf(canon.select(col("doc_id"), col("text")))))
-        .write.mode("overwrite").bucketBy(8, "bandkey").sortBy("bandkey")
-        .option("path", s"$wh/bands").saveAsTable(bT)
+      Stores.create(DedupQueries.bandKeyed(DedupQueries.minhashSigs(
+          DedupQueries.shingleRelOf(canon.select(col("doc_id"), col("text"))))),
+        bT, ws.path("bands"), Some("bandkey"))
     }
     (hT, bT)
   }
@@ -512,8 +508,8 @@ object PipelineQueries {
     * post-phase funnel reads the ingest band store minus tombstones). */
   private[graft] def corpusDeleteTables(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
-    val key = StoreToken(spark, dir)
-    (s"g_cdel_h_$key", s"g_cdel_tomb_$key")
+    val ws = Stores(spark, dir, "cdel")
+    (ws.table("cdel_h"), ws.table("cdel_tomb"))
   }
 
   /** CORPUS-DELETE PROPAGATION (VERDICT r13 stretch) — the GDPR purge
@@ -560,11 +556,9 @@ object PipelineQueries {
     "q_corpus_delete",
     (spark, dir) => {
       val (hT, bT) = ensureCorpusStores(spark, dir)
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("cdel", key)
+      val ws = Stores(spark, dir, "cdel")
       val (hT2, tombT) = corpusDeleteTables(spark, dir)
-      StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
+      StoreOnce(ws.dir) {
         val (_, _, _, score) = TextOps.qualityScore(col("text"))
         // refcount decrement: the request's quality-kept holder counts —
         // the only text this purge ever reads or scores. A hash leaves
@@ -579,19 +573,17 @@ object PipelineQueries {
           .withColumn("score", score).filter(col("score") >= 0.4)
           .select(md5(col("text")).as("h"))
           .groupBy(col("h")).agg(count(lit(1)).as("dec"))
-        spark.table(hT).join(broadcast(dec), Seq("h"), "left")
-          .select(col("h"),
-            (col("refs") - coalesce(col("dec"), lit(0L))).as("refs"))
-          .filter(col("refs") > 0)
-          .write.mode("overwrite").bucketBy(8, "h").sortBy("h")
-          .option("path", s"$wh/hashes").saveAsTable(hT2)
+        Stores.create(spark.table(hT).join(broadcast(dec), Seq("h"), "left")
+            .select(col("h"),
+              (col("refs") - coalesce(col("dec"), lit(0L))).as("refs"))
+            .filter(col("refs") > 0),
+          hT2, ws.path("hashes"), Some("h"))
         // band purge = tombstones: O(request) bytes written, no
         // store-sized rewrite; trivially idempotent (same request ⇒
         // same set)
-        Tables(spark, dir, "documents").filter(col("doc_id") % 10 === 5)
-          .select(col("doc_id"))
-          .write.mode("overwrite")
-          .option("path", s"$wh/tomb").saveAsTable(tombT)
+        Stores.create(Tables(spark, dir, "documents").filter(col("doc_id") % 10 === 5)
+            .select(col("doc_id")),
+          tombT, ws.path("tomb"), None)
       }
       val prep = deltaPrep(spark, dir)
       // hT2 ⊆ hT ⇒ the post-phase exact set ⊇ the pre-phase's: one
@@ -723,8 +715,8 @@ object PipelineQueries {
   /** q_corpus_refcount's three store-rung catalog tables. */
   private[graft] def corpusRefcountTables(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String, String) = {
-    val key = StoreToken(spark, dir)
-    (s"g_rc_a_$key", s"g_rc_b_$key", s"g_rc_c_$key")
+    val ws = Stores(spark, dir, "rc")
+    (ws.table("rc_a"), ws.table("rc_b"), ws.table("rc_c"))
   }
 
   /** The quality-kept (doc_id, h) relation under `filter` — the Spark
@@ -747,17 +739,13 @@ object PipelineQueries {
   private[graft] def refcountPurge(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     val (aT, bT, _) = corpusRefcountTables(spark, dir)
-    val key = StoreToken(spark, dir)
-    val wh = StoreToken.workspace("rc", key)
     val dec = refcountKeptOf(spark, dir, col("doc_id") % 10 === 5)
       .groupBy(col("h")).agg(count(lit(1)).as("dec"))
-    spark.table(aT).join(broadcast(dec), Seq("h"), "left")
-      .select(col("h"),
-        (col("refs") - coalesce(col("dec"), lit(0L))).as("refs"))
-      .filter(col("refs") > 0)
-      .write.mode("overwrite").bucketBy(8, "h").sortBy("h")
-      .option("path", s"$wh/b").saveAsTable(bT)
-    ()
+    Stores.create(spark.table(aT).join(broadcast(dec), Seq("h"), "left")
+        .select(col("h"),
+          (col("refs") - coalesce(col("dec"), lit(0L))).as("refs"))
+        .filter(col("refs") > 0),
+      bT, Stores(spark, dir, "rc").path("b"), Some("h"))
   }
 
   /** The DuckDB quality-kept CTE pair (tokenized docs + kept (doc_id, h)),
@@ -821,28 +809,24 @@ object PipelineQueries {
     "q_corpus_refcount",
     (spark, dir) => {
       val (aT, bT, cT) = corpusRefcountTables(spark, dir)
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("rc", key)
+      val ws = Stores(spark, dir, "rc")
       def keptOf(filter: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
         refcountKeptOf(spark, dir, filter)
-      StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
+      StoreOnce(ws.dir) {
         // ingest: the one-time corpus fold to (h, holders)
-        keptOf(col("doc_id") % 10 =!= 0)
-          .groupBy(col("h")).agg(count(lit(1)).as("refs"))
-          .write.mode("overwrite").bucketBy(8, "h").sortBy("h")
-          .option("path", s"$wh/a").saveAsTable(aT)
+        Stores.create(keptOf(col("doc_id") % 10 =!= 0)
+            .groupBy(col("h")).agg(count(lit(1)).as("refs")),
+          aT, ws.path("a"), Some("h"))
         // purge: request-bounded decrement; a hash leaves at zero
         refcountPurge(spark, dir)
         // append: delta-bounded increment; new hashes enter at their count
         val inc = keptOf(col("doc_id") % 10 === 0)
           .groupBy(col("h")).agg(count(lit(1)).as("inc"))
-        spark.table(bT).join(inc, Seq("h"), "full_outer")
-          .select(col("h"),
-            (coalesce(col("refs"), lit(0L)) + coalesce(col("inc"), lit(0L)))
-              .as("refs"))
-          .write.mode("overwrite").bucketBy(8, "h").sortBy("h")
-          .option("path", s"$wh/c").saveAsTable(cT)
+        Stores.create(spark.table(bT).join(inc, Seq("h"), "full_outer")
+            .select(col("h"),
+              (coalesce(col("refs"), lit(0L)) + coalesce(col("inc"), lit(0L)))
+                .as("refs")),
+          cT, ws.path("c"), Some("h"))
       }
       val dkept = graft.Caches.persisted(keptOf(col("doc_id") % 10 === 0))
       def phaseRow(phase: String, t: String,

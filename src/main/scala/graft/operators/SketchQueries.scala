@@ -1226,7 +1226,7 @@ object SketchQueries {
       .select(col("j"), col("m"), lit(vintage).as("vintage"))
 
   private[graft] def hllStoreTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = s"g_hll_store_${StoreToken(spark, dir)}"
+      dir: String): String = Stores(spark, dir, "hllstore").table("hll_store")
 
   /** The day-2 register append, re-runnable: a [[VintageWrite]] dynamic
     * overwrite of vintage=delta1 (append-twice ≡ append-once).
@@ -1241,16 +1241,13 @@ object SketchQueries {
   private val hllStore = Q(
     "q_hll_store",
     (spark, dir) => {
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("hllstore", key)
+      val ws = Stores(spark, dir, "hllstore")
       val regT = hllStoreTable(spark, dir)
       val o = Tables(spark, dir, "orders")
       def regsOf(rel: DataFrame, vintage: String): DataFrame = hllRegsOf(rel, vintage)
-      StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
-        regsOf(o.filter(col("o_orderkey") % 10 >= 2), "base")
-          .write.mode("overwrite").partitionBy("vintage")
-          .option("path", s"$wh/regs").saveAsTable(regT)
+      StoreOnce(ws.dir) {
+        Stores.create(regsOf(o.filter(col("o_orderkey") % 10 >= 2), "base"),
+          regT, ws.path("regs"), None, Stores.Vintage)
         // day-2 maintenance: yesterday's registers merge in as a
         // dynamic vintage-partition overwrite — idempotent under re-run
         hllStoreAppendDelta1(spark, dir)
@@ -1384,7 +1381,7 @@ object SketchQueries {
       .select(col("d"), col("p"), col("c"), lit(vintage).as("vintage"))
 
   private[graft] def cmsStoreTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = s"g_cms_store_${StoreToken(spark, dir)}"
+      dir: String): String = Stores(spark, dir, "cmsstore").table("cms_store")
 
   /** The day-2 counter append, re-runnable: a [[VintageWrite]] dynamic
     * overwrite of vintage=delta1 — the store whose double-append
@@ -1400,17 +1397,14 @@ object SketchQueries {
   private val cmsStore = Q(
     "q_cms_store",
     (spark, dir) => {
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("cmsstore", key)
+      val ws = Stores(spark, dir, "cmsstore")
       val cT = cmsStoreTable(spark, dir)
       val words = graft.Caches.persisted(cmsWordsOf(spark, dir))
       def counters(rel: DataFrame, vintage: String): DataFrame =
         cmsCountersOf(rel, vintage)
-      StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
-        counters(words.filter(col("g") >= 2), "base")
-          .write.mode("overwrite").partitionBy("vintage")
-          .option("path", s"$wh/counters").saveAsTable(cT)
+      StoreOnce(ws.dir) {
+        Stores.create(counters(words.filter(col("g") >= 2), "base"),
+          cT, ws.path("counters"), None, Stores.Vintage)
         // day-2 maintenance: yesterday's counters merge in as a dynamic
         // vintage-partition overwrite — idempotent under re-run (a bare
         // append would silently double the SUM-merged counts)
@@ -1515,7 +1509,7 @@ object SketchQueries {
   }
 
   private[graft] def bloomStoreTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = s"g_bloom_store_${StoreToken(spark, dir)}"
+      dir: String): String = Stores(spark, dir, "bloomstore").table("bloom_store")
 
   /** The day-2 bit-set append, re-runnable: a [[VintageWrite]] dynamic
     * overwrite of vintage=delta1 (append-twice ≡ append-once).
@@ -1530,16 +1524,13 @@ object SketchQueries {
   private val bloomStore = Q(
     "q_bloom_store",
     (spark, dir) => {
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("bloomstore", key)
+      val ws = Stores(spark, dir, "bloomstore")
       val bT = bloomStoreTable(spark, dir)
       val positioned = graft.Caches.persisted(bloomPositionedOf(spark, dir))
-      StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
-        positioned.filter(col("doc_id") % 10 >= 2)
-          .select(col("bit"), lit("base").as("vintage")).distinct()
-          .write.mode("overwrite").partitionBy("vintage")
-          .option("path", s"$wh/bits").saveAsTable(bT)
+      StoreOnce(ws.dir) {
+        Stores.create(positioned.filter(col("doc_id") % 10 >= 2)
+            .select(col("bit"), lit("base").as("vintage")).distinct(),
+          bT, ws.path("bits"), None, Stores.Vintage)
         // day-2 maintenance: yesterday's bit set unions in as a dynamic
         // vintage-partition overwrite — idempotent under re-run
         bloomStoreAppendDelta1(spark, dir)
@@ -1656,7 +1647,7 @@ object SketchQueries {
       .select(col("b"), col("c"), lit(vintage).as("vintage"))
 
   private[graft] def quantileStoreTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = s"g_quantile_store_${StoreToken(spark, dir)}"
+      dir: String): String = Stores(spark, dir, "qstore").table("quantile_store")
 
   /** The day-2 histogram append, re-runnable: a [[VintageWrite]] dynamic
     * overwrite of vintage=delta1 — like the CMS store, a SUM-merged
@@ -1674,18 +1665,15 @@ object SketchQueries {
   private val quantileStore = Q(
     "q_quantile_store",
     (spark, dir) => {
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("qstore", key)
+      val ws = Stores(spark, dir, "qstore")
       val hT = quantileStoreTable(spark, dir)
       val o = quantileCentsOf(spark, dir)
       val spanD = quantileSpanOf(o)
       def histOf(rel: DataFrame, vintage: String): DataFrame =
         quantileHistOf(rel, spanD, vintage)
-      StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
-        histOf(o.filter(col("o_orderkey") % 10 >= 2), "base")
-          .write.mode("overwrite").partitionBy("vintage")
-          .option("path", s"$wh/hist").saveAsTable(hT)
+      StoreOnce(ws.dir) {
+        Stores.create(histOf(o.filter(col("o_orderkey") % 10 >= 2), "base"),
+          hT, ws.path("hist"), None, Stores.Vintage)
         // day-2 maintenance: yesterday's histogram merges in as a
         // dynamic vintage-partition overwrite — idempotent under re-run
         quantileStoreAppendDelta1(spark, dir)
@@ -1754,13 +1742,12 @@ object SketchQueries {
     * q_*_store instances other queries read are never mutated. */
   private[graft] def expireStoreTables(spark: org.apache.spark.sql.SparkSession,
       dir: String): Map[String, (String, String)] = {
-    val key = StoreToken(spark, dir)
-    val wh = StoreToken.workspace("expstore", key)
+    val ws = Stores(spark, dir, "expstore")
     Map(
-      "hll_distinct" -> (s"g_exp_hll_$key", s"$wh/hll"),
-      "cms_top1" -> (s"g_exp_cms_$key", s"$wh/cms"),
-      "bloom_bits" -> (s"g_exp_bloom_$key", s"$wh/bloom"),
-      "quantile_p50c" -> (s"g_exp_quant_$key", s"$wh/quant"))
+      "hll_distinct" -> (ws.table("exp_hll"), ws.path("hll")),
+      "cms_top1" -> (ws.table("exp_cms"), ws.path("cms")),
+      "bloom_bits" -> (ws.table("exp_bloom"), ws.path("bloom")),
+      "quantile_p50c" -> (ws.table("exp_quant"), ws.path("quant")))
   }
 
   /** The RETENTION verb, re-runnable (drop-twice ≡ drop-once): evict
@@ -1771,15 +1758,12 @@ object SketchQueries {
     * then the storage-lifecycle delete of the evicted directory
     * (external-table DROP PARTITION retains files by design; the
     * explicit delete is the bit that actually reclaims 100 TB-scale
-    * storage). Both steps are idempotent: IF EXISTS on the catalog
-    * side, delete-of-absent-dir a no-op on the storage side.
+    * storage). Both steps are idempotent ([[Stores.expire]]).
     */
   private[graft] def sketchExpireDrop(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
     expireStoreTables(spark, dir).values.foreach { case (t, path) =>
-      spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION (vintage='base')")
-      BucketedWorkspace.deleteRecursively(new java.io.File(s"$path/vintage=base"))
-      spark.sql(s"REFRESH TABLE $t")
+      Stores.expire(spark, t, path, "base")
     }
 
   /** TIME-BASED VINTAGE RETENTION on the mergeable-sketch stores
@@ -1818,18 +1802,14 @@ object SketchQueries {
   private val sketchExpire = Q(
     "q_sketch_expire",
     (spark, dir) => {
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("expstore", key)
       val tabs = expireStoreTables(spark, dir)
       val o = Tables(spark, dir, "orders")
       val oc = quantileCentsOf(spark, dir)
       val spanD = quantileSpanOf(oc)
-      StoreOnce(wh) {
-        BucketedWorkspace.cleanupOnExit(wh)
+      StoreOnce(Stores(spark, dir, "expstore").dir) {
         def write(df: DataFrame, family: String): Unit = {
           val (t, path) = tabs(family)
-          df.write.mode("overwrite").partitionBy("vintage")
-            .option("path", path).saveAsTable(t)
+          Stores.create(df, t, path, None, Stores.Vintage)
         }
         write(hllRegsOf(o.filter(col("o_orderkey") % 10 >= 2), "base")
           .unionAll(hllRegsOf(o.filter(col("o_orderkey") % 10 === 1), "delta1")),

@@ -716,9 +716,8 @@ object VectorQueries {
   private val annIncremental = Q(
     "q_ann_incremental",
     (spark, dir) => {
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("annstore", key)
-      val storeT = s"g_ann_store_$key"
+      val ws = Stores(spark, dir, "annstore")
+      val storeT = ws.table("ann_store")
       val e = Tables(spark, dir, "embeddings")
       val base = e.filter(col("vec_id") % 10 =!= 0)
       // bounded driver scalars (the q_knn_join precedent): base count
@@ -727,11 +726,9 @@ object VectorQueries {
       val signs = planeSigns(planesFor(nBase), embeddingDim(spark, dir))
       val bucket = concat(
         signs.map(s => when(signedDot(col("embedding"), s) > 0, lit("1")).otherwise(lit("0"))): _*)
-      StoreOnce(wh) {
-        graft.operators.BucketedWorkspace.cleanupOnExit(wh)
-        base.select(col("vec_id"), bucket.as("bk"), col("embedding"))
-          .write.mode("overwrite").bucketBy(8, "bk").sortBy("bk")
-          .option("path", s"$wh/index").saveAsTable(storeT)
+      StoreOnce(ws.dir) {
+        Stores.create(base.select(col("vec_id"), bucket.as("bk"), col("embedding")),
+          storeT, ws.path("index"), Some("bk"))
       }
       val store = spark.table(storeT)
         .select(col("vec_id").as("nb"), col("bk"), col("embedding").as("se"))
@@ -815,7 +812,7 @@ object VectorQueries {
     * of q_store_append): q_ann_incremental proved probes ride a
     * persisted LSH index; this query proves the index GROWS correctly.
     * The base corpus's bucket assignments (vec_id ≡ 2..9 mod 10)
-    * persist once (bucketBy(8, bk), the same sink); yesterday's new
+    * persist once (8 buckets on bk, the same sink); yesterday's new
     * vectors (≡ 1) APPEND into the same bucketed table via insertInto —
     * one new file per bucket, never a rewrite, and the plane set is the
     * one FIXED AT INGEST (data-driven from the base population;
@@ -835,7 +832,10 @@ object VectorQueries {
     * index.
     */
   private[graft] def annStoreTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = s"g_ann_store2_${StoreToken(spark, dir)}"
+      dir: String): String = annStore(spark, dir).table("ann_store2")
+
+  private def annStore(spark: org.apache.spark.sql.SparkSession, dir: String): Store =
+    Stores(spark, dir, "annstore2")
 
   /** The INGEST-time bucket expression of the q_ann_store_append index:
     * plane depth from the BASE population (re-deriving planes per append
@@ -876,18 +876,14 @@ object VectorQueries {
     * compacts it). */
   private[graft] def ensureAnnStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val key = StoreToken(spark, dir)
-    val wh = StoreToken.workspace("annstore2", key)
+    val ws = annStore(spark, dir)
     val storeT = annStoreTable(spark, dir)
-    StoreOnce(wh) {
-      graft.operators.BucketedWorkspace.cleanupOnExit(wh)
+    StoreOnce(ws.dir) {
       val bucket = annIngestBucket(spark, dir)
-      Tables(spark, dir, "embeddings").filter(col("vec_id") % 10 >= 2)
-        .select(col("vec_id"), bucket.as("bk"), col("embedding"))
-        .withColumn("vintage", lit("base"))
-        .write.mode("overwrite").partitionBy("vintage")
-        .bucketBy(8, "bk").sortBy("bk")
-        .option("path", s"$wh/index").saveAsTable(storeT)
+      Stores.create(Tables(spark, dir, "embeddings").filter(col("vec_id") % 10 >= 2)
+          .select(col("vec_id"), bucket.as("bk"), col("embedding"))
+          .withColumn("vintage", lit("base")),
+        storeT, ws.path("index"), Some("bk"), Stores.Vintage)
       // day-2 maintenance: yesterday's vectors land per bucket inside
       // their vintage partition (ingest-time planes) as a dynamic
       // overwrite — idempotent under re-run
@@ -954,14 +950,17 @@ object VectorQueries {
             FROM ranked WHERE rn <= 3 ORDER BY probe_id, rn"""))
 
   private[graft] def compactStoreTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = s"g_ann_compact_${StoreToken(spark, dir)}"
+      dir: String): String = compactStore(spark, dir).table("ann_compact")
+
+  private def compactStore(spark: org.apache.spark.sql.SparkSession, dir: String): Store =
+    Stores(spark, dir, "anncompact")
 
   /** Filesystem paths of the grown and compacted index workspaces — for
     * the file-count assertions in the compaction spec. */
   private[graft] def annStorePath(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = StoreToken.workspace("annstore2", StoreToken(spark, dir)) + "/index"
+      dir: String): String = annStore(spark, dir).path("index")
   private[graft] def compactStorePath(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = StoreToken.workspace("anncompact", StoreToken(spark, dir)) + "/index"
+      dir: String): String = compactStore(spark, dir).path("index")
 
   /** COMPACTION of the persisted ANN store — the maintenance verb that
     * completes the store lifecycle (create / append / delete /
@@ -972,7 +971,7 @@ object VectorQueries {
     * vintage partitions) into ONE file per bucket — the forced bucketed
     * read is already one task per bucket, so the rewrite is
     * SHUFFLE-FREE end to end — while PRESERVING the
-    * bucketBy(8, bk) layout: the post-compaction scan is still bucketed
+    * 8-bucket bk layout: the post-compaction scan is still bucketed
     * and undemoted (plan-pinned), and the query output proves identity
     * IN the output — every probe's top-3 from the pre-compaction store
     * (phase=pre) reappears identically from the compacted store
@@ -987,25 +986,11 @@ object VectorQueries {
     "q_store_compact",
     (spark, dir) => {
       val srcT = ensureAnnStore(spark, dir)
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("anncompact", key)
+      val ws = compactStore(spark, dir)
       val cT = compactStoreTable(spark, dir)
-      StoreOnce(wh) {
-        graft.operators.BucketedWorkspace.cleanupOnExit(wh)
-        // SHUFFLE-FREE compaction: force the bucketed read (the planner
-        // otherwise auto-disables it for a plain scan and packs the
-        // small files into arbitrary tasks, so a task would hold — and
-        // write — several buckets); the forced bucketed scan is exactly
-        // one task per bucket, so the bucketed write emits one file per
-        // bucket with no exchange anywhere
-        // ConfLock (ADVICE r13): the toggle+write+restore is atomic vs
-        // other conf-mutating store writes sharing this SparkSession
-        ConfLock.withConf(spark,
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false") {
-          spark.table(srcT).select(col("vec_id"), col("bk"), col("embedding"))
-            .write.mode("overwrite").bucketBy(8, "bk").sortBy("bk")
-            .option("path", s"$wh/index").saveAsTable(cT)
-        }
+      StoreOnce(ws.dir) {
+        Stores.compact(spark.table(srcT).select(col("vec_id"), col("bk"), col("embedding")),
+          cT, ws.path("index"), "bk")
       }
       val e = Tables(spark, dir, "embeddings")
       val bucket = annIngestBucket(spark, dir)
@@ -1071,9 +1056,12 @@ object VectorQueries {
   /** q_ann_delete's post-deletion catalog table and path (for the
     * layout pins and file assertions). */
   private[graft] def annDeleteTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = s"g_ann_del_${StoreToken(spark, dir)}"
+      dir: String): String = deleteStore(spark, dir).table("ann_del")
   private[graft] def annDeletePath(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = StoreToken.workspace("anndel", StoreToken(spark, dir)) + "/index"
+      dir: String): String = deleteStore(spark, dir).path("index")
+
+  private def deleteStore(spark: org.apache.spark.sql.SparkSession, dir: String): Store =
+    Stores(spark, dir, "anndel")
 
   /** DELETION from the persisted ANN store (VERDICT r13 task 3) —
     * q_store_delete's GDPR verb extended to the vector indexes: purging
@@ -1081,7 +1069,7 @@ object VectorQueries {
     * as someone's nearest neighbor. The grown (base + delta1) LSH store
     * takes a bounded deletion request (vec_id ≡ 5 mod 10): the id set
     * BROADCASTS onto a store anti-join and the survivors rewrite under
-    * the SAME bucketBy(8, bk) layout — the post-delete probe still
+    * the SAME 8-bucket bk layout — the post-delete probe still
     * rides the stored buckets with zero store-side exchange
     * (plan-pinned). Today's probe batch reads BOTH stores; the phase
     * column makes the deletion visible in the output: a `pre` top-3
@@ -1102,18 +1090,15 @@ object VectorQueries {
     "q_ann_delete",
     (spark, dir) => {
       val srcT = ensureAnnStore(spark, dir)
-      val key = StoreToken(spark, dir)
-      val wh = StoreToken.workspace("anndel", key)
+      val ws = deleteStore(spark, dir)
       val dT = annDeleteTable(spark, dir)
-      StoreOnce(wh) {
-        graft.operators.BucketedWorkspace.cleanupOnExit(wh)
+      StoreOnce(ws.dir) {
         val delIds = broadcast(
           Tables(spark, dir, "embeddings")
             .filter(col("vec_id") % 10 === 5).select(col("vec_id")))
-        spark.table(srcT).join(delIds, Seq("vec_id"), "left_anti")
-          .select(col("vec_id"), col("bk"), col("embedding"))
-          .write.mode("overwrite").bucketBy(8, "bk").sortBy("bk")
-          .option("path", s"$wh/index").saveAsTable(dT)
+        Stores.create(spark.table(srcT).join(delIds, Seq("vec_id"), "left_anti")
+            .select(col("vec_id"), col("bk"), col("embedding")),
+          dT, ws.path("index"), Some("bk"))
       }
       val e = Tables(spark, dir, "embeddings")
       val bucket = annIngestBucket(spark, dir)
@@ -1183,8 +1168,8 @@ object VectorQueries {
     * compacted successor, and the rung ledger path. */
   private[graft] def lifecycleStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String, String) = {
-    val key = StoreToken(spark, dir)
-    (s"g_lc_store_$key", s"g_lc_compact_$key", StoreToken.workspace("lcstore", key))
+    val ws = Stores(spark, dir, "lcstore")
+    (ws.table("lc_store"), ws.table("lc_compact"), ws.dir)
   }
 
   /** The lifecycle ladder's ingest-time bucket expression: plane depth
@@ -1234,31 +1219,17 @@ object VectorQueries {
       val e = Tables(spark, dir, "embeddings")
       val bucket = lifecycleBucket(spark, dir)
       StoreOnce(wh) {
-        graft.operators.BucketedWorkspace.cleanupOnExit(wh)
-        def dataFiles(): Seq[java.io.File] = {
-          def walk(f: java.io.File): Seq[java.io.File] = {
-            val cs = f.listFiles()
-            if (cs == null) Seq(f) else cs.toSeq.flatMap(walk)
-          }
-          walk(new java.io.File(s"$wh/index")).filter(f =>
-            f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        }
-        val ledger = scala.collection.mutable.ArrayBuffer[String]()
-        def rung(name: String): Unit = {
-          spark.sql(s"REFRESH TABLE $lT")
-          ledger += s"$name:${dataFiles().size}:${spark.table(lT).count()}"
-        }
+        val ledger = new Stores.Ledger(spark)
+        def rung(name: String): Unit = ledger.rung(name, lT, s"$wh/index")
         def vintageRows(m: Int, v: String) =
           e.filter(col("vec_id") % 10 === m)
             .select(col("vec_id"), bucket.as("bk"), col("embedding"),
               lit(v).as("vintage"))
         // day 0: create
-        e.filter(col("vec_id") % 10 >= 4)
-          .select(col("vec_id"), bucket.as("bk"), col("embedding"))
-          .withColumn("vintage", lit("base"))
-          .write.mode("overwrite").partitionBy("vintage")
-          .bucketBy(8, "bk").sortBy("bk")
-          .option("path", s"$wh/index").saveAsTable(lT)
+        Stores.create(e.filter(col("vec_id") % 10 >= 4)
+            .select(col("vec_id"), bucket.as("bk"), col("embedding"))
+            .withColumn("vintage", lit("base")),
+          lT, s"$wh/index", Some("bk"), Stores.Vintage)
         rung("create")
         // days 1, 2: idempotent vintage appends
         VintageWrite(vintageRows(1, "delta1"), lT)
@@ -1266,50 +1237,21 @@ object VectorQueries {
         VintageWrite(vintageRows(2, "delta2"), lT)
         rung("append_d2")
         // the delta vintages' files must survive the delete untouched
-        val deltaManifest = dataFiles()
-          .filter(f => !f.getAbsolutePath.contains("vintage=base"))
-          .map(f => s"${f.getAbsolutePath}:${f.length}:${f.lastModified}")
-          .sorted
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$wh/delta_manifest.txt"),
-          deltaManifest.mkString("\n").getBytes("UTF-8"))
+        Stores.manifest(s"$wh/delta_manifest.txt", Stores.dataFiles(s"$wh/index")
+          .filter(f => !f.getAbsolutePath.contains("vintage=base")))
         // day N: GDPR purge (≡5 — base vintage only): stage base
         // survivors, swap in as a static-prefix partition overwrite —
         // the delta vintages are never rewritten
-        spark.table(lT)
-          .filter(col("vintage") === "base" && col("vec_id") % 10 =!= 5)
-          .select(col("vec_id"), col("bk"), col("embedding"))
-          .write.mode("overwrite").parquet(s"$wh/staged_del")
-        spark.read.parquet(s"$wh/staged_del")
-          .select(col("vec_id"), col("bk"), col("embedding"))
-          .createOrReplaceTempView(s"src_del_$lT")
-        ConfLock.withConf(spark,
-            "spark.sql.sources.partitionOverwriteMode", "static") {
-          spark.sql(s"INSERT OVERWRITE TABLE $lT PARTITION (vintage='base') " +
-            s"SELECT vec_id, bk, embedding FROM src_del_$lT")
-        }
-        spark.catalog.dropTempView(s"src_del_$lT")
+        Stores.purge(spark.table(lT)
+            .filter(col("vintage") === "base" && col("vec_id") % 10 =!= 5)
+            .select(col("vec_id"), col("bk"), col("embedding")),
+          lT, "base", s"$wh/staged_del")
         rung("delete")
         // day N: compaction — shuffle-free one-file-per-bucket rewrite
-        ConfLock.withConf(spark,
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false") {
-          spark.table(lT).select(col("vec_id"), col("bk"), col("embedding"))
-            .write.mode("overwrite").bucketBy(8, "bk").sortBy("bk")
-            .option("path", s"$wh/compact").saveAsTable(cT)
-        }
-        val cFiles = {
-          def walk(f: java.io.File): Seq[java.io.File] = {
-            val cs = f.listFiles()
-            if (cs == null) Seq(f) else cs.toSeq.flatMap(walk)
-          }
-          walk(new java.io.File(s"$wh/compact")).count(f =>
-            f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        }
-        ledger += s"compact:$cFiles:${spark.table(cT).count()}"
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$wh/ledger.txt"),
-          ledger.mkString("\n").getBytes("UTF-8"))
-        ()
+        Stores.compact(spark.table(lT).select(col("vec_id"), col("bk"), col("embedding")),
+          cT, s"$wh/compact", "bk")
+        ledger.rung("compact", cT, s"$wh/compact")
+        ledger.write(s"$wh/ledger.txt")
       }
       val probes = graft.Caches.persisted(
         e.filter(col("vec_id") % 10 === 0)
@@ -1376,8 +1318,8 @@ object VectorQueries {
   /** q_ann_expire's expire-private store (table, workspace). */
   private[graft] def annExpireStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
-    val key = StoreToken(spark, dir)
-    (s"g_ann_exp_$key", StoreToken.workspace("annexp", key))
+    val ws = Stores(spark, dir, "annexp")
+    (ws.table("ann_exp"), ws.dir)
   }
 
   /** The ANN retention verb, re-runnable (drop-twice ≡ drop-once):
@@ -1387,11 +1329,7 @@ object VectorQueries {
   private[graft] def annExpireDrop(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     val (t, wh) = annExpireStore(spark, dir)
-    spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION (vintage='base')")
-    graft.operators.BucketedWorkspace.deleteRecursively(
-      new java.io.File(s"$wh/index/vintage=base"))
-    spark.sql(s"REFRESH TABLE $t")
-    ()
+    Stores.expire(spark, t, s"$wh/index", "base")
   }
 
   /** TIME-BASED VINTAGE RETENTION on the ANN store — completing the
@@ -1399,8 +1337,8 @@ object VectorQueries {
     * expire; the vector indexes had only delete/compact, yet embeddings
     * age out of real corpora just like counters do — a news-embedding
     * index drops last quarter wholesale, not doc-by-doc): the
-    * expire-private grown store (base + delta1 vintages, bucketBy(8,
-    * bk), ingest-time planes) evicts vintage=base as a catalog
+    * expire-private grown store (base + delta1 vintages, 8 buckets on
+    * bk, ingest-time planes) evicts vintage=base as a catalog
     * partition drop + storage delete — O(1) metadata + one directory
     * delete, never a data pass, never a rewrite of the surviving
     * vintage's bucket files (they stay byte-identical; the bucketed
@@ -1446,13 +1384,10 @@ object VectorQueries {
             when(col("nb") % 10 === 1, lit("delta1")).otherwise(lit("base")).as("src"))
       }
       StoreOnce(wh) {
-        graft.operators.BucketedWorkspace.cleanupOnExit(wh)
-        e.filter(col("vec_id") % 10 >= 2)
-          .select(col("vec_id"), bucket.as("bk"), col("embedding"))
-          .withColumn("vintage", lit("base"))
-          .write.mode("overwrite").partitionBy("vintage")
-          .bucketBy(8, "bk").sortBy("bk")
-          .option("path", s"$wh/index").saveAsTable(eT)
+        Stores.create(e.filter(col("vec_id") % 10 >= 2)
+            .select(col("vec_id"), bucket.as("bk"), col("embedding"))
+            .withColumn("vintage", lit("base")),
+          eT, s"$wh/index", Some("bk"), Stores.Vintage)
         VintageWrite(
           e.filter(col("vec_id") % 10 === 1)
             .select(col("vec_id"), bucket.as("bk"), col("embedding"),

@@ -21,7 +21,7 @@ class EmptyInputSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private lazy val emptyDir: String = {
-    val out = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val out = TestSpark.tempDir("empty")
     Tables.names.foreach { t =>
       val schema = spark.read.parquet(s"${TestSpark.sf0001}/$t.parquet").schema
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)

@@ -115,7 +115,7 @@ class Round10PropertiesSpec extends AnyFunSuite {
     val d2 = ((0 until 40).map(i => s"b$i") ++ span ++
       (48 until 60).map(i => s"b$i")).mkString(" ")
     val d3 = (0 until 60).map(i => s"c$i").mkString(" ")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-planted").toString
+    val tmp = TestSpark.tempDir("planted")
     import spark.implicits._
     Seq((1L, d1), (2L, d2), (3L, d3)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")

@@ -116,7 +116,7 @@ class Round11PropertiesSpec extends AnyFunSuite {
   }
 
   private def stageDocs(corpus: Seq[(Long, String)]): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-r11").toString
+    val tmp = TestSpark.tempDir("r11")
     import spark.implicits._
     corpus.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -549,7 +549,7 @@ class Round11PropertiesSpec extends AnyFunSuite {
     val keys = Tables(spark, dir, "orders").select(col("o_custkey")).collect()
       .map(_.getLong(0)).toSeq
     val (half1, half2) = keys.splitAt(keys.size / 2)
-    val staged = java.nio.file.Files.createTempDirectory("graft-shll").toString
+    val staged = TestSpark.tempDir("shll")
     Seq(half1, half2).zipWithIndex.foreach { case (ks, i) =>
       ks.toDF("k").coalesce(1).write.parquet(s"$staged/f$i.parquet")
       import java.nio.file.{Files, Paths, FileVisitOption}
@@ -975,7 +975,7 @@ class Round11PropertiesSpec extends AnyFunSuite {
     // horizon (ts = t0 + doc_id seconds; horizon 2 h >> 9 s)
     val corpus = plantedCorpus
     val t0 = 1704067200L * 1000000L
-    val staged = java.nio.file.Files.createTempDirectory("graft-sdedup").toString
+    val staged = TestSpark.tempDir("sdedup")
     corpus.sortBy(_._1).zipWithIndex.foreach { case ((id, text), i) =>
       Seq((id, text, t0 + id * 1000000L)).toDF("doc_id", "text", "ts_us")
         .select(col("doc_id"), col("text"), timestamp_micros(col("ts_us")).as("ts"))

@@ -184,7 +184,7 @@ class Round12PropertiesSpec extends AnyFunSuite {
     val words = Tables(spark, dir, "documents").select(col("text")).collect()
       .flatMap(_.getString(0).toLowerCase.split(" ", -1).filter(_.nonEmpty)).toSeq
     val (half1, half2) = words.splitAt(words.size / 2)
-    val staged = java.nio.file.Files.createTempDirectory("graft-scms").toString
+    val staged = TestSpark.tempDir("scms")
     Seq(half1, half2).zipWithIndex.foreach { case (ws, i) =>
       ws.toDF("word").coalesce(1).write.parquet(s"$staged/f$i.parquet")
       import java.nio.file.{Files, Paths, FileVisitOption}
@@ -271,7 +271,7 @@ class Round12PropertiesSpec extends AnyFunSuite {
       (8L, ts("2024-01-16 09:10:00"), 3L, "click", 128.00, "{}"),
       // user 4: yesterday-only (must not appear)
       (9L, ts("2024-01-15 12:00:00"), 4L, "click", 256.00, "{}"))
-    val out = java.nio.file.Files.createTempDirectory("graft-sess-store").toString
+    val out = TestSpark.tempDir("sess-store")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$out/events.parquet")
     val got = Registry.byName("q_session_store").build(spark, out).collect()
@@ -352,7 +352,7 @@ class Round12PropertiesSpec extends AnyFunSuite {
       (11L, v(0.99, 0.01, 0, 0), 0), // delta1: the probe's true NN
       (12L, v(0.7, 0.3, 0, 0), 0),   // base, same neighborhood
       (23L, v(0, 0, 0.5, 0.5), 0))   // base, far away
-    val out = java.nio.file.Files.createTempDirectory("graft-ivf-append").toString
+    val out = TestSpark.tempDir("ivf-append")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     val got = Registry.byName("q_ivf_store_append").build(spark, out).collect()
@@ -416,7 +416,7 @@ class Round12PropertiesSpec extends AnyFunSuite {
     import spark.implicits._
     val ids = (1L to 200L).filter(i => hash60(i.toString) % 10 != 0).take(10)
     assert(ids.size == 10)
-    val out = java.nio.file.Files.createTempDirectory("graft-bpe-empty").toString
+    val out = TestSpark.tempDir("bpe-empty")
     ids.map(i => (i, s"the cat sat on the mat $i", "en", "s", 20L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$out/documents.parquet")

@@ -113,7 +113,7 @@ class Round13PropertiesSpec extends AnyFunSuite {
       (12L, "one two three four five six seven eight nine ten eleven", "en", "s", 50L),
       (15L, txt, "en", "s", 60L), // base member, purge set (≡5 mod 10)
       (20L, txt, "en", "s", 60L)) // today's probe (≡0 mod 10)
-    val out = java.nio.file.Files.createTempDirectory("graft-del-store").toString
+    val out = TestSpark.tempDir("del-store")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
     val got = Registry.byName("q_store_delete").build(spark, out).collect()
@@ -135,7 +135,7 @@ class Round13PropertiesSpec extends AnyFunSuite {
       (4L, ts("2024-01-16 09:00:00"), 2L, "click", 16.00, "{}"),
       // user 3: idle since Jan 10, never returns — evicted, absent
       (5L, ts("2024-01-10 13:00:00"), 3L, "click", 32.00, "{}"))
-    val out = java.nio.file.Files.createTempDirectory("graft-sess-ttl").toString
+    val out = TestSpark.tempDir("sess-ttl")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$out/events.parquet")
     val got = Registry.byName("q_session_expire").build(spark, out).collect()
@@ -178,7 +178,7 @@ class Round13PropertiesSpec extends AnyFunSuite {
     val straddle = Seq(
       (9000L, new java.sql.Timestamp(cutMs - 600000L), 98L, "click", 5.00, "{}"),
       (9001L, new java.sql.Timestamp(cutMs + 600000L), 98L, "click", 7.00, "{}"))
-    val out = java.nio.file.Files.createTempDirectory("graft-sess-skew").toString
+    val out = TestSpark.tempDir("sess-skew")
     (power ++ normals ++ straddle)
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$out/events.parquet")
@@ -200,14 +200,9 @@ class Round13PropertiesSpec extends AnyFunSuite {
       s"no stage may collapse to one partition under skew:\n$plan")
   }
 
-  private def parquetFiles(path: String): Seq[String] = {
-    def walk(f: java.io.File): Seq[java.io.File] = {
-      val cs = Option(f.listFiles()).map(_.toSeq).getOrElse(Nil)
-      cs.filter(_.isFile) ++ cs.filter(_.isDirectory).flatMap(walk)
-    }
-    walk(new java.io.File(path)).map(_.getName)
+  private def parquetFiles(path: String): Seq[String] =
+    operators.Stores.files(path).map(_.getName)
       .filter(n => n.endsWith(".parquet") && n.startsWith("part-"))
-  }
 
   test("q_store_compact: one file per bucket after compaction, fewer files than the grown store") {
     val out = outOf("q_store_compact") // builds grown + compacted stores

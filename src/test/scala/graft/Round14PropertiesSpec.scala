@@ -99,7 +99,7 @@ class Round14PropertiesSpec extends AnyFunSuite {
       (11L, Array(0.5f, 0.5f, 0.5f, 0.5f), 0), // delta1 member
       (15L, Array(1f, 0f, 0f, 0f), 0),         // base member, purge set
       (20L, Array(1f, 0f, 0f, 0f), 0))         // today's probe
-    val out = java.nio.file.Files.createTempDirectory("graft-ann-del").toString
+    val out = TestSpark.tempDir("ann-del")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     val got = Registry.byName("q_ann_delete").build(spark, out).collect()
@@ -128,7 +128,7 @@ class Round14PropertiesSpec extends AnyFunSuite {
       (5L, Array(1f, 0f, 0f, 0f), 0),          // purge set (and centroid 5)
       (11L, Array(0.6f, 0.8f, 0f, 0f), 0),     // delta1 member
       (22L, Array(0.8f, 0.6f, 0f, 0f), 0))     // base member
-    val out = java.nio.file.Files.createTempDirectory("graft-ivf-del").toString
+    val out = TestSpark.tempDir("ivf-del")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     val got = Registry.byName("q_ivf_delete").build(spark, out).collect()
@@ -145,14 +145,10 @@ class Round14PropertiesSpec extends AnyFunSuite {
     assert(spark.table(dT).filter(col("vec_id") % 10 === 5).count() === 0L)
     // surgical rewrite: the delta1 partitions' files are untouched on
     // disk — path, length, AND mtime all equal the pre-purge manifest
-    def walk(f: java.io.File): Seq[java.io.File] = {
-      val cs = f.listFiles()
-      if (cs == null) Seq(f) else cs.toSeq.flatMap(walk)
-    }
     val manifest = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$wh/delta1_manifest.txt")), "UTF-8")
       .split("\n").toSeq.filter(_.nonEmpty)
-    val now = walk(new java.io.File(s"$wh/index/vintage=delta1")).filter(_.isFile)
+    val now = operators.Stores.files(s"$wh/index/vintage=delta1")
       .map(f => s"${f.getAbsolutePath}:${f.length}:${f.lastModified}").sorted
     assert(manifest.nonEmpty, "manifest must cover the delta1 partition files")
     assert(now === manifest,
@@ -197,16 +193,11 @@ class Round14PropertiesSpec extends AnyFunSuite {
     assert(spark.table(lT).filter(col("vec_id") % 10 === 5).count() === 0L)
     assert(spark.table(cT).count() === byName("delete")._3)
     // the delete never rewrote the delta vintages' files
-    def walk(f: java.io.File): Seq[java.io.File] = {
-      val cs = f.listFiles()
-      if (cs == null) Seq(f) else cs.toSeq.flatMap(walk)
-    }
     val manifest = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$wh/delta_manifest.txt")), "UTF-8")
       .split("\n").toSeq.filter(_.nonEmpty)
-    val now = walk(new java.io.File(s"$wh/index")).filter(f =>
-        f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".") &&
-          !f.getAbsolutePath.contains("vintage=base"))
+    val now = operators.Stores.dataFiles(s"$wh/index")
+      .filter(f => !f.getAbsolutePath.contains("vintage=base"))
       .map(f => s"${f.getAbsolutePath}:${f.length}:${f.lastModified}").sorted
     assert(manifest.nonEmpty && now === manifest,
       "the base-partition delete rewrote a delta vintage's files")
@@ -221,17 +212,13 @@ class Round14PropertiesSpec extends AnyFunSuite {
     assert(spark.table(t).count() > 0L, "retained vintage lost")
     assert(!new java.io.File(s"$wh/index/vintage=base").exists(),
       "expired vintage's files not reclaimed")
-    def walk(f: java.io.File): Seq[java.io.File] = {
-      val cs = f.listFiles()
-      if (cs == null) Seq(f) else cs.toSeq.flatMap(walk)
-    }
-    val d1 = walk(new java.io.File(s"$wh/index/vintage=delta1")).filter(_.isFile)
+    val d1 = operators.Stores.files(s"$wh/index/vintage=delta1")
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted
     assert(d1.nonEmpty, "retained vintage's bucket files missing")
     // the retention job re-runs: store AND output unchanged, retained
     // files byte-identical (expire never rewrites surviving data)
     operators.VectorQueries.annExpireDrop(spark, dir)
-    val d1b = walk(new java.io.File(s"$wh/index/vintage=delta1")).filter(_.isFile)
+    val d1b = operators.Stores.files(s"$wh/index/vintage=delta1")
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted
     assert(d1b === d1, "re-running the expire touched retained files")
     assert(outOf("q_ann_expire") === out1,
@@ -250,15 +237,11 @@ class Round14PropertiesSpec extends AnyFunSuite {
     assert(spark.sql(s"SHOW PARTITIONS $t").collect()
       .forall(!_.getString(0).startsWith("vintage=base/")),
       "expired cluster partitions still in the catalog")
-    def walk(f: java.io.File): Seq[java.io.File] = {
-      val cs = f.listFiles()
-      if (cs == null) Seq(f) else cs.toSeq.flatMap(walk)
-    }
-    val d1 = walk(new java.io.File(s"$wh/index/vintage=delta1")).filter(_.isFile)
+    val d1 = operators.Stores.files(s"$wh/index/vintage=delta1")
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted
     assert(d1.nonEmpty, "retained vintage's partition files missing")
     operators.IvfQueries.ivfExpireDrop(spark, dir)
-    val d1b = walk(new java.io.File(s"$wh/index/vintage=delta1")).filter(_.isFile)
+    val d1b = operators.Stores.files(s"$wh/index/vintage=delta1")
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted
     assert(d1b === d1, "re-running the expire touched retained files")
     assert(outOf("q_ivf_expire") === out1,
@@ -316,7 +299,7 @@ class Round14PropertiesSpec extends AnyFunSuite {
       (12L, v, "en", "s", 100L),
       (15L, t, "en", "s", 100L), // base member, purge set
       (20L, t, "en", "s", 100L)) // tonight's delta: exact twin of 15
-    val out = java.nio.file.Files.createTempDirectory("graft-cdel").toString
+    val out = TestSpark.tempDir("cdel")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
     val got = Registry.byName("q_corpus_delete").build(spark, out).collect()

@@ -19,15 +19,6 @@ class Round15PropertiesSpec extends AnyFunSuite {
     rows
   }
 
-  private def dataFiles(root: String): Seq[java.io.File] = {
-    def walk(f: java.io.File): Seq[java.io.File] = {
-      val cs = f.listFiles()
-      if (cs == null) Seq(f) else cs.toSeq.flatMap(walk)
-    }
-    walk(new java.io.File(root)).filter(f =>
-      f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-  }
-
   test("q_ivf_lifecycle: the rung ledger measures the file-growth/" +
     "compaction curve — appends grow files, delete+expire shrink rows, " +
     "compact collapses to one file per cluster preserving rows") {
@@ -78,7 +69,7 @@ class Round15PropertiesSpec extends AnyFunSuite {
     val (lT, _, wh) = operators.IvfQueries.ivfLifecycleStore(spark, dir)
     val manifest = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$wh/delta2_manifest.txt")), "UTF-8")
-    val now = dataFiles(s"$wh/index/vintage=delta2")
+    val now = operators.Stores.dataFiles(s"$wh/index/vintage=delta2")
       .map(f => s"${f.getAbsolutePath}:${f.length}:${f.lastModified}")
       .sorted.mkString("\n")
     assert(now === manifest,
@@ -135,7 +126,7 @@ class Round15PropertiesSpec extends AnyFunSuite {
       (16L, long("plain-base")),     // untouched base doc
       (20L, t1),                     // delta doc duplicating a SURVIVING hash
       (30L, t3))                     // delta doc whose only authority purges
-    val out = java.nio.file.Files.createTempDirectory("graft-rc").toString
+    val out = TestSpark.tempDir("rc")
     rows.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
     val got = Registry.byName("q_corpus_refcount").build(spark, out).collect()

@@ -276,7 +276,7 @@ class Round8PropertiesSpec extends AnyFunSuite {
     // every per-doc weight must come out 0 — asserted through the real
     // query on a tiny all-English fixture, not a hand replay.
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dsir-allen").toString
+    val tmp = TestSpark.tempDir("dsir-allen")
     Seq(
       (1L, "the quick brown fox jumps over the lazy dog", "web", "en"),
       (2L, "pack my box with five dozen liquor jugs", "web", "en"),

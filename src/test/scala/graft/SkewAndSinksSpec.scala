@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.functions.Skew
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,7 +24,7 @@ class SkewAndSinksSpec extends AnyFunSuite {
 
   test("sink round-trip: parquet, csv, json, orc preserve q_agg_pricing") {
     val res = Registry.byName("q_agg_pricing").build(spark, dir)
-    val tmp = Files.createTempDirectory("graft-sinks").toString
+    val tmp = TestSpark.tempDir("sinks")
     res.write.mode("overwrite").parquet(s"$tmp/p")
     res.write.mode("overwrite").option("header", "true").csv(s"$tmp/c")
     res.write.mode("overwrite").json(s"$tmp/j")
@@ -44,7 +42,7 @@ class SkewAndSinksSpec extends AnyFunSuite {
 
   test("hive-partitioned parquet layout prunes partitions at the scan") {
     import org.apache.spark.sql.functions.col
-    val tmp = Files.createTempDirectory("graft-part").toString
+    val tmp = TestSpark.tempDir("part")
     Tables(spark, dir, "orders")
       .withColumn("status", col("o_orderstatus"))
       .write.mode("overwrite").partitionBy("status").parquet(tmp)
@@ -75,7 +73,7 @@ class SkewAndSinksSpec extends AnyFunSuite {
         .otherwise(lit("0"))): _*)
     val e = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), bucket.as("bk"))
-    val tmp = Files.createTempDirectory("graft-lshpart").toString
+    val tmp = TestSpark.tempDir("lshpart")
     e.write.mode("overwrite").partitionBy("bk").parquet(tmp)
     val probeBk = e.filter(col("vec_id") === 0).select(col("bk")).head().getString(0)
     val pruned = spark.read.parquet(tmp).filter(col("bk") === probeBk)

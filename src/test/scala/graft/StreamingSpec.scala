@@ -92,7 +92,7 @@ class StreamingSpec extends AnyFunSuite {
     // sides, so both must advance for unmatched-left emission + sealing)
     val base = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
-    val staged = java.nio.file.Files.createTempDirectory("graft-pcj").toString
+    val staged = TestSpark.tempDir("pcj")
     base.coalesce(1).write.parquet(s"$staged/f0.parquet")
     val maxUs = base.agg(max(unix_micros(col("ts")))).head().getLong(0)
     val farUs = maxUs + 10L * 3600 * 1000 * 1000
@@ -116,7 +116,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("durable parquet sink with checkpoint restarts cleanly") {
-    val out = java.nio.file.Files.createTempDirectory("graft-sink").toString
+    val out = TestSpark.tempDir("sink")
     def run(): Unit = {
       val q = Streams.tumblingCounts(Streams.eventsStream(spark, dir))
         .writeStream.format("parquet")
@@ -134,7 +134,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("foreachBatch parquet snapshot == batch twin exactly") {
-    val out = java.nio.file.Files.createTempDirectory("graft-fb").toString
+    val out = TestSpark.tempDir("fb")
     val stream = Streams.tumblingCounts(Streams.eventsStream(spark, dir))
     val q = Streams.snapshotToParquet(stream, s"$out/data", s"$out/ckpt")
     try q.processAllAvailable() finally q.stop()
@@ -198,7 +198,7 @@ class StreamingSpec extends AnyFunSuite {
     // session's timeout, so the no-data batch seals ALL real sessions and
     // exact equality is well-defined (without it, sessions near the end
     // of the bounded fixture stay open forever).
-    val staged = java.nio.file.Files.createTempDirectory("graft-paths").toString
+    val staged = TestSpark.tempDir("paths")
     base.coalesce(1).write.parquet(s"$staged/f0.parquet")
     val maxUs = base.agg(org.apache.spark.sql.functions.max(col("ts_us"))).head().getLong(0)
     val farUs = maxUs + 3L * 3600 * 1000 * 1000
@@ -254,7 +254,7 @@ class StreamingSpec extends AnyFunSuite {
     // far-future sentinel (user −1): advances the watermark past every
     // real user's timeout so all version chains seal (the session-paths
     // harness); the sentinel's own single open version is filtered out
-    val staged = java.nio.file.Files.createTempDirectory("graft-scd2").toString
+    val staged = TestSpark.tempDir("scd2")
     base.coalesce(1).write.parquet(s"$staged/f0.parquet")
     val maxUs = base.agg(org.apache.spark.sql.functions.max(col("ts_us"))).head().getLong(0)
     val farUs = maxUs + 3L * 3600 * 1000 * 1000

@@ -8,6 +8,9 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val spark: SparkSession = Session(4)
 
+  /** A fresh `graft-<tag>…` scratch directory, removed at JVM exit. */
+  def tempDir(tag: String): String = operators.Stores.tempDir(tag)
+
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }

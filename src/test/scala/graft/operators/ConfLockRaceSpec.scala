@@ -25,8 +25,8 @@ class ConfLockRaceSpec extends AnyFunSuite {
     import spark.implicits._
     val key = StoreToken(spark, dir)
     val wh = StoreToken.workspace("conflock_race", key)
-    BucketedWorkspace.deleteRecursively(new java.io.File(wh))
-    BucketedWorkspace.cleanupOnExit(wh)
+    Stores.delete(wh)
+    Stores.cleanupOnExit(wh)
     val t1 = s"g_race_a_$key"
     val t2 = s"g_race_b_$key"
     Seq((1L, "base"), (2L, "base"), (3L, "delta1"))

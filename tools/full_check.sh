@@ -7,8 +7,14 @@ cd "$(dirname "$0")/.."
 # managed tables into the working directory
 rm -rf spark-warehouse
 
+# specs keep their scratch dirs under java.io.tmpdir as graft-*, removed
+# at JVM exit: a test run must not leave any behind
+count_tmp() { find "${TMPDIR:-/tmp}" -maxdepth 1 -name 'graft-*' 2>/dev/null | wc -l; }
+TMP_BEFORE=$(count_tmp)
+
 echo "=== compile + tests ==="
 sbt -batch test 2>&1 | grep -aE "Tests: succeeded|All tests passed|TESTS FAILED|Failed tests" | head -5
+TMP_AFTER=$(count_tmp)
 
 echo "=== t1 smoke (entry) ==="
 sbt -batch "runMain graft.Smoke" 2>&1 | grep -aE "ENTRY_ROWS|QUERIES"
@@ -36,7 +42,13 @@ echo "=== bench @ sf0.1 ==="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" 2>&1 \
   | grep -a '"metric"' | head -1
 
+status=0
 if [ -e spark-warehouse ]; then
   echo "FAIL: spark-warehouse/ appeared in the working directory" >&2
-  exit 1
+  status=1
 fi
+if [ "$TMP_AFTER" -gt "$TMP_BEFORE" ]; then
+  echo "FAIL: sbt test left graft-* dirs in ${TMPDIR:-/tmp} ($TMP_BEFORE before, $TMP_AFTER after)" >&2
+  status=1
+fi
+exit $status
