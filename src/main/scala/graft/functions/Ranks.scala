@@ -44,8 +44,9 @@ object Ranks {
     * count, same driver footprint as the old broadcast). The plan keeps
     * one WholeStageCodegen span over the cache scan instead of breaking
     * at `Scan ExistingRDD`/`SerializeFromObject`, and downstream column
-    * pruning reaches the cache again (see SCALE.md's round-16 section
-    * and plans/r16/ for the measured before/after).
+    * pruning reaches the cache again (see SCALE.md's round-16 section;
+    * the before/after plan dumps are recorded in commit 9de9dbf under
+    * plans/r16/).
     */
   def withGlobalRowNumber(df: DataFrame, order: Seq[Column], rnCol: String): (DataFrame, Long) = {
     val spark = df.sparkSession

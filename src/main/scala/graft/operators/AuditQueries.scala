@@ -319,19 +319,9 @@ object AuditQueries {
   private val cramersV = Q(
     "q_cramers_v",
     (spark, dir) => {
-      // cached: marginals, total and the grid join all re-read the tiny
-      // observed relation; released by the harness post-query
-      val obs = Caches.persisted(Tables.events(spark, dir)
-        .groupBy(col("event_type").as("s"), expr("hour(ts) div 6").as("p"))
-        .agg(count(lit(1)).as("o")))
-      val rt = obs.groupBy(col("s")).agg(sum(col("o")).cast("bigint").as("r"))
-      val ct = obs.groupBy(col("p")).agg(sum(col("o")).cast("bigint").as("c"))
-      val tot = broadcast(obs.agg(sum(col("o")).cast("bigint").as("t")))
-      rt.crossJoin(ct).crossJoin(tot)
-        .join(obs, Seq("s", "p"), "left")
-        .select(col("s"), col("p"), coalesce(col("o"), lit(0L)).as("o"),
-          ((col("r") * col("c")).cast("double") / col("t").cast("double")).as("e"),
-          col("t"))
+      StatsTests.contingencyCells(Tables.events(spark, dir)
+          .groupBy(col("event_type").as("s"), expr("hour(ts) div 6").as("p"))
+          .agg(count(lit(1)).as("o")))
         .agg(
           max(col("t")).as("n"),
           countDistinct(col("s")).cast("bigint").as("rdim"),

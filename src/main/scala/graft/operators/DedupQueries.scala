@@ -110,8 +110,9 @@ object DedupQueries {
       .distinct()
   }
 
-  /** Exact Jaccard over candidate pairs via the shingle relation. */
-  private def jaccardOf(cand: DataFrame, sh: DataFrame): DataFrame = {
+  /** Each candidate pair's shared shingle count `i` beside both docs'
+    * shingle counts `na` and `nb`. */
+  private def overlapOf(cand: DataFrame, sh: DataFrame): DataFrame = {
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val inter = cand
       .join(sh.select(col("doc_id").as("doc_a"), col("sh")), "doc_a")
@@ -121,6 +122,20 @@ object DedupQueries {
     inter
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+  }
+
+  /** Oracle twin of [[overlapOf]] over `cand` and `sh`: `sizes`, `inter`. */
+  private val overlapCtes =
+    """sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+       inter AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS i
+                 FROM cand c
+                 JOIN sh x ON x.doc_id = c.doc_a
+                 JOIN sh y ON y.doc_id = c.doc_b AND y.sh = x.sh
+                 GROUP BY c.doc_a, c.doc_b)"""
+
+  /** Exact Jaccard over candidate pairs via the shingle relation. */
+  private def jaccardOf(cand: DataFrame, sh: DataFrame): DataFrame = {
+    overlapOf(cand, sh)
       .select(col("doc_a"), col("doc_b"),
         pround(col("i").cast("double") / (col("na") + col("nb") - col("i")), 4).as("jaccard"))
   }
@@ -302,16 +317,7 @@ object DedupQueries {
     "q_dedup_containment",
     (spark, dir) => {
       val sh = shingleRel(spark, dir)
-      val cand = minhashCandidates(sh)
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = cand
-        .join(sh.select(col("doc_id").as("doc_a"), col("sh")), "doc_a")
-        .join(sh.select(col("doc_id").as("doc_b"), col("sh")), Seq("doc_b", "sh"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("i"))
-      inter
-        .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-        .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+      overlapOf(minhashCandidates(sh), sh)
         .select(col("doc_a"), col("doc_b"),
           pround(col("i").cast("double") / col("na").cast("double"), 4).as("cont_a"),
           pround(col("i").cast("double") / col("nb").cast("double"), 4).as("cont_b"))
@@ -320,12 +326,7 @@ object DedupQueries {
         .orderBy(col("doc_a"), col("doc_b"))
     },
     Some(s"""WITH $minhashCandCte,
-             sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-             inter AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS i
-                       FROM cand c
-                       JOIN sh x ON x.doc_id = c.doc_a
-                       JOIN sh y ON y.doc_id = c.doc_b AND y.sh = x.sh
-                       GROUP BY c.doc_a, c.doc_b),
+             $overlapCtes,
              r AS (SELECT i.doc_a, i.doc_b,
                      FLOOR((CAST(i.i AS DOUBLE) / CAST(sa.n AS DOUBLE)) * 10000 + 0.5) / 10000 AS cont_a,
                      FLOOR((CAST(i.i AS DOUBLE) / CAST(sb.n AS DOUBLE)) * 10000 + 0.5) / 10000 AS cont_b
@@ -787,12 +788,7 @@ object DedupQueries {
         .orderBy(col("bucket"))
     },
     Some(s"""WITH $minhashCandCte,
-             sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-             inter AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS i
-                       FROM cand c
-                       JOIN sh x ON x.doc_id = c.doc_a
-                       JOIN sh y ON y.doc_id = c.doc_b AND y.sh = x.sh
-                       GROUP BY c.doc_a, c.doc_b),
+             $overlapCtes,
              j AS (SELECT i.doc_a, i.doc_b,
                      CAST(FLOOR((CAST(i.i AS DOUBLE) / (sa.n + sb.n - i.i))
                        * 10000 + 0.5) AS BIGINT) AS m
@@ -996,6 +992,18 @@ object DedupQueries {
     * Shared by the LSH-bounded detector/scrubber and (via
     * [[globalSpanRuns]]' sibling shape) kept here so both read alike.
     */
+  /** Merges shingle matches (doc_a, doc_b, diag, i, j) into maximal runs
+    * along each diagonal: (doc_a, doc_b, diag, grp, j0, span), span ≥ 5
+    * tokens. */
+  private def diagonalRuns(m: DataFrame): DataFrame = {
+    val byDiag = Window.partitionBy(col("doc_a"), col("doc_b"), col("diag"))
+      .orderBy(col("i"))
+    m.withColumn("grp", col("i") - row_number().over(byDiag))
+      .groupBy(col("doc_a"), col("doc_b"), col("diag"), col("grp"))
+      .agg(min(col("j")).as("j0"), (count(lit(1)) + 2).as("span"))
+      .filter(col("span") >= 5)
+  }
+
   private def pairSpanRuns(ps: DataFrame, cand: DataFrame): DataFrame = {
     val m = cand
       .join(ps.select(col("doc_id").as("doc_a"), col("pos").as("i"), col("sh")), "doc_a")
@@ -1003,12 +1011,7 @@ object DedupQueries {
         Seq("doc_b", "sh"))
       .select(col("doc_a"), col("doc_b"), (col("i") - col("j")).as("diag"),
         col("i"), col("j"))
-    val byDiag = Window.partitionBy(col("doc_a"), col("doc_b"), col("diag"))
-      .orderBy(col("i"))
-    m.withColumn("grp", col("i") - row_number().over(byDiag))
-      .groupBy(col("doc_a"), col("doc_b"), col("diag"), col("grp"))
-      .agg(min(col("j")).as("j0"), (count(lit(1)) + 2).as("span"))
-      .filter(col("span") >= 5)
+    diagonalRuns(m)
   }
 
   /** GLOBAL maximal duplicated runs — corpus-wide, NOT bounded to LSH
@@ -1046,12 +1049,7 @@ object DedupQueries {
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"), (col("i") - col("j")).as("diag"),
         col("i"), col("j"))
-    val byDiag = Window.partitionBy(col("doc_a"), col("doc_b"), col("diag"))
-      .orderBy(col("i"))
-    m.withColumn("grp", col("i") - row_number().over(byDiag))
-      .groupBy(col("doc_a"), col("doc_b"), col("diag"), col("grp"))
-      .agg(min(col("j")).as("j0"), (count(lit(1)) + 2).as("span"))
-      .filter(col("span") >= 5)
+    diagonalRuns(m)
   }
 
   /** The scrub report over a (doc_b, j0, span) runs relation: union
@@ -1087,6 +1085,36 @@ object DedupQueries {
       .orderBy(col("doc_id"))
   }
 
+  /** Oracle twin of [[scrubReport]] over the diagonal groups `r` and the
+    * tokenized documents `toks`. */
+  private val scrubReportSql =
+    """runs AS (SELECT doc_b, MIN(j) AS j0, COUNT(*) + 2 AS span
+                FROM r GROUP BY doc_a, doc_b, diag, grp
+                HAVING COUNT(*) + 2 >= 5),
+       rem AS (SELECT DISTINCT doc_b AS doc_id, j0 + u.k AS pos
+               FROM runs, UNNEST(generate_series(0, span - 1)) AS u(k)),
+       tk AS (SELECT doc_id, i - 1 AS pos, ws[i] AS w
+              FROM toks, UNNEST(generate_series(1, len(ws))) AS u(i)),
+       kept AS (SELECT t.doc_id, t.pos, t.w FROM tk t
+                LEFT JOIN rem x ON x.doc_id = t.doc_id AND x.pos = t.pos
+                WHERE x.pos IS NULL),
+       sc AS (SELECT doc_id, string_agg(w, ' ' ORDER BY pos) AS scrub_text
+              FROM kept GROUP BY doc_id),
+       nr AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_removed
+              FROM rem GROUP BY doc_id),
+       nt AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens
+              FROM tk GROUP BY doc_id),
+       orig AS (SELECT doc_id, array_to_string(ws, ' ') AS jt FROM toks)
+       SELECT nr.doc_id, nt.n_tokens, nr.n_removed,
+         CAST(LENGTH(o.jt) - LENGTH(COALESCE(sc.scrub_text, '')) AS BIGINT)
+           AS chars_removed,
+         md5(COALESCE(sc.scrub_text, '')) AS scrub_fp
+       FROM nr
+       JOIN nt ON nt.doc_id = nr.doc_id
+       JOIN orig o ON o.doc_id = nr.doc_id
+       LEFT JOIN sc ON sc.doc_id = nr.doc_id
+       ORDER BY nr.doc_id"""
+
   private val spanScrub = Q(
     "q_span_scrub",
     (spark, dir) => {
@@ -1110,32 +1138,7 @@ object DedupQueries {
                      i - row_number() OVER (PARTITION BY doc_a, doc_b, diag
                        ORDER BY i) AS grp
                    FROM m),
-             runs AS (SELECT doc_b, MIN(j) AS j0, COUNT(*) + 2 AS span
-                      FROM r GROUP BY doc_a, doc_b, diag, grp
-                      HAVING COUNT(*) + 2 >= 5),
-             rem AS (SELECT DISTINCT doc_b AS doc_id, j0 + u.k AS pos
-                     FROM runs, UNNEST(generate_series(0, span - 1)) AS u(k)),
-             tk AS (SELECT doc_id, i - 1 AS pos, ws[i] AS w
-                    FROM toks, UNNEST(generate_series(1, len(ws))) AS u(i)),
-             kept AS (SELECT t.doc_id, t.pos, t.w FROM tk t
-                      LEFT JOIN rem x ON x.doc_id = t.doc_id AND x.pos = t.pos
-                      WHERE x.pos IS NULL),
-             sc AS (SELECT doc_id, string_agg(w, ' ' ORDER BY pos) AS scrub_text
-                    FROM kept GROUP BY doc_id),
-             nr AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_removed
-                    FROM rem GROUP BY doc_id),
-             nt AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens
-                    FROM tk GROUP BY doc_id),
-             orig AS (SELECT doc_id, array_to_string(ws, ' ') AS jt FROM toks)
-             SELECT nr.doc_id, nt.n_tokens, nr.n_removed,
-               CAST(LENGTH(o.jt) - LENGTH(COALESCE(sc.scrub_text, '')) AS BIGINT)
-                 AS chars_removed,
-               md5(COALESCE(sc.scrub_text, '')) AS scrub_fp
-             FROM nr
-             JOIN nt ON nt.doc_id = nr.doc_id
-             JOIN orig o ON o.doc_id = nr.doc_id
-             LEFT JOIN sc ON sc.doc_id = nr.doc_id
-             ORDER BY nr.doc_id"""))
+             $scrubReportSql"""))
 
   /** Shared oracle CTE chain for the GLOBAL span detector: positional
     * shingles → distinct-doc df → rare (2..50) positional postings →
@@ -1206,32 +1209,7 @@ object DedupQueries {
       scrubReport(docs, globalSpanRuns(docs))
     },
     Some(s"""WITH $globalRunsCte,
-             runs AS (SELECT doc_b, MIN(j) AS j0, COUNT(*) + 2 AS span
-                      FROM r GROUP BY doc_a, doc_b, diag, grp
-                      HAVING COUNT(*) + 2 >= 5),
-             rem AS (SELECT DISTINCT doc_b AS doc_id, j0 + u.k AS pos
-                     FROM runs, UNNEST(generate_series(0, span - 1)) AS u(k)),
-             tk AS (SELECT doc_id, i - 1 AS pos, ws[i] AS w
-                    FROM toks, UNNEST(generate_series(1, len(ws))) AS u(i)),
-             kept AS (SELECT t.doc_id, t.pos, t.w FROM tk t
-                      LEFT JOIN rem x ON x.doc_id = t.doc_id AND x.pos = t.pos
-                      WHERE x.pos IS NULL),
-             sc AS (SELECT doc_id, string_agg(w, ' ' ORDER BY pos) AS scrub_text
-                    FROM kept GROUP BY doc_id),
-             nr AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_removed
-                    FROM rem GROUP BY doc_id),
-             nt AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens
-                    FROM tk GROUP BY doc_id),
-             orig AS (SELECT doc_id, array_to_string(ws, ' ') AS jt FROM toks)
-             SELECT nr.doc_id, nt.n_tokens, nr.n_removed,
-               CAST(LENGTH(o.jt) - LENGTH(COALESCE(sc.scrub_text, '')) AS BIGINT)
-                 AS chars_removed,
-               md5(COALESCE(sc.scrub_text, '')) AS scrub_fp
-             FROM nr
-             JOIN nt ON nt.doc_id = nr.doc_id
-             JOIN orig o ON o.doc_id = nr.doc_id
-             LEFT JOIN sc ON sc.doc_id = nr.doc_id
-             ORDER BY nr.doc_id"""))
+             $scrubReportSql"""))
 
   /** Span-detector coverage audit — the capability-gap MEASUREMENT for
     * the global detector: of all document pairs carrying a ≥ 5-token

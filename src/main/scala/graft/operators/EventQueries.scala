@@ -786,24 +786,51 @@ object EventQueries {
     * events — the cost tracks today's mass, exactly like
     * q_dedup_incremental.
     */
+  /** Events as (user_id, event_id, ts, us, vc): µs timestamps and the
+    * value in exact cents. */
+  private def centEvents(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    Tables(spark, dir, "events")
+      .select(col("user_id"), col("event_id"), col("ts"),
+        unix_micros(col("ts")).as("us"),
+        floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+
+  /** Each user's events in time order, event_id tiebreak. */
+  private def byUserTime = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
+
+  /** [[byUserTime]] framed from the user's first event to the current one. */
+  private def runningByUser = byUserTime.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** `evs` numbered into 30-minute-gap sessions: `sid` per user. */
+  private def sessionized(evs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    evs.withColumn("prev_us", lag(col("us"), 1).over(byUserTime))
+      .withColumn("new_s", when(col("prev_us").isNull ||
+        col("us") - col("prev_us") > 1800000000L, 1).otherwise(0))
+      .withColumn("sid", sum(col("new_s")).over(runningByUser).cast("bigint"))
+
+  /** Today's events (ts ≥ `cut`) stitched onto the stored per-user state:
+    * `new_s` flags a session start against the previous event, or the
+    * store's last event for a user's first event today. */
+  private def stitchedToday(evs: org.apache.spark.sql.DataFrame,
+      cut: org.apache.spark.sql.Column,
+      store: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    evs.filter(col("ts") >= cut)
+      .select(col("user_id"), col("event_id"), col("us"), col("vc"))
+      .join(store.hint("merge"), Seq("user_id"), "left")
+      .withColumn("prev_us", lag(col("us"), 1).over(byUserTime))
+      .withColumn("prev_eff", coalesce(col("prev_us"), col("last_us")))
+      .withColumn("new_s", when(col("prev_eff").isNull ||
+        col("us") - col("prev_eff") > 1800000000L, 1).otherwise(0))
+
   private val sessionStore = Q(
     "q_session_store",
     (spark, dir) => {
       val ws = Stores(spark, dir, "sessstore")
       val sT = ws.table("session_store")
       val cut = lit("2024-01-16 00:00:00").cast("timestamp")
-      val evs = Tables(spark, dir, "events")
-        .select(col("user_id"), col("event_id"), col("ts"),
-          unix_micros(col("ts")).as("us"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+      val evs = centEvents(spark, dir)
       StoreOnce(ws.dir) {
-        val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-        val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val perSess = evs.filter(col("ts") < cut)
-          .withColumn("prev_us", lag(col("us"), 1).over(w))
-          .withColumn("new_s", when(col("prev_us").isNull ||
-            col("us") - col("prev_us") > 1800000000L, 1).otherwise(0))
-          .withColumn("sid", sum(col("new_s")).over(run).cast("bigint"))
+        val perSess = sessionized(evs.filter(col("ts") < cut))
           .groupBy(col("user_id"), col("sid"))
           .agg(count(lit(1)).cast("long").as("n"), sum(col("vc")).cast("long").as("c"),
             max(col("us")).as("mx"))
@@ -815,17 +842,9 @@ object EventQueries {
           sT, ws.path("state"), Some("user_id"))
       }
       val store = spark.table(sT)
-      val today = evs.filter(col("ts") >= cut)
-        .select(col("user_id"), col("event_id"), col("us"), col("vc"))
-      val tw = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-      val trun = tw.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val marked = today.join(store.hint("merge"), Seq("user_id"), "left")
-        .withColumn("prev_us", lag(col("us"), 1).over(tw))
-        .withColumn("prev_eff", coalesce(col("prev_us"), col("last_us")))
-        .withColumn("new_s", when(col("prev_eff").isNull ||
-          col("us") - col("prev_eff") > 1800000000L, 1).otherwise(0))
+      val marked = stitchedToday(evs, cut, store)
         .withColumn("session_id",
-          (coalesce(col("last_sid"), lit(0L)) + sum(col("new_s")).over(trun))
+          (coalesce(col("last_sid"), lit(0L)) + sum(col("new_s")).over(runningByUser))
             .cast("bigint"))
       val grouped = marked.groupBy(col("user_id"), col("session_id"))
         .agg(count(lit(1)).as("n_t"), sum(col("vc")).as("c_t"))
@@ -906,18 +925,9 @@ object EventQueries {
       val cut = lit("2024-01-16 00:00:00").cast("timestamp")
       val cutUs = 1705363200000000L // 2024-01-16 00:00:00 UTC in µs
       val ttlUs = 2L * 86400000000L // 2-day idle horizon (≥ the 30-min gap)
-      val evs = Tables(spark, dir, "events")
-        .select(col("user_id"), col("event_id"), col("ts"),
-          unix_micros(col("ts")).as("us"),
-          floor(col("value") * 100 + 0.5).cast("long").as("vc"))
+      val evs = centEvents(spark, dir)
       StoreOnce(ws.dir) {
-        val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-        val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val perSess = evs.filter(col("ts") < cut)
-          .withColumn("prev_us", lag(col("us"), 1).over(w))
-          .withColumn("new_s", when(col("prev_us").isNull ||
-            col("us") - col("prev_us") > 1800000000L, 1).otherwise(0))
-          .withColumn("sid", sum(col("new_s")).over(run).cast("bigint"))
+        val perSess = sessionized(evs.filter(col("ts") < cut))
           .groupBy(col("user_id"), col("sid"))
           .agg(count(lit(1)).cast("long").as("n"), sum(col("vc")).cast("long").as("c"),
             max(col("us")).as("mx"), min(col("us")).as("mn"))
@@ -933,16 +943,8 @@ object EventQueries {
           liveT, ws.path("live"), Some("user_id"))
       }
       val store = spark.table(liveT)
-      val today = evs.filter(col("ts") >= cut)
-        .select(col("user_id"), col("event_id"), col("us"), col("vc"))
-      val tw = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-      val trun = tw.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val marked = today.join(store.hint("merge"), Seq("user_id"), "left")
-        .withColumn("prev_us", lag(col("us"), 1).over(tw))
-        .withColumn("prev_eff", coalesce(col("prev_us"), col("last_us")))
-        .withColumn("new_s", when(col("prev_eff").isNull ||
-          col("us") - col("prev_eff") > 1800000000L, 1).otherwise(0))
-        .withColumn("sid", sum(col("new_s")).over(trun).cast("bigint"))
+      val marked = stitchedToday(evs, cut, store)
+        .withColumn("sid", sum(col("new_s")).over(runningByUser).cast("bigint"))
       val grouped = marked.groupBy(col("user_id"), col("sid"))
         .agg(count(lit(1)).as("n_t"), sum(col("vc")).as("c_t"),
           min(col("us")).as("first_us"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Caches, Q, Tables}
 import graft.functions.TextOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph-shaped operators for the dedup pipeline: connected components
@@ -196,7 +196,8 @@ object GraphQueries {
     // so the plan paid 2 fact-side shuffles where 1 suffices — at any
     // scale the single post-projection distinct moves the same bytes the
     // pre-distinct's exchange alone moved. Plan diff: 2 Exchange → 1 on
-    // the lineitem side (plans/r16/q_graph_degree_*.txt).
+    // the lineitem side (before/after dumps recorded in commit 9de9dbf,
+    // plans/r16/q_graph_degree_*.txt).
     val l = Tables(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"))
     o.join(l, col("o_orderkey") === col("l_orderkey"))
@@ -334,6 +335,21 @@ object GraphQueries {
     * q_triangle_count and the q_triangle_store census arms.
     */
   private[operators] def triangleCensus(pairs: DataFrame): DataFrame = {
+    val (deg, wedges) = orientedWedges(pairs)
+    val tri = wedges.select(size(closing).as("t"))
+      .agg(coalesce(sum(col("t")), lit(0L)).cast("bigint").as("n_triangles"))
+    val census = deg.agg(
+      count(lit(1)).cast("bigint").as("n_nodes"),
+      (sum(col("deg")) / 2).cast("bigint").as("n_edges"),
+      (sum(col("deg") * (col("deg") - 1)) / 2).cast("bigint").as("n_wedges"))
+    census.crossJoin(tri)
+  }
+
+  /** The degree-ordered orientation shared by the triangle census and
+    * q_local_clustering: `deg` (node, deg), cached, and each oriented
+    * edge (a, b) — from lower (deg, id) to higher — with its endpoints'
+    * sorted out-neighbour arrays `na` and `nb` (see [[closing]]). */
+  private def orientedWedges(pairs: DataFrame): (DataFrame, DataFrame) = {
     // cached: degrees and the orientation both rescan the edge list
     val e = Caches.persisted(pairs)
     // cached: consumed three times — the two orientation joins and the
@@ -356,18 +372,100 @@ object GraphQueries {
     // cached: probed twice (once per intersection endpoint)
     val adj = Caches.persisted(withDeg.groupBy(col("a"))
       .agg(sort_array(collect_list(col("b"))).as("nbrs")))
-    val tri = withDeg
+    (deg, withDeg
       .join(adj.select(col("a"), col("nbrs").as("na")), Seq("a"))
-      .join(adj.select(col("a").as("b"), col("nbrs").as("nb")), Seq("b"), "left")
-      .select(size(array_intersect(col("na"),
-        coalesce(col("nb"), array().cast("array<bigint>")))).as("t"))
-      .agg(coalesce(sum(col("t")), lit(0L)).cast("bigint").as("n_triangles"))
-    val census = deg.agg(
-      count(lit(1)).cast("bigint").as("n_nodes"),
-      (sum(col("deg")) / 2).cast("bigint").as("n_edges"),
-      (sum(col("deg") * (col("deg") - 1)) / 2).cast("bigint").as("n_wedges"))
-    census.crossJoin(tri)
+      .join(adj.select(col("a").as("b"), col("nbrs").as("nb")), Seq("b"), "left"))
   }
+
+  /** The third corners of the triangles an [[orientedWedges]] edge closes. */
+  private def closing: Column =
+    array_intersect(col("na"), coalesce(col("nb"), array().cast("array<bigint>")))
+
+  /** The part co-purchase graph's (o, p) order-line relation. */
+  private def orderParts(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir, "lineitem")
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+
+  /** Distinct (u, v), u < v, part pairs that share an order of `op`. */
+  private def coPurchasePairs(op: DataFrame): DataFrame =
+    op.join(op.withColumnRenamed("p", "q"), "o")
+      .filter(col("p") < col("q"))
+      .select(col("p").as("u"), col("q").as("v")).distinct()
+
+  /** Oracle CTEs `op` and `e`: the distinct co-purchase pairs. */
+  private val coPurchaseCtes =
+    """op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+       e AS (SELECT DISTINCT a.p AS u, b.p AS v
+             FROM op a JOIN op b ON a.o = b.o AND a.p < b.p)"""
+
+  /** Oracle CTE `name`: the pairs `edges` oriented by the degrees `deg`. */
+  private def orientedCte(name: String, edges: String, deg: String): String =
+    s"""$name AS (SELECT CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND u < v)
+                      THEN u ELSE v END AS a,
+               CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND u < v)
+                 THEN v ELSE u END AS b
+             FROM $edges
+             JOIN $deg d1 ON d1.node = $edges.u
+             JOIN $deg d2 ON d2.node = $edges.v)"""
+
+  /** Oracle FROM clause: every triangle of the oriented edges `o`. */
+  private def trianglesOf(o: String): String =
+    s"FROM $o e1 JOIN $o e2 ON e1.b = e2.a JOIN $o e3 ON e3.a = e1.a AND e3.b = e2.b"
+
+  /** Oracle twin of [[orientedWedges]] over the co-purchase graph. */
+  private val orientedCtes =
+    s"""$coPurchaseCtes,
+        deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
+                  SELECT u AS node FROM e UNION ALL SELECT v FROM e)
+                GROUP BY node),
+        ${orientedCte("o", "e", "deg")}"""
+
+  /** The per-node coefficient `c_u` (ppm) of `rel` as a decile histogram:
+    * per bucket the node count and the mean coefficient. */
+  private def deciles(rel: DataFrame): DataFrame = {
+    import graft.functions.Portable.pround
+    rel.select(least(lit(9L), expr("c_u div 100000")).cast("int").as("bucket"),
+        col("c_u"))
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)).cast("bigint").as("n_nodes"),
+        pround(sum(col("c_u")).cast("double") /
+          (count(lit(1)) * 1000000L).cast("double"), 4).as("mean_c"))
+      .orderBy(col("bucket"))
+  }
+
+  /** Oracle twin of [[deciles]] over the CTE `cu`. */
+  private val decilesSql =
+    """SELECT CAST(LEAST(9, c_u // 100000) AS INT) AS bucket,
+         CAST(COUNT(*) AS BIGINT) AS n_nodes,
+         FLOOR((CAST(SUM(c_u) AS DOUBLE) / CAST(COUNT(*) * 1000000 AS DOUBLE))
+           * 10000 + 0.5) / 10000 AS mean_c
+       FROM cu GROUP BY 1 ORDER BY 1"""
+
+  /** Oracle CTEs of the deterministic wedge sampler: `sym`, `deg`, the
+    * sampled centers `ctr`, each center's `cap` hash-smallest neighbours
+    * `cn`, their pairs `cp`, and `cl`, per center the pair count and the
+    * pairs an edge of `e` closes. */
+  private def sampledClosureCtes(cap: Int): String =
+    s"""$coPurchaseCtes,
+        sym AS (SELECT u AS x, v AS n FROM e UNION ALL SELECT v, u FROM e),
+        deg AS (SELECT x, CAST(COUNT(*) AS BIGINT) AS deg FROM sym GROUP BY x),
+        ctr AS (SELECT x FROM deg
+                WHERE CAST('0x' || substr(md5(CAST(x AS VARCHAR)), 1, 15)
+                        AS BIGINT) % 8 = 0
+                  AND deg >= 2),
+        cn AS (SELECT x, n FROM (
+                 SELECT s.x, s.n,
+                   row_number() OVER (PARTITION BY s.x ORDER BY
+                     CAST('0x' || substr(md5(CAST(s.x AS VARCHAR) || ':'
+                       || CAST(s.n AS VARCHAR)), 1, 15) AS BIGINT), s.n) AS rk
+                 FROM sym s JOIN ctr ON ctr.x = s.x)
+               WHERE rk <= $cap),
+        cp AS (SELECT a.x AS ctr, a.n AS p1, b.n AS p2
+               FROM cn a JOIN cn b ON a.x = b.x AND a.n < b.n),
+        cl AS (SELECT cp.ctr, CAST(COUNT(*) AS BIGINT) AS pairs_c,
+                 CAST(COUNT(e.u) AS BIGINT) AS closed_c
+               FROM cp LEFT JOIN e ON e.u = cp.p1 AND e.v = cp.p2
+               GROUP BY cp.ctr)"""
 
   private val triangleCount = Q(
     "q_triangle_count",
@@ -380,32 +478,14 @@ object GraphQueries {
       // deduplicate nothing, and the post-join pairs DISTINCT absorbs
       // the rare duplicate's pair multiplication anyway — result
       // identical, one exchange fewer.
-      val op = Tables(spark, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-      val pairs = op.join(op.withColumnRenamed("p", "q"), "o")
-        .filter(col("p") < col("q"))
-        .select(col("p").as("u"), col("q").as("v")).distinct()
-      triangleCensus(pairs)
+      triangleCensus(coPurchasePairs(orderParts(spark, dir)))
         .select(col("n_nodes"), col("n_edges"), col("n_triangles"),
           pround(lit(3.0) * col("n_triangles").cast("double") /
             col("n_wedges").cast("double"), 4).as("clustering_coeff"))
     },
-    Some("""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-            e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                  FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-            deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-                      SELECT u AS node FROM e UNION ALL SELECT v FROM e)
-                    GROUP BY node),
-            o AS (SELECT CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND u < v)
-                           THEN u ELSE v END AS a,
-                    CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND u < v)
-                      THEN v ELSE u END AS b
-                  FROM e
-                  JOIN deg d1 ON d1.node = e.u
-                  JOIN deg d2 ON d2.node = e.v),
+    Some(s"""WITH $orientedCtes,
             tri AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
-                    FROM o e1 JOIN o e2 ON e1.b = e2.a
-                    JOIN o e3 ON e3.a = e1.a AND e3.b = e2.b),
+                    ${trianglesOf("o")}),
             census AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes,
                          CAST(SUM(deg) / 2 AS BIGINT) AS n_edges,
                          CAST(SUM(deg * (deg - 1)) / 2 AS BIGINT) AS n_wedges
@@ -671,72 +751,27 @@ object GraphQueries {
   private val localClustering = Q(
     "q_local_clustering",
     (spark, dir) => {
-      import graft.functions.Portable.pround
       // no (o, p) pre-distinct — see q_triangle_count (r17): 99.99%
-      // unique in this shape, and the pairs DISTINCT below absorbs the
-      // rare duplicate; one exchange fewer
-      val op = Tables(spark, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-      val pairs = op.join(op.withColumnRenamed("p", "q"), "o")
-        .filter(col("p") < col("q"))
-        .select(col("p").as("u"), col("q").as("v")).distinct()
-      val e = Caches.persisted(pairs)
-      val deg = Caches.persisted(
-        e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
-          .groupBy(col("node")).agg(count(lit(1)).as("deg")))
-      val withDeg = Caches.persisted(e
-        .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
-        .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
-        .select(
-          when(col("du") < col("dv") ||
-            (col("du") === col("dv") && col("u") < col("v")), col("u"))
-            .otherwise(col("v")).as("a"),
-          when(col("du") < col("dv") ||
-            (col("du") === col("dv") && col("u") < col("v")), col("v"))
-            .otherwise(col("u")).as("b")))
-      val adj = Caches.persisted(withDeg.groupBy(col("a"))
-        .agg(sort_array(collect_list(col("b"))).as("nbrs")))
+      // unique in this shape, and the pairs DISTINCT absorbs the rare
+      // duplicate; one exchange fewer
+      val (deg, wedges) = orientedWedges(coPurchasePairs(orderParts(spark, dir)))
       // one intersection pass, cached as narrow (a, b, c) triangle rows
       // (3 longs per triangle); the three corner-credit scans then read
       // the cache instead of re-running the adj joins + intersections
-      val triNodes = Caches.persisted(withDeg
-        .join(adj.select(col("a"), col("nbrs").as("na")), Seq("a"))
-        .join(adj.select(col("a").as("b"), col("nbrs").as("nb")), Seq("b"), "left")
-        .select(col("a"), col("b"),
-          explode(array_intersect(col("na"),
-            coalesce(col("nb"), array().cast("array<bigint>")))).as("c")))
+      val triNodes = Caches.persisted(
+        wedges.select(col("a"), col("b"), explode(closing).as("c")))
       val perNode = triNodes.select(col("a").as("node"))
         .unionAll(triNodes.select(col("b").as("node")))
         .unionAll(triNodes.select(col("c").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("t"))
-      deg.filter(col("deg") >= 2)
+      deciles(deg.filter(col("deg") >= 2)
         .join(perNode, Seq("node"), "left")
         .select(coalesce(col("t"), lit(0L)).as("t"), col("deg"))
-        .select(expr("(2 * t * 1000000) div (deg * (deg - 1))").as("c_u"))
-        .select(least(lit(9L), expr("c_u div 100000")).cast("int").as("bucket"),
-          col("c_u"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).cast("bigint").as("n_nodes"),
-          pround(sum(col("c_u")).cast("double") /
-            (count(lit(1)) * 1000000L).cast("double"), 4).as("mean_c"))
-        .orderBy(col("bucket"))
+        .select(expr("(2 * t * 1000000) div (deg * (deg - 1))").as("c_u")))
     },
-    Some("""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-            e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                  FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-            deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-                      SELECT u AS node FROM e UNION ALL SELECT v FROM e)
-                    GROUP BY node),
-            o AS (SELECT CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND u < v)
-                           THEN u ELSE v END AS a,
-                    CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND u < v)
-                      THEN v ELSE u END AS b
-                  FROM e
-                  JOIN deg d1 ON d1.node = e.u
-                  JOIN deg d2 ON d2.node = e.v),
+    Some(s"""WITH $orientedCtes,
             tri AS (SELECT e1.a AS a, e1.b AS b, e2.b AS c
-                    FROM o e1 JOIN o e2 ON e1.b = e2.a
-                    JOIN o e3 ON e3.a = e1.a AND e3.b = e2.b),
+                    ${trianglesOf("o")}),
             pern AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS t FROM (
                        SELECT a AS node FROM tri
                        UNION ALL SELECT b FROM tri
@@ -746,11 +781,7 @@ object GraphQueries {
                      // (d.deg * (d.deg - 1)) AS c_u
                    FROM deg d LEFT JOIN pern p ON p.node = d.node
                    WHERE d.deg >= 2)
-            SELECT CAST(LEAST(9, c_u // 100000) AS INT) AS bucket,
-              CAST(COUNT(*) AS BIGINT) AS n_nodes,
-              FLOOR((CAST(SUM(c_u) AS DOUBLE) / CAST(COUNT(*) * 1000000 AS DOUBLE))
-                * 10000 + 0.5) / 10000 AS mean_c
-            FROM cu GROUP BY 1 ORDER BY 1"""))
+            $decilesSql"""))
 
   /** Multi-source BFS levels over the symmetrized trade graph: exact hop
     * distance from a seed set (nodes with id < 20 that appear on the 'a'
@@ -838,58 +869,70 @@ object GraphQueries {
     * a (src, lbl) partial+final count, and a per-src rank window —
     * everything hash-partitioned on node id, no driver graph state.
     */
+  /** Two synchronous majority-label rounds over the symmetrized trade
+    * graph, shared by q_label_prop and q_modularity: the edge list,
+    * cached pinned on dst (the label-lookup key, so the big side never
+    * re-shuffles across rounds), and the final (node, lbl) labels. */
+  private def majorityLabels(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val pairs = Caches.persisted(tradeEdges(spark, dir))
+    val edges = Caches.persisted(
+      pairs.select(col("a").as("src"), col("b").as("dst"))
+        .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
+        .repartition(col("dst")))
+    var labels = edges.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node"))
+    for (_ <- 1 to 2) {
+      // majority vote as max_by over (count, −label) instead of a
+      // row_number window (r16, guide §2.3/§2.4): identical winner —
+      // lexicographic max of (c, −lbl) IS "c desc, lbl asc" rank 1 —
+      // but the aggregate partial-combines map-side (one candidate
+      // row per src per mapper enters the exchange, vs every (src,
+      // lbl) vote row) and drops the window's per-partition SORT.
+      // Plan diff: Window+Sort → HashAggregate pair per round.
+      labels = Caches.persisted(
+        edges.join(labels, edges("dst") === labels("node"))
+          .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
+          .groupBy(col("src"))
+          .agg(max_by(col("lbl"), struct(col("c"), -col("lbl"))).as("lbl"))
+          .select(col("src").as("node"), col("lbl")))
+      // No per-round count() since r17 (guide §1.2 job-count — the
+      // suite's measured bottleneck is the per-job floor, 8c ≈ 32c):
+      // the eager materialization was one whole job + barrier per
+      // round; the cache still builds exactly once, lazily, inside
+      // the single final action.
+    }
+    (edges, labels)
+  }
+
+  /** Oracle twin of [[majorityLabels]]: `edges` and the round-2 labels `l2`. */
+  private val majorityLabelCtes =
+    s"""$edgesCte,
+        l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM edges),
+        c1 AS (SELECT e.src AS src, l.lbl AS lbl, COUNT(*) AS c
+               FROM edges e JOIN l0 l ON e.dst = l.node
+               GROUP BY e.src, l.lbl),
+        l1 AS (SELECT src AS node, lbl FROM (
+                 SELECT src, lbl, ROW_NUMBER() OVER (
+                   PARTITION BY src ORDER BY c DESC, lbl) AS rk FROM c1)
+               WHERE rk = 1),
+        c2 AS (SELECT e.src AS src, l.lbl AS lbl, COUNT(*) AS c
+               FROM edges e JOIN l1 l ON e.dst = l.node
+               GROUP BY e.src, l.lbl),
+        l2 AS (SELECT src AS node, lbl FROM (
+                 SELECT src, lbl, ROW_NUMBER() OVER (
+                   PARTITION BY src ORDER BY c DESC, lbl) AS rk FROM c2)
+               WHERE rk = 1)"""
+
   private val labelProp = Q(
     "q_label_prop",
     (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val pairs = Caches.persisted(tradeEdges(spark, dir))
-      val edges = Caches.persisted(
-        pairs.select(col("a").as("src"), col("b").as("dst"))
-          .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-          .repartition(col("dst")))
-      var labels = edges.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node"))
-      for (_ <- 1 to 2) {
-        // majority vote as max_by over (count, −label) instead of a
-        // row_number window (r16, guide §2.3/§2.4): identical winner —
-        // lexicographic max of (c, −lbl) IS "c desc, lbl asc" rank 1 —
-        // but the aggregate partial-combines map-side (one candidate
-        // row per src per mapper enters the exchange, vs every (src,
-        // lbl) vote row) and drops the window's per-partition SORT.
-        // Plan diff: Window+Sort → HashAggregate pair per round.
-        labels = Caches.persisted(
-          edges.join(labels, edges("dst") === labels("node"))
-            .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
-            .groupBy(col("src"))
-            .agg(max_by(col("lbl"), struct(col("c"), -col("lbl"))).as("lbl"))
-            .select(col("src").as("node"), col("lbl")))
-        // No per-round count() since r17 (guide §1.2 job-count — the
-        // suite's measured bottleneck is the per-job floor, 8c ≈ 32c):
-        // the eager materialization was one whole job + barrier per
-        // round; the cache still builds exactly once, lazily, inside
-        // the single final action.
-      }
+      val (_, labels) = majorityLabels(spark, dir)
       labels.groupBy(col("lbl")).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz").cast("bigint").as("community_size"))
         .agg(count(lit(1)).cast("bigint").as("n_communities"))
         .orderBy(col("community_size"))
     },
-    Some(s"""WITH $edgesCte,
-             l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM edges),
-             c1 AS (SELECT e.src AS src, l.lbl AS lbl, COUNT(*) AS c
-                    FROM edges e JOIN l0 l ON e.dst = l.node
-                    GROUP BY e.src, l.lbl),
-             l1 AS (SELECT src AS node, lbl FROM (
-                      SELECT src, lbl, ROW_NUMBER() OVER (
-                        PARTITION BY src ORDER BY c DESC, lbl) AS rk FROM c1)
-                    WHERE rk = 1),
-             c2 AS (SELECT e.src AS src, l.lbl AS lbl, COUNT(*) AS c
-                    FROM edges e JOIN l1 l ON e.dst = l.node
-                    GROUP BY e.src, l.lbl),
-             l2 AS (SELECT src AS node, lbl FROM (
-                      SELECT src, lbl, ROW_NUMBER() OVER (
-                        PARTITION BY src ORDER BY c DESC, lbl) AS rk FROM c2)
-                    WHERE rk = 1),
+    Some(s"""WITH $majorityLabelCtes,
              sz AS (SELECT lbl, COUNT(*) AS sz FROM l2 GROUP BY lbl)
              SELECT CAST(sz AS BIGINT) AS community_size,
                CAST(COUNT(*) AS BIGINT) AS n_communities
@@ -912,27 +955,9 @@ object GraphQueries {
   private val modularity = Q(
     "q_modularity",
     (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val pairs = Caches.persisted(tradeEdges(spark, dir))
-      val edges = Caches.persisted(
-        pairs.select(col("a").as("src"), col("b").as("dst"))
-          .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-          .repartition(col("dst")))
-      var labels = edges.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node"))
-      for (_ <- 1 to 2) {
-        // same max_by-for-window vote as q_label_prop (r16) — see the
-        // note there; the two loops stay textually twinned so the
-        // communities (and hence Q) cannot drift between the queries
-        labels = Caches.persisted(
-          edges.join(labels, edges("dst") === labels("node"))
-            .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
-            .groupBy(col("src"))
-            .agg(max_by(col("lbl"), struct(col("c"), -col("lbl"))).as("lbl"))
-            .select(col("src").as("node"), col("lbl")))
-        // no per-round count() since r17 — see q_label_prop
-      }
-      val lbl = labels
+      // the q_label_prop communities, from the same builder, so Q
+      // cannot drift from the labeling it scores
+      val (edges, lbl) = majorityLabels(spark, dir)
       val eSame = edges
         .join(lbl.select(col("node").as("sn"), col("lbl").as("sl")),
           col("src") === col("sn"))
@@ -952,22 +977,7 @@ object GraphQueries {
             (col("e_same") * col("m2") - col("sum_sq")).cast("double") /
               (col("m2") * col("m2")).cast("double"), 8).as("modularity"))
     },
-    Some(s"""WITH $edgesCte,
-             l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM edges),
-             c1 AS (SELECT e.src AS src, l.lbl AS lbl, COUNT(*) AS c
-                    FROM edges e JOIN l0 l ON e.dst = l.node
-                    GROUP BY e.src, l.lbl),
-             l1 AS (SELECT src AS node, lbl FROM (
-                      SELECT src, lbl, ROW_NUMBER() OVER (
-                        PARTITION BY src ORDER BY c DESC, lbl) AS rk FROM c1)
-                    WHERE rk = 1),
-             c2 AS (SELECT e.src AS src, l.lbl AS lbl, COUNT(*) AS c
-                    FROM edges e JOIN l1 l ON e.dst = l.node
-                    GROUP BY e.src, l.lbl),
-             l2 AS (SELECT src AS node, lbl FROM (
-                      SELECT src, lbl, ROW_NUMBER() OVER (
-                        PARTITION BY src ORDER BY c DESC, lbl) AS rk FROM c2)
-                    WHERE rk = 1),
+    Some(s"""WITH $majorityLabelCtes,
              es AS (SELECT CAST(COUNT(*) AS BIGINT) AS e_same
                     FROM edges e
                     JOIN l2 s ON e.src = s.node
@@ -1020,16 +1030,11 @@ object GraphQueries {
       val adjT = ws.table("tri_adj")
       val cenT = ws.table("tri_census")
       // no (o, p) pre-distinct — see q_triangle_count (r17): every use
-      // goes through pairsOf, whose pair-level DISTINCT absorbs the
-      // fixture's rare (o, p) duplicate
-      val op = Tables(spark, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-      def pairsOf(rel: DataFrame): DataFrame =
-        rel.join(rel.withColumnRenamed("p", "q"), "o")
-          .filter(col("p") < col("q"))
-          .select(col("p").as("u"), col("q").as("v")).distinct()
+      // goes through coPurchasePairs, whose pair-level DISTINCT absorbs
+      // the fixture's rare (o, p) duplicate
+      val op = orderParts(spark, dir)
       StoreOnce(ws.dir) {
-        val bp = Caches.persisted(pairsOf(op.filter(col("o") % 10 =!= 0)))
+        val bp = Caches.persisted(coPurchasePairs(op.filter(col("o") % 10 =!= 0)))
         // the store is the SORTED-ADJACENCY form (node → nbrs array),
         // not doubled edge rows: the incremental channels then run as
         // per-delta-edge array probes (intersect / contains) instead of
@@ -1052,7 +1057,7 @@ object GraphQueries {
       // delta = today's pairs whose edge is absent from the stored
       // adjacency (membership = one array_contains against u's row)
       val delta = Caches.persisted(
-        pairsOf(op.filter(col("o") % 10 === 0))
+        coPurchasePairs(op.filter(col("o") % 10 === 0))
           .join(adj.select(col("node").as("u"), col("nbrs").as("un")), Seq("u"), "left")
           .filter(col("un").isNull || !array_contains(col("un"), col("v")))
           .select(col("u"), col("v")))
@@ -1084,7 +1089,7 @@ object GraphQueries {
           (col("base_tri") + col("add1") + col("add2") + col("add3"))
             .cast("bigint").as("incr_tri"))
     },
-    Some("""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+    Some(s"""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
             bp AS (SELECT DISTINCT a.p AS u, b.p AS v
                    FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
                    WHERE a.o % 10 <> 0),
@@ -1111,16 +1116,9 @@ object GraphQueries {
                    JOIN delta d3 ON d3.u = d1.u AND d3.v = d2.v),
             bdeg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM tb
                      GROUP BY node),
-            bo AS (SELECT CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND u < v)
-                            THEN u ELSE v END AS a,
-                     CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND u < v)
-                       THEN v ELSE u END AS b
-                   FROM bp
-                   JOIN bdeg d1 ON d1.node = bp.u
-                   JOIN bdeg d2 ON d2.node = bp.v),
+            ${orientedCte("bo", "bp", "bdeg")},
             btri AS (SELECT CAST(COUNT(*) AS BIGINT) AS base_tri
-                     FROM bo e1 JOIN bo e2 ON e1.b = e2.a
-                     JOIN bo e3 ON e3.a = e1.a AND e3.b = e2.b)
+                     ${trianglesOf("bo")})
             SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM bp) AS base_edges,
               (SELECT CAST(COUNT(*) AS BIGINT) FROM delta) AS delta_edges,
               base_tri, add1, add2, add3,
@@ -1165,11 +1163,7 @@ object GraphQueries {
     (spark, dir) => {
       import graft.functions.Portable.hash60
       // no (o, p) pre-distinct — see q_triangle_count (r17)
-      val op = Tables(spark, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-      val e = Caches.persisted(op.join(op.withColumnRenamed("p", "q"), "o")
-        .filter(col("p") < col("q"))
-        .select(col("p").as("u"), col("q").as("v")).distinct())
+      val e = Caches.persisted(coPurchasePairs(orderParts(spark, dir)))
       val sym = e.select(col("u").as("x"), col("v").as("n"))
         .unionAll(e.select(col("v").as("x"), col("u").as("n")))
       val deg = Caches.persisted(
@@ -1205,28 +1199,7 @@ object GraphQueries {
             .otherwise(expr("(n_closed * 1000000) div n_wedges_sampled"))
             .cast("long").as("c_naive_ppm"))
     },
-    Some("""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-            e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                  FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-            sym AS (SELECT u AS x, v AS n FROM e UNION ALL SELECT v, u FROM e),
-            deg AS (SELECT x, CAST(COUNT(*) AS BIGINT) AS deg FROM sym GROUP BY x),
-            ctr AS (SELECT x FROM deg
-                    WHERE CAST('0x' || substr(md5(CAST(x AS VARCHAR)), 1, 15)
-                            AS BIGINT) % 8 = 0
-                      AND deg >= 2),
-            cn AS (SELECT x, n FROM (
-                     SELECT s.x, s.n,
-                       row_number() OVER (PARTITION BY s.x ORDER BY
-                         CAST('0x' || substr(md5(CAST(s.x AS VARCHAR) || ':'
-                           || CAST(s.n AS VARCHAR)), 1, 15) AS BIGINT), s.n) AS rk
-                     FROM sym s JOIN ctr ON ctr.x = s.x)
-                   WHERE rk <= 32),
-            cp AS (SELECT a.x AS ctr, a.n AS p1, b.n AS p2
-                   FROM cn a JOIN cn b ON a.x = b.x AND a.n < b.n),
-            cl AS (SELECT cp.ctr, CAST(COUNT(*) AS BIGINT) AS pairs_c,
-                     CAST(COUNT(e.u) AS BIGINT) AS closed_c
-                   FROM cp LEFT JOIN e ON e.u = cp.p1 AND e.v = cp.p2
-                   GROUP BY cp.ctr),
+    Some(s"""WITH ${sampledClosureCtes(32)},
             per AS (SELECT cl.pairs_c, cl.closed_c,
                       (d.deg * (d.deg - 1)) // 2 AS w,
                       (cl.closed_c * ((d.deg * (d.deg - 1)) // 2) * 1000000)
@@ -1477,10 +1450,9 @@ object GraphQueries {
   private val localClusteringSampled = Q(
     "q_local_clustering_sampled",
     (spark, dir) => {
-      import graft.functions.Portable.{hash60, pround}
+      import graft.functions.Portable.hash60
       import org.apache.spark.sql.expressions.Window
-      val opRaw = Tables(spark, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+      val opRaw = orderParts(spark, dir)
       // ONE order-keyed exchange serves both self-joins (guide §2.4
       // "two operations keyed the same way share one exchange"): the
       // neighborhood join and the closure-edge fan-out both read this
@@ -1535,43 +1507,11 @@ object GraphQueries {
       val cl = cp.join(eCand, col("p1") === col("u") && col("p2") === col("v"), "left")
         .groupBy(col("ctr"))
         .agg(count(lit(1)).as("pairs_c"), count(col("u")).as("closed_c"))
-      cl.select(expr("(closed_c * 1000000) div pairs_c").as("c_u"))
-        .select(least(lit(9L), expr("c_u div 100000")).cast("int").as("bucket"),
-          col("c_u"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).cast("bigint").as("n_nodes"),
-          pround(sum(col("c_u")).cast("double") /
-            (count(lit(1)) * 1000000L).cast("double"), 4).as("mean_c"))
-        .orderBy(col("bucket"))
+      deciles(cl.select(expr("(closed_c * 1000000) div pairs_c").as("c_u")))
     },
-    Some("""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-            e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                  FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-            sym AS (SELECT u AS x, v AS n FROM e UNION ALL SELECT v, u FROM e),
-            deg AS (SELECT x, CAST(COUNT(*) AS BIGINT) AS deg FROM sym GROUP BY x),
-            ctr AS (SELECT x FROM deg
-                    WHERE CAST('0x' || substr(md5(CAST(x AS VARCHAR)), 1, 15)
-                            AS BIGINT) % 8 = 0
-                      AND deg >= 2),
-            cn AS (SELECT x, n FROM (
-                     SELECT s.x, s.n,
-                       row_number() OVER (PARTITION BY s.x ORDER BY
-                         CAST('0x' || substr(md5(CAST(s.x AS VARCHAR) || ':'
-                           || CAST(s.n AS VARCHAR)), 1, 15) AS BIGINT), s.n) AS rk
-                     FROM sym s JOIN ctr ON ctr.x = s.x)
-                   WHERE rk <= 16),
-            cp AS (SELECT a.x AS ctr, a.n AS p1, b.n AS p2
-                   FROM cn a JOIN cn b ON a.x = b.x AND a.n < b.n),
-            cl AS (SELECT cp.ctr, CAST(COUNT(*) AS BIGINT) AS pairs_c,
-                     CAST(COUNT(e.u) AS BIGINT) AS closed_c
-                   FROM cp LEFT JOIN e ON e.u = cp.p1 AND e.v = cp.p2
-                   GROUP BY cp.ctr),
+    Some(s"""WITH ${sampledClosureCtes(16)},
             cu AS (SELECT (closed_c * 1000000) // pairs_c AS c_u FROM cl)
-            SELECT CAST(LEAST(9, c_u // 100000) AS INT) AS bucket,
-              CAST(COUNT(*) AS BIGINT) AS n_nodes,
-              FLOOR((CAST(SUM(c_u) AS DOUBLE) / CAST(COUNT(*) * 1000000 AS DOUBLE))
-                * 10000 + 0.5) / 10000 AS mean_c
-            FROM cu GROUP BY 1 ORDER BY 1"""))
+            $decilesSql"""))
 
   val all: Seq[Q] = Seq(ccDedup, graphDegree, pageRank, triangleCount,
     kcore, graphJaccard, assortativity, localClustering, bfsLevels,

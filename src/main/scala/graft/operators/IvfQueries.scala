@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.Portable.pround
 import graft.functions.VectorOps
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,6 +11,120 @@ import org.apache.spark.sql.functions._
   * scale paths that avoid the quadratic compare.
   */
 object IvfQueries {
+
+  /** The fixed centroid model, broadcast: the vectors vec_id < 10 of `e`
+    * (a real deployment would k-means these; the assignment and routed
+    * search are the engine operators). */
+  private def centroids(e: DataFrame): DataFrame =
+    broadcast(e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("cid"), col("embedding").as("cemb")))
+
+  /** Nearest-centroid assignment of `rel` (cosine rank 1, cid tiebreak):
+    * vec_id, the `keep` columns, and `cluster`. */
+  private def nearestCentroid(rel: DataFrame, cents: DataFrame, cluster: Column,
+      keep: String*): DataFrame = {
+    val kept = ("vec_id" +: keep).map(col)
+    val byVec = Window.partitionBy(col("vec_id"))
+      .orderBy(col("ccos").desc, col("cid"))
+    rel.crossJoin(cents)
+      .select(kept ++ Seq(col("cid"),
+        VectorOps.cosine(col("embedding"), col("cemb")).as("ccos")): _*)
+      .withColumn("rn", row_number().over(byVec))
+      .filter(col("rn") === 1)
+      .select(kept :+ cluster.as("cluster"): _*)
+  }
+
+  /** The routed probe of vec_id 0 over the stored IVF layout. The
+    * driver-side router picks the probe's nprobe = 2 nearest centroids
+    * (bounded model state, two ints — the router is client-side in every
+    * real IVF serving stack); the returned search reads only those
+    * clusters' partitions of a store table (a `cluster IN (…)`
+    * PartitionFilter) and keeps the top-10 by rounded cosine, vec_id
+    * tiebreak, with the `extra` columns. */
+  private def routedSearch(e: DataFrame, cents: DataFrame): (String, Seq[Column]) => DataFrame = {
+    val routedIds = e.filter(col("vec_id") === 0)
+      .select(col("embedding").as("p")).crossJoin(cents)
+      .select(col("cid"), VectorOps.cosine(col("p"), col("cemb")).as("ccos"))
+      .orderBy(col("ccos").desc, col("cid")).limit(2)
+      .collect().map(_.getAs[Number](0).intValue).toSeq
+    val probe = broadcast(e.filter(col("vec_id") === 0)
+      .select(col("embedding").as("p")))
+    (t, extra) => e.sparkSession.table(t)
+      .filter(if (routedIds.isEmpty) lit(false)
+              else col("cluster").isin(routedIds: _*))
+      .crossJoin(probe)
+      .select(Seq(col("vec_id"), col("cluster").cast("int").as("cluster"),
+        pround(VectorOps.cosine(col("embedding"), col("p")), 4).as("cos")) ++ extra: _*)
+      .orderBy(col("cos").desc, col("vec_id"))
+      .limit(10)
+  }
+
+  /** Attributes a row to the base or the `vintage` (vec_id ≡ `m` mod 10). */
+  private def vintageSrc(m: Int, vintage: String): Column =
+    when(col("vec_id") % 10 === m, lit(vintage)).otherwise(lit("base")).as("src")
+
+  /** `df` under a `phase` label. */
+  private def phased(df: DataFrame, phase: String): DataFrame =
+    df.select(lit(phase).as("phase") +: df.columns.toSeq.map(col): _*)
+
+  /** Oracle CTE `assign`: each `scored` vector's nearest centroid. */
+  private val assignCte =
+    """assign AS (SELECT vec_id, cid AS cluster FROM (
+         SELECT vec_id, cid,
+           row_number() OVER (PARTITION BY vec_id
+             ORDER BY ccos DESC, cid) AS rn
+         FROM scored)
+       WHERE rn = 1)"""
+
+  /** Oracle CTEs over the corpus as cast vectors `e`: `cents`, `scored`,
+    * [[assignCte]], and the probe vector `pv`. */
+  private val corpusAssignCtes =
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        cents AS (SELECT vec_id AS cid, v AS cemb FROM e WHERE vec_id < 10),
+        scored AS (SELECT e.vec_id, c.cid,
+                     list_cosine_similarity(e.v, c.cemb) AS ccos
+                   FROM e CROSS JOIN cents c),
+        $assignCte,
+        pv AS (SELECT v FROM e WHERE vec_id = 0)"""
+
+  /** Oracle twin of [[routedSearch]] over a stored population `rel` (the
+    * embeddings rows matching `where`, aliased `alias`): `cents`, `scored`,
+    * [[assignCte]], `probe` and the nprobe = 2 `routed` cells. */
+  private def routedCtes(rel: String, alias: String, where: String): String =
+    s"""cents AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb
+                  FROM embeddings WHERE vec_id < 10),
+        $rel AS (SELECT vec_id, embedding FROM embeddings WHERE $where),
+        scored AS (SELECT $alias.vec_id, c.cid,
+                     list_cosine_similarity(CAST($alias.embedding AS DOUBLE[]), c.cemb) AS ccos
+                   FROM $rel $alias CROSS JOIN cents c),
+        $assignCte,
+        probe AS (SELECT CAST(embedding AS DOUBLE[]) AS p FROM embeddings
+                  WHERE vec_id = 0),
+        routed AS (SELECT c.cid FROM cents c, probe
+                   ORDER BY list_cosine_similarity(probe.p, c.cemb) DESC, c.cid
+                   LIMIT 2)"""
+
+  /** The routed search over [[routedCtes]]'s `rel`, with `extra` columns. */
+  private def servedSql(rel: String, alias: String, extra: String = ""): String =
+    s"""SELECT $alias.vec_id, CAST(a.cluster AS INT) AS cluster,
+          FLOOR((list_cosine_similarity(CAST($alias.embedding AS DOUBLE[]), probe.p))
+            * 10000 + 0.5) / 10000 AS cos$extra
+        FROM $rel $alias JOIN assign a ON a.vec_id = $alias.vec_id, probe
+        WHERE a.cluster IN (SELECT cid FROM routed)"""
+
+  /** Oracle of the grown IVF store served before (`pre`) and after
+    * (`post`) a verb that keeps only the rows matching `postWhere`. */
+  private def prePostOracle(extra: String, postWhere: String, cols: String): String =
+    s"""WITH ${routedCtes("grown", "g", "vec_id % 10 <> 0")},
+        served AS (${servedSql("grown", "g", extra)}),
+        pre AS (SELECT * FROM served ORDER BY cos DESC, vec_id LIMIT 10),
+        post AS (SELECT * FROM served WHERE $postWhere
+                 ORDER BY cos DESC, vec_id LIMIT 10)
+        SELECT phase, $cols FROM (
+          SELECT 'pre' AS phase, * FROM pre
+          UNION ALL
+          SELECT 'post', * FROM post)
+        ORDER BY phase, cos DESC, vec_id"""
 
   /** IVF (inverted-file) KNN: vectors are assigned to the nearest of 10
     * fixed centroids (vec_id 0..9 — a real deployment would k-means these;
@@ -23,16 +138,7 @@ object IvfQueries {
     "q_knn_ivf",
     (spark, dir) => {
       val e = Tables(spark, dir, "embeddings")
-      val cents = broadcast(e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cemb")))
-      val byVec = Window.partitionBy(col("vec_id"))
-        .orderBy(col("ccos").desc, col("cid"))
-      val assign = e.crossJoin(cents)
-        .select(col("vec_id"), col("embedding"), col("cid"),
-          VectorOps.cosine(col("embedding"), col("cemb")).as("ccos"))
-        .withColumn("rn", row_number().over(byVec))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("embedding"), col("cid").as("cluster"))
+      val assign = nearestCentroid(e, centroids(e), col("cid"), "embedding")
       val probe = broadcast(assign.filter(col("vec_id") === 0)
         .select(col("embedding").as("p"), col("cluster").as("pcluster")))
       assign
@@ -43,17 +149,12 @@ object IvfQueries {
         .orderBy(col("cos").desc, col("vec_id"))
         .limit(10)
     },
-    Some("""WITH cents AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb
+    Some(s"""WITH cents AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb
                            FROM embeddings WHERE vec_id < 10),
             scored AS (SELECT e.vec_id, c.cid,
                          list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c.cemb) AS ccos
                        FROM embeddings e CROSS JOIN cents c),
-            assign AS (SELECT vec_id, cid AS cluster FROM (
-                         SELECT vec_id, cid,
-                           row_number() OVER (PARTITION BY vec_id
-                             ORDER BY ccos DESC, cid) AS rn
-                         FROM scored)
-                       WHERE rn = 1),
+            $assignCte,
             probe AS (SELECT CAST(e.embedding AS DOUBLE[]) AS p, a.cluster AS pcluster
                       FROM embeddings e JOIN assign a ON e.vec_id = a.vec_id
                       WHERE e.vec_id = 0)
@@ -81,11 +182,8 @@ object IvfQueries {
     "q_dedup_embed_lsh",
     (spark, dir) => {
       val n = Tables(spark, dir, "embeddings").count()
-      val signs = VectorQueries.planeSigns(VectorQueries.planesFor(n),
-        VectorQueries.embeddingDim(spark, dir))
-      val bucket = concat(signs.map(s =>
-        when(VectorOps.signedDot(col("embedding"), s.toArray) > 0, lit("1"))
-          .otherwise(lit("0"))): _*)
+      val bucket = VectorQueries.bucketKey(VectorQueries.planeSigns(
+        VectorQueries.planesFor(n), VectorQueries.embeddingDim(spark, dir)))
       val e = Tables(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), bucket.as("bk"))
       val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"), col("bk"))
@@ -97,25 +195,7 @@ object IvfQueries {
         .orderBy(col("cos").desc, col("vec_a"), col("vec_b"))
         .limit(20)
     },
-    Some("""WITH np AS (
-              SELECT MIN(k) AS np
-              FROM UNNEST(generate_series(4, 20)) AS t(k),
-                   (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings) c
-              WHERE (CAST(32 AS BIGINT) << k) >= c.n OR k = 20),
-            dims AS (SELECT CAST(COALESCE(MAX(len(embedding)), 0) AS BIGINT) AS nd
-                     FROM embeddings),
-            planes AS (
-              SELECT p, d,
-                CASE WHEN substr(md5('p' || CAST(p AS VARCHAR) || '-' || CAST(d AS VARCHAR)), 1, 1)
-                     IN ('8','9','a','b','c','d','e','f') THEN 1.0 ELSE -1.0 END AS sgn
-              FROM np, dims, UNNEST(generate_series(0, np.np - 1)) AS a(p),
-                   UNNEST(generate_series(1, dims.nd)) AS b(d)),
-            dots AS (SELECT e.vec_id, pl.p,
-                       SUM(pl.sgn * CAST(e.embedding[pl.d] AS DOUBLE)) AS dp
-                     FROM embeddings e CROSS JOIN planes pl GROUP BY e.vec_id, pl.p),
-            buckets AS (SELECT vec_id,
-                          string_agg(CASE WHEN dp > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bk
-                        FROM dots GROUP BY vec_id)
+    Some(s"""WITH ${VectorQueries.corpusBucketCtes}
             SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, ba.bk,
               FLOOR((list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
                                             CAST(b.embedding AS DOUBLE[]))) * 10000 + 0.5) / 10000 AS cos
@@ -144,16 +224,8 @@ object IvfQueries {
     "q_ivf_recall_sweep",
     (spark, dir) => {
       val e = Tables(spark, dir, "embeddings")
-      val cents = broadcast(e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cemb")))
-      val byVec = Window.partitionBy(col("vec_id"))
-        .orderBy(col("ccos").desc, col("cid"))
-      val assign = e.crossJoin(cents)
-        .select(col("vec_id"), col("embedding"), col("cid"),
-          VectorOps.cosine(col("embedding"), col("cemb")).as("ccos"))
-        .withColumn("rn", row_number().over(byVec))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("embedding"), col("cid").as("cluster"))
+      val cents = centroids(e)
+      val assign = nearestCentroid(e, cents, col("cid"), "embedding")
       val probeVec = broadcast(e.filter(col("vec_id") === 0)
         .select(col("embedding").as("p")))
       val prank = broadcast(cents.crossJoin(probeVec)
@@ -204,18 +276,7 @@ object IvfQueries {
               col("k").cast("double"), 4)).as("recall"))
         .orderBy(col("nprobe"))
     },
-    Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            cents AS (SELECT vec_id AS cid, v AS cemb FROM e WHERE vec_id < 10),
-            scored AS (SELECT e.vec_id, c.cid,
-                         list_cosine_similarity(e.v, c.cemb) AS ccos
-                       FROM e CROSS JOIN cents c),
-            assign AS (SELECT vec_id, cid AS cluster FROM (
-                         SELECT vec_id, cid,
-                           row_number() OVER (PARTITION BY vec_id
-                             ORDER BY ccos DESC, cid) AS rn
-                         FROM scored)
-                       WHERE rn = 1),
-            pv AS (SELECT v FROM e WHERE vec_id = 0),
+    Some(s"""WITH $corpusAssignCtes,
             prank AS (SELECT cid,
                         row_number() OVER (ORDER BY pcos DESC, cid) AS prank
                       FROM (SELECT c.cid,
@@ -280,16 +341,8 @@ object IvfQueries {
     "q_ivf_pq",
     (spark, dir) => {
       val e = Tables(spark, dir, "embeddings")
-      val cents = broadcast(e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cemb")))
-      val byVec = Window.partitionBy(col("vec_id"))
-        .orderBy(col("ccos").desc, col("cid"))
-      val assign = e.crossJoin(cents)
-        .select(col("vec_id"), col("cid"),
-          VectorOps.cosine(col("embedding"), col("cemb")).as("ccos"))
-        .withColumn("rn", row_number().over(byVec))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid").as("cluster"))
+      val cents = centroids(e)
+      val assign = nearestCentroid(e, cents, col("cid"))
       val probeVec = broadcast(e.filter(col("vec_id") === 0)
         .select(col("embedding").as("p")))
       val routed = broadcast(cents.crossJoin(probeVec)
@@ -343,18 +396,7 @@ object IvfQueries {
             .otherwise(pround(col("hits").cast("double") / col("k").cast("double"), 4))
             .as("recall"))
     },
-    Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            cents AS (SELECT vec_id AS cid, v AS cemb FROM e WHERE vec_id < 10),
-            scored AS (SELECT e.vec_id, c.cid,
-                         list_cosine_similarity(e.v, c.cemb) AS ccos
-                       FROM e CROSS JOIN cents c),
-            assign AS (SELECT vec_id, cid AS cluster FROM (
-                         SELECT vec_id, cid,
-                           row_number() OVER (PARTITION BY vec_id
-                             ORDER BY ccos DESC, cid) AS rn
-                         FROM scored)
-                       WHERE rn = 1),
-            pv AS (SELECT v FROM e WHERE vec_id = 0),
+    Some(s"""WITH $corpusAssignCtes,
             routed AS (SELECT cid FROM (
                          SELECT c.cid,
                            row_number() OVER (ORDER BY
@@ -378,21 +420,8 @@ object IvfQueries {
                    JOIN pr2 ON pr2.d = x.d
                    GROUP BY x.vec_id),
             short AS (SELECT vec_id FROM ap ORDER BY approx_u DESC, vec_id LIMIT 20),
-            rr AS (SELECT e.vec_id,
-                     FLOOR((list_cosine_similarity(e.v, pv.v)) * 10000 + 0.5) / 10000 AS cos
-                   FROM e JOIN short s ON e.vec_id = s.vec_id, pv
-                   ORDER BY cos DESC, e.vec_id LIMIT 10),
-            brute AS (SELECT e.vec_id,
-                        FLOOR((list_cosine_similarity(e.v, pv.v)) * 10000 + 0.5) / 10000 AS cos
-                      FROM e, pv WHERE e.vec_id <> 0
-                      ORDER BY cos DESC, e.vec_id LIMIT 10)
-            SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM cand) AS n_cand,
-              CAST(COUNT(*) AS INT) AS k,
-              CAST(COUNT(rr.vec_id) AS INT) AS hits,
-              CASE WHEN COUNT(*) = 0 THEN NULL
-                   ELSE FLOOR((CAST(COUNT(rr.vec_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE))
-                     * 10000 + 0.5) / 10000 END AS recall
-            FROM brute LEFT JOIN rr ON brute.vec_id = rr.vec_id"""))
+            ${VectorQueries.rerankRecallSql(
+              "(SELECT CAST(COUNT(*) AS BIGINT) FROM cand) AS n_cand, ")}"""))
 
   /** PERSISTED IVF index with a PARTITION-PRUNED routed probe — the IVF
     * half of the persisted-ANN story (q_ann_incremental persists LSH
@@ -420,52 +449,15 @@ object IvfQueries {
       val ws = Stores(spark, dir, "ivfstore")
       val sT = ws.table("ivf_store")
       val e = Tables(spark, dir, "embeddings")
-      val cents = broadcast(e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cemb")))
+      val cents = centroids(e)
       StoreOnce(ws.dir) {
         Stores.create(ivfAssigned(e.filter(col("vec_id") % 10 =!= 0), cents),
           sT, ws.path("index"), None, "cluster")
       }
-      // driver-side router: nprobe = 2 nearest centroids of the probe —
-      // bounded model state (2 ints), the k-means-centroid precedent
-      val routedIds = e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("p")).crossJoin(cents)
-        .select(col("cid"), VectorOps.cosine(col("p"), col("cemb")).as("ccos"))
-        .orderBy(col("ccos").desc, col("cid")).limit(2)
-        .collect().map(_.getAs[Number](0).intValue).toSeq
-      val probe = broadcast(e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("p")))
-      val pruned = spark.table(sT)
-        .filter(if (routedIds.isEmpty) lit(false)
-                else col("cluster").isin(routedIds: _*))
-      pruned.crossJoin(probe)
-        .select(col("vec_id"), col("cluster").cast("int").as("cluster"),
-          pround(VectorOps.cosine(col("embedding"), col("p")), 4).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id"))
-        .limit(10)
+      routedSearch(e, cents)(sT, Nil)
     },
-    Some("""WITH cents AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb
-                           FROM embeddings WHERE vec_id < 10),
-            base AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 <> 0),
-            scored AS (SELECT b.vec_id, c.cid,
-                         list_cosine_similarity(CAST(b.embedding AS DOUBLE[]), c.cemb) AS ccos
-                       FROM base b CROSS JOIN cents c),
-            assign AS (SELECT vec_id, cid AS cluster FROM (
-                         SELECT vec_id, cid,
-                           row_number() OVER (PARTITION BY vec_id
-                             ORDER BY ccos DESC, cid) AS rn
-                         FROM scored)
-                       WHERE rn = 1),
-            probe AS (SELECT CAST(embedding AS DOUBLE[]) AS p FROM embeddings
-                      WHERE vec_id = 0),
-            routed AS (SELECT c.cid FROM cents c, probe
-                       ORDER BY list_cosine_similarity(probe.p, c.cemb) DESC, c.cid
-                       LIMIT 2)
-            SELECT b.vec_id, CAST(a.cluster AS INT) AS cluster,
-              FLOOR((list_cosine_similarity(CAST(b.embedding AS DOUBLE[]), probe.p))
-                * 10000 + 0.5) / 10000 AS cos
-            FROM base b JOIN assign a ON a.vec_id = b.vec_id, probe
-            WHERE a.cluster IN (SELECT cid FROM routed)
+    Some(s"""WITH ${routedCtes("base", "b", "vec_id % 10 <> 0")}
+            ${servedSql("base", "b")}
             ORDER BY cos DESC, b.vec_id LIMIT 10"""))
 
   /** Day-2 of the IVF-index loop — index MAINTENANCE via per-PARTITION
@@ -490,20 +482,12 @@ object IvfQueries {
     * ingest; re-clustering per append would re-partition the index). */
   private def ivfCentsOf(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    broadcast(Tables(spark, dir, "embeddings").filter(col("vec_id") < 10)
-      .select(col("vec_id").as("cid"), col("embedding").as("cemb")))
+    centroids(Tables(spark, dir, "embeddings"))
 
   /** Nearest-centroid assignment of `rel` under the ingest model. */
   private def ivfAssigned(rel: org.apache.spark.sql.DataFrame,
-      cents: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val byVec = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("cid"))
-    rel.crossJoin(cents)
-      .select(col("vec_id"), col("embedding"), col("cid"),
-        VectorOps.cosine(col("embedding"), col("cemb")).as("ccos"))
-      .withColumn("rn", row_number().over(byVec)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"), col("cid").cast("int").as("cluster"))
-  }
+      cents: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    nearestCentroid(rel, cents, col("cid").cast("int"), "embedding")
 
   /** Day 0 of a grown IVF store: `assigned` lands as vintage=base of a
     * (vintage, cluster)-partitioned table. */
@@ -574,48 +558,11 @@ object IvfQueries {
     (spark, dir) => {
       val sT = ensureIvfStore(spark, dir)
       val e = Tables(spark, dir, "embeddings")
-      val cents = ivfCentsOf(spark, dir)
-      val routedIds = e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("p")).crossJoin(cents)
-        .select(col("cid"), VectorOps.cosine(col("p"), col("cemb")).as("ccos"))
-        .orderBy(col("ccos").desc, col("cid")).limit(2)
-        .collect().map(_.getAs[Number](0).intValue).toSeq
-      val probe = broadcast(e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("p")))
-      val pruned = spark.table(sT)
-        .filter(if (routedIds.isEmpty) lit(false)
-                else col("cluster").isin(routedIds: _*))
-      pruned.crossJoin(probe)
-        .select(col("vec_id"), col("cluster").cast("int").as("cluster"),
-          pround(VectorOps.cosine(col("embedding"), col("p")), 4).as("cos"),
-          when(col("vec_id") % 10 === 1, lit("delta1")).otherwise(lit("base")).as("src"))
-        .orderBy(col("cos").desc, col("vec_id"))
-        .limit(10)
+      routedSearch(e, ivfCentsOf(spark, dir))(sT, Seq(vintageSrc(1, "delta1")))
     },
-    Some("""WITH cents AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb
-                           FROM embeddings WHERE vec_id < 10),
-            grown AS (SELECT vec_id, embedding FROM embeddings
-                      WHERE vec_id % 10 <> 0),
-            scored AS (SELECT g.vec_id, c.cid,
-                         list_cosine_similarity(CAST(g.embedding AS DOUBLE[]), c.cemb) AS ccos
-                       FROM grown g CROSS JOIN cents c),
-            assign AS (SELECT vec_id, cid AS cluster FROM (
-                         SELECT vec_id, cid,
-                           row_number() OVER (PARTITION BY vec_id
-                             ORDER BY ccos DESC, cid) AS rn
-                         FROM scored)
-                       WHERE rn = 1),
-            probe AS (SELECT CAST(embedding AS DOUBLE[]) AS p FROM embeddings
-                      WHERE vec_id = 0),
-            routed AS (SELECT c.cid FROM cents c, probe
-                       ORDER BY list_cosine_similarity(probe.p, c.cemb) DESC, c.cid
-                       LIMIT 2)
-            SELECT g.vec_id, CAST(a.cluster AS INT) AS cluster,
-              FLOOR((list_cosine_similarity(CAST(g.embedding AS DOUBLE[]), probe.p))
-                * 10000 + 0.5) / 10000 AS cos,
-              CASE WHEN g.vec_id % 10 = 1 THEN 'delta1' ELSE 'base' END AS src
-            FROM grown g JOIN assign a ON a.vec_id = g.vec_id, probe
-            WHERE a.cluster IN (SELECT cid FROM routed)
+    Some(s"""WITH ${routedCtes("grown", "g", "vec_id % 10 <> 0")}
+            ${servedSql("grown", "g",
+              ", CASE WHEN g.vec_id % 10 = 1 THEN 'delta1' ELSE 'base' END AS src")}
             ORDER BY cos DESC, g.vec_id LIMIT 10"""))
 
   /** ANN REBUILD-POLICY AUDIT (VERDICT r12 task 5): the IVF append
@@ -857,28 +804,11 @@ object IvfQueries {
       val (dT, wh) = ivfDeleteStore(spark, dir)
       val e = Tables(spark, dir, "embeddings")
       val cents = ivfCentsOf(spark, dir)
-      val routedIds = e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("p")).crossJoin(cents)
-        .select(col("cid"), VectorOps.cosine(col("p"), col("cemb")).as("ccos"))
-        .orderBy(col("ccos").desc, col("cid")).limit(2)
-        .collect().map(_.getAs[Number](0).intValue).toSeq
-      val probe = broadcast(e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("p")))
-      def probeDf(t: String, phase: String): org.apache.spark.sql.DataFrame = {
-        val pruned = spark.table(t)
-          .filter(if (routedIds.isEmpty) lit(false)
-                  else col("cluster").isin(routedIds: _*))
-        pruned.crossJoin(probe)
-          .select(col("vec_id"), col("cluster").cast("int").as("cluster"),
-            pround(VectorOps.cosine(col("embedding"), col("p")), 4).as("cos"),
-            when(col("vec_id") % 10 === 1, lit("delta1")).otherwise(lit("base")).as("src"),
-            when(col("vec_id") % 10 === 5, lit(1)).otherwise(lit(0)).cast("int")
-              .as("purge_set"))
-          .orderBy(col("cos").desc, col("vec_id"))
-          .limit(10)
-          .select(lit(phase).as("phase"), col("vec_id"), col("cluster"),
-            col("cos"), col("src"), col("purge_set"))
-      }
+      val search = routedSearch(e, cents)
+      def probeDf(t: String, phase: String): DataFrame =
+        phased(search(t, Seq(vintageSrc(1, "delta1"),
+          when(col("vec_id") % 10 === 5, lit(1)).otherwise(lit(0)).cast("int")
+            .as("purge_set"))), phase)
       StoreOnce(wh) {
         // the delete-private grown store (same recipe as ensureIvfStore)
         createIvfBase(ivfAssigned(e.filter(col("vec_id") % 10 >= 2), cents),
@@ -900,39 +830,10 @@ object IvfQueries {
         .unionAll(probeDf(dT, "post"))
         .orderBy(col("phase"), col("cos").desc, col("vec_id"))
     },
-    Some("""WITH cents AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb
-                           FROM embeddings WHERE vec_id < 10),
-            grown AS (SELECT vec_id, embedding FROM embeddings
-                      WHERE vec_id % 10 <> 0),
-            scored AS (SELECT g.vec_id, c.cid,
-                         list_cosine_similarity(CAST(g.embedding AS DOUBLE[]), c.cemb) AS ccos
-                       FROM grown g CROSS JOIN cents c),
-            assign AS (SELECT vec_id, cid AS cluster FROM (
-                         SELECT vec_id, cid,
-                           row_number() OVER (PARTITION BY vec_id
-                             ORDER BY ccos DESC, cid) AS rn
-                         FROM scored)
-                       WHERE rn = 1),
-            probe AS (SELECT CAST(embedding AS DOUBLE[]) AS p FROM embeddings
-                      WHERE vec_id = 0),
-            routed AS (SELECT c.cid FROM cents c, probe
-                       ORDER BY list_cosine_similarity(probe.p, c.cemb) DESC, c.cid
-                       LIMIT 2),
-            served AS (SELECT g.vec_id, CAST(a.cluster AS INT) AS cluster,
-                         FLOOR((list_cosine_similarity(CAST(g.embedding AS DOUBLE[]), probe.p))
-                           * 10000 + 0.5) / 10000 AS cos,
-                         CASE WHEN g.vec_id % 10 = 1 THEN 'delta1' ELSE 'base' END AS src,
-                         CASE WHEN g.vec_id % 10 = 5 THEN 1 ELSE 0 END AS purge_set
-                       FROM grown g JOIN assign a ON a.vec_id = g.vec_id, probe
-                       WHERE a.cluster IN (SELECT cid FROM routed)),
-            pre AS (SELECT * FROM served ORDER BY cos DESC, vec_id LIMIT 10),
-            post AS (SELECT * FROM served WHERE vec_id % 10 <> 5
-                     ORDER BY cos DESC, vec_id LIMIT 10)
-            SELECT phase, vec_id, cluster, cos, src, purge_set FROM (
-              SELECT 'pre' AS phase, * FROM pre
-              UNION ALL
-              SELECT 'post', * FROM post)
-            ORDER BY phase, cos DESC, vec_id"""))
+    Some(prePostOracle(
+      """, CASE WHEN g.vec_id % 10 = 1 THEN 'delta1' ELSE 'base' END AS src,
+           CASE WHEN g.vec_id % 10 = 5 THEN 1 ELSE 0 END AS purge_set""",
+      "vec_id % 10 <> 5", "vec_id, cluster, cos, src, purge_set")))
 
   /** q_ivf_expire's expire-private store (table, workspace). */
   private[graft] def ivfExpireStore(spark: org.apache.spark.sql.SparkSession,
@@ -981,26 +882,9 @@ object IvfQueries {
       val (eT, wh) = ivfExpireStore(spark, dir)
       val e = Tables(spark, dir, "embeddings")
       val cents = ivfCentsOf(spark, dir)
-      val routedIds = e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("p")).crossJoin(cents)
-        .select(col("cid"), VectorOps.cosine(col("p"), col("cemb")).as("ccos"))
-        .orderBy(col("ccos").desc, col("cid")).limit(2)
-        .collect().map(_.getAs[Number](0).intValue).toSeq
-      val probe = broadcast(e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("p")))
-      def probeDf(phase: String): org.apache.spark.sql.DataFrame = {
-        val pruned = spark.table(eT)
-          .filter(if (routedIds.isEmpty) lit(false)
-                  else col("cluster").isin(routedIds: _*))
-        pruned.crossJoin(probe)
-          .select(col("vec_id"), col("cluster").cast("int").as("cluster"),
-            pround(VectorOps.cosine(col("embedding"), col("p")), 4).as("cos"),
-            when(col("vec_id") % 10 === 1, lit("delta1")).otherwise(lit("base")).as("src"))
-          .orderBy(col("cos").desc, col("vec_id"))
-          .limit(10)
-          .select(lit(phase).as("phase"), col("vec_id"), col("cluster"),
-            col("cos"), col("src"))
-      }
+      val search = routedSearch(e, cents)
+      def probeDf(phase: String): DataFrame =
+        phased(search(eT, Seq(vintageSrc(1, "delta1"))), phase)
       StoreOnce(wh) {
         createIvfBase(ivfAssigned(e.filter(col("vec_id") % 10 >= 2), cents),
           eT, s"$wh/index")
@@ -1014,38 +898,9 @@ object IvfQueries {
         .unionAll(probeDf("post"))
         .orderBy(col("phase"), col("cos").desc, col("vec_id"))
     },
-    Some("""WITH cents AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb
-                           FROM embeddings WHERE vec_id < 10),
-            grown AS (SELECT vec_id, embedding FROM embeddings
-                      WHERE vec_id % 10 <> 0),
-            scored AS (SELECT g.vec_id, c.cid,
-                         list_cosine_similarity(CAST(g.embedding AS DOUBLE[]), c.cemb) AS ccos
-                       FROM grown g CROSS JOIN cents c),
-            assign AS (SELECT vec_id, cid AS cluster FROM (
-                         SELECT vec_id, cid,
-                           row_number() OVER (PARTITION BY vec_id
-                             ORDER BY ccos DESC, cid) AS rn
-                         FROM scored)
-                       WHERE rn = 1),
-            probe AS (SELECT CAST(embedding AS DOUBLE[]) AS p FROM embeddings
-                      WHERE vec_id = 0),
-            routed AS (SELECT c.cid FROM cents c, probe
-                       ORDER BY list_cosine_similarity(probe.p, c.cemb) DESC, c.cid
-                       LIMIT 2),
-            served AS (SELECT g.vec_id, CAST(a.cluster AS INT) AS cluster,
-                         FLOOR((list_cosine_similarity(CAST(g.embedding AS DOUBLE[]), probe.p))
-                           * 10000 + 0.5) / 10000 AS cos,
-                         CASE WHEN g.vec_id % 10 = 1 THEN 'delta1' ELSE 'base' END AS src
-                       FROM grown g JOIN assign a ON a.vec_id = g.vec_id, probe
-                       WHERE a.cluster IN (SELECT cid FROM routed)),
-            pre AS (SELECT * FROM served ORDER BY cos DESC, vec_id LIMIT 10),
-            post AS (SELECT * FROM served WHERE vec_id % 10 = 1
-                     ORDER BY cos DESC, vec_id LIMIT 10)
-            SELECT phase, vec_id, cluster, cos, src FROM (
-              SELECT 'pre' AS phase, * FROM pre
-              UNION ALL
-              SELECT 'post', * FROM post)
-            ORDER BY phase, cos DESC, vec_id"""))
+    Some(prePostOracle(
+      ", CASE WHEN g.vec_id % 10 = 1 THEN 'delta1' ELSE 'base' END AS src",
+      "vec_id % 10 = 1", "vec_id, cluster, cos, src")))
 
   /** q_ivf_lifecycle's ladder-private stores (grown table, compacted
     * table, workspace) — for the per-rung ledger and layout pins. */
@@ -1149,53 +1004,15 @@ object IvfQueries {
         ledger.rung("f_compact", cT, s"$wh/compact")
         ledger.write(s"$wh/ledger.txt")
       }
-      val routedIds = e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("p")).crossJoin(cents)
-        .select(col("cid"), VectorOps.cosine(col("p"), col("cemb")).as("ccos"))
-        .orderBy(col("ccos").desc, col("cid")).limit(2)
-        .collect().map(_.getAs[Number](0).intValue).toSeq
-      val probe = broadcast(e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("p")))
-      def arm(t: String, phase: String): org.apache.spark.sql.DataFrame = {
-        val pruned = spark.table(t)
-          .filter(if (routedIds.isEmpty) lit(false)
-                  else col("cluster").isin(routedIds: _*))
-        pruned.crossJoin(probe)
-          .select(col("vec_id"), col("cluster").cast("int").as("cluster"),
-            pround(VectorOps.cosine(col("embedding"), col("p")), 4).as("cos"),
-            when(col("vec_id") % 10 === 2, lit("delta2")).otherwise(lit("base")).as("src"))
-          .orderBy(col("cos").desc, col("vec_id"))
-          .limit(10)
-          .select(lit(phase).as("phase"), col("vec_id"), col("cluster"),
-            col("cos"), col("src"))
-      }
+      val search = routedSearch(e, cents)
+      def arm(t: String, phase: String): DataFrame =
+        phased(search(t, Seq(vintageSrc(2, "delta2"))), phase)
       arm(cT, "compact").unionAll(arm(lT, "grown"))
         .orderBy(col("phase"), col("cos").desc, col("vec_id"))
     },
-    Some("""WITH cents AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cemb
-                           FROM embeddings WHERE vec_id < 10),
-            grown AS (SELECT vec_id, embedding FROM embeddings
-                      WHERE vec_id % 10 IN (2, 4, 6, 7, 8, 9)),
-            scored AS (SELECT g.vec_id, c.cid,
-                         list_cosine_similarity(CAST(g.embedding AS DOUBLE[]), c.cemb) AS ccos
-                       FROM grown g CROSS JOIN cents c),
-            assign AS (SELECT vec_id, cid AS cluster FROM (
-                         SELECT vec_id, cid,
-                           row_number() OVER (PARTITION BY vec_id
-                             ORDER BY ccos DESC, cid) AS rn
-                         FROM scored)
-                       WHERE rn = 1),
-            probe AS (SELECT CAST(embedding AS DOUBLE[]) AS p FROM embeddings
-                      WHERE vec_id = 0),
-            routed AS (SELECT c.cid FROM cents c, probe
-                       ORDER BY list_cosine_similarity(probe.p, c.cemb) DESC, c.cid
-                       LIMIT 2),
-            served AS (SELECT g.vec_id, CAST(a.cluster AS INT) AS cluster,
-                         FLOOR((list_cosine_similarity(CAST(g.embedding AS DOUBLE[]), probe.p))
-                           * 10000 + 0.5) / 10000 AS cos,
-                         CASE WHEN g.vec_id % 10 = 2 THEN 'delta2' ELSE 'base' END AS src
-                       FROM grown g JOIN assign a ON a.vec_id = g.vec_id, probe
-                       WHERE a.cluster IN (SELECT cid FROM routed)),
+    Some(s"""WITH ${routedCtes("grown", "g", "vec_id % 10 IN (2, 4, 6, 7, 8, 9)")},
+            served AS (${servedSql("grown", "g",
+              ", CASE WHEN g.vec_id % 10 = 2 THEN 'delta2' ELSE 'base' END AS src")}),
             top AS (SELECT * FROM served ORDER BY cos DESC, vec_id LIMIT 10)
             SELECT phase, vec_id, cluster, cos, src FROM (
               SELECT 'compact' AS phase, * FROM top

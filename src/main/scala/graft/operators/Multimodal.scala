@@ -195,16 +195,26 @@ object Multimodal {
       img.getWidth, img.getHeight, img.getColorModel.getNumComponents)
   }
 
+  /** The document ids, spread first: the media codecs are compute-bound
+    * per row, so one input split of the unsplittable single-row-group
+    * source would serialize them. */
+  private def docIds(spark: org.apache.spark.sql.SparkSession, dir: String): Dataset[Long] = {
+    import spark.implicits._
+    Tables.spreadIfUnderSplit(
+      Tables(spark, dir, "documents").select(col("doc_id"))).as[Long]
+  }
+
+  /** One PNG [[MediaRecord]] per document. */
+  private def pngRecords(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Dataset[MediaRecord] =
+    docIds(spark, dir)
+      .mapPartitions(_.map(id => MediaRecord(id, "image", makePng(id))))(
+        Encoders.product[MediaRecord])
+
   private val imageDecode = Q(
     "q_image_decode",
     (spark, dir) => {
-      import spark.implicits._
-      // spread the unsplittable single-row-group source: the codec is
-      // compute-bound per row, so one input split would serialize it
-      val recs = Tables.spreadIfUnderSplit(
-        Tables(spark, dir, "documents").select(col("doc_id"))).as[Long]
-        .mapPartitions(_.map(id => MediaRecord(id, "image", makePng(id))))(
-          Encoders.product[MediaRecord])
+      val recs = pngRecords(spark, dir)
       recs.mapPartitions(_.map { r =>
         val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.data))
         val w = img.getWidth; val h = img.getHeight
@@ -289,11 +299,7 @@ object Multimodal {
   private val audioDecode = Q(
     "q_audio_decode",
     (spark, dir) => {
-      import spark.implicits._
-      // spread the unsplittable single-row-group source: the codec is
-      // compute-bound per row, so one input split would serialize it
-      val recs = Tables.spreadIfUnderSplit(
-        Tables(spark, dir, "documents").select(col("doc_id"))).as[Long]
+      val recs = docIds(spark, dir)
         .mapPartitions(_.map(id => MediaRecord(id, "audio", makeWav(id))))(
           Encoders.product[MediaRecord])
       recs.mapPartitions(_.map { r =>
@@ -342,13 +348,7 @@ object Multimodal {
   private val imageResize = Q(
     "q_image_resize",
     (spark, dir) => {
-      import spark.implicits._
-      // spread the unsplittable single-row-group source: the codec is
-      // compute-bound per row, so one input split would serialize it
-      val recs = Tables.spreadIfUnderSplit(
-        Tables(spark, dir, "documents").select(col("doc_id"))).as[Long]
-        .mapPartitions(_.map(id => MediaRecord(id, "image", makePng(id))))(
-          Encoders.product[MediaRecord])
+      val recs = pngRecords(spark, dir)
       recs.mapPartitions(_.map { r =>
         val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.data))
         val w = img.getWidth; val h = img.getHeight
@@ -446,38 +446,42 @@ object Multimodal {
     bos.toByteArray
   }
 
+  /** Decodes a GIF into each frame's pixel sum (low byte of every RGB
+    * sample) and the frame width and height. */
+  private def gifFrameSums(gif: Array[Byte]): (Array[Long], Int, Int) = {
+    val iis = javax.imageio.ImageIO.createImageInputStream(
+      new java.io.ByteArrayInputStream(gif))
+    val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
+    reader.setInput(iis)
+    val n = reader.getNumImages(true)
+    val fs = new Array[Long](n)
+    var w = 0; var h = 0
+    var f = 0
+    while (f < n) {
+      val img = reader.read(f)
+      w = img.getWidth; h = img.getHeight
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) { fs(f) += img.getRGB(x, y) & 0xff; x += 1 }
+        y += 1
+      }
+      f += 1
+    }
+    reader.dispose()
+    (fs, w, h)
+  }
+
   private val videoFrames = Q(
     "q_video_frames",
     (spark, dir) => {
-      import spark.implicits._
-      // spread the unsplittable single-row-group source: the codec is
-      // compute-bound per row, so one input split would serialize it
-      val recs = Tables.spreadIfUnderSplit(
-        Tables(spark, dir, "documents").select(col("doc_id"))).as[Long]
+      val recs = docIds(spark, dir)
         .mapPartitions(_.map(id => MediaRecord(id, "video", makeGif(id))))(
           Encoders.product[MediaRecord])
       recs.mapPartitions(_.map { r =>
-        val iis = javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(r.data))
-        val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-        reader.setInput(iis)
-        val n = reader.getNumImages(true)
-        var sum = 0L
-        var w = 0; var h = 0
-        var f = 0
-        while (f < n) {
-          val img = reader.read(f)
-          w = img.getWidth; h = img.getHeight
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) { sum += img.getRGB(x, y) & 0xff; x += 1 }
-            y += 1
-          }
-          f += 1
-        }
-        reader.dispose()
-        val mean = math.floor((sum.toDouble / (n.toLong * w * h)) * 10000 + 0.5) / 10000
+        val (fs, w, h) = gifFrameSums(r.data)
+        val n = fs.length
+        val mean = math.floor((fs.sum.toDouble / (n.toLong * w * h)) * 10000 + 0.5) / 10000
         (r.doc_id, n, w, h, mean)
       })(Encoders.product[(Long, Int, Int, Int, Double)])
         .toDF("doc_id", "n_frames", "width", "height", "mean_px")
@@ -523,11 +527,7 @@ object Multimodal {
   private val imagePhash = Q(
     "q_image_phash",
     (spark, dir) => {
-      import spark.implicits._
-      // spread the unsplittable single-row-group source: the codec is
-      // compute-bound per row, so one input split would serialize it
-      val hashes = Tables.spreadIfUnderSplit(
-        Tables(spark, dir, "documents").select(col("doc_id"))).as[Long]
+      val hashes = docIds(spark, dir)
         .mapPartitions(_.map { id =>
           val img = javax.imageio.ImageIO.read(
             new java.io.ByteArrayInputStream(makePng(id)))
@@ -609,11 +609,7 @@ object Multimodal {
   private val audioPhash = Q(
     "q_audio_phash",
     (spark, dir) => {
-      import spark.implicits._
-      // spread the unsplittable single-row-group source: the codec is
-      // compute-bound per row, so one input split would serialize it
-      val hashes = Tables.spreadIfUnderSplit(
-        Tables(spark, dir, "documents").select(col("doc_id"))).as[Long]
+      val hashes = docIds(spark, dir)
         .mapPartitions(_.map { id =>
           val in = new java.io.ByteArrayInputStream(makeWav(id))
           val ais = wavReader match {
@@ -688,32 +684,10 @@ object Multimodal {
   private val videoPhash = Q(
     "q_video_phash",
     (spark, dir) => {
-      import spark.implicits._
-      // spread the unsplittable single-row-group source: the codec is
-      // compute-bound per row, so one input split would serialize it
-      val hashes = Tables.spreadIfUnderSplit(
-        Tables(spark, dir, "documents").select(col("doc_id"))).as[Long]
+      val hashes = docIds(spark, dir)
         .mapPartitions(_.map { id =>
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(makeGif(id)))
-          val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-          reader.setInput(iis)
-          val n = reader.getNumImages(true)
-          val fs = new Array[Long](n)
-          var w = 0; var h = 0
-          var f = 0
-          while (f < n) {
-            val img = reader.read(f)
-            w = img.getWidth; h = img.getHeight
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) { fs(f) += img.getRGB(x, y) & 0xff; x += 1 }
-              y += 1
-            }
-            f += 1
-          }
-          reader.dispose()
+          val (fs, w, h) = gifFrameSums(makeGif(id))
+          val n = fs.length
           var ts = 0L; var j = 0
           while (j < n) { ts += fs(j); j += 1 }
           var hash = 0L

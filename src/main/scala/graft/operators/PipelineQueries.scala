@@ -69,6 +69,37 @@ object PipelineQueries {
     * dedup keep-first → per-source stats. The shape every corpus build
     * runs; each stage is the oracle-checked primitive from its own query.
     */
+  /** Oracle CTEs `t`, `m`, `scored` and `kept`: every document's
+    * doc_id, `col`, text and quality score, and those scoring >= 0.4. */
+  private def keptCtes(col: String): String =
+    s"""${TextQueries.qualityCtes("t", "m", s"doc_id, $col, text", "documents")},
+        scored AS (SELECT doc_id, $col, text,
+                     ${TextQueries.qualityScoreSql} AS score
+                   FROM m),
+        kept AS (SELECT * FROM scored WHERE score >= 0.4)"""
+
+  /** Oracle CTE `name`: the `cols` of the first doc (by doc_id) of each
+    * content hash in `from`. */
+  private def firstByHashCte(name: String, cols: String, from: String): String =
+    s"""$name AS (SELECT $cols FROM (
+          SELECT $cols,
+            row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
+          FROM $from)
+        WHERE rn = 1)"""
+
+  /** Oracle CTEs (under WITH RECURSIVE) `cand`, the minhash near-dup
+    * pairs of `rel`, and `cc`, each paired doc's connected component
+    * (its smallest member). */
+  private def nearDupComponentsCtes(rel: String): String =
+    s"""${DedupQueries.minhashCandCteFrom(rel)},
+        cc_edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
+                     UNION ALL SELECT doc_b, doc_a FROM cand),
+        walk(node, lbl) AS (
+          SELECT DISTINCT src, src FROM cc_edges
+          UNION
+          SELECT e.dst, w.lbl FROM walk w JOIN cc_edges e ON e.src = w.node),
+        cc AS (SELECT node, MIN(lbl) AS component FROM walk GROUP BY node)"""
+
   private val cleanPipeline = Q(
     "q_clean_pipeline",
     (spark, dir) => {
@@ -84,29 +115,8 @@ object PipelineQueries {
         .agg(count(lit(1)).as("n_docs"), pround(avg(col("score")), 4).as("avg_score"))
         .orderBy(col("source"))
     },
-    Some("""WITH t AS (SELECT doc_id, source, text,
-                    list_filter(string_split(text, ' '), w -> w <> '') AS ws
-                  FROM documents),
-            m AS (SELECT doc_id, source, text,
-                    CAST(len(ws) AS DOUBLE) AS n_tok,
-                    CASE WHEN len(ws) = 0 THEN 0.0
-                         ELSE CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE)
-                              / CAST(len(ws) AS DOUBLE) END AS avg_len,
-                    CASE WHEN len(ws) = 0 THEN 0.0
-                         ELSE CAST(len(list_filter(ws, w -> w IN
-                           ('the','a','of','and','to','in','is','on','for','with'))) AS DOUBLE)
-                           / CAST(len(ws) AS DOUBLE) END AS ratio
-                  FROM t),
-            scored AS (SELECT doc_id, source, text,
-                         LEAST(n_tok / 100.0, 1.0) * 0.4 + ratio * 0.3
-                           + LEAST(avg_len / 8.0, 1.0) * 0.3 AS score
-                       FROM m),
-            kept AS (SELECT * FROM scored WHERE score >= 0.4),
-            dedup AS (SELECT doc_id, source, score FROM (
-                        SELECT doc_id, source, score,
-                          row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-                        FROM kept)
-                      WHERE rn = 1)
+    Some(s"""WITH ${keptCtes("source")},
+            ${firstByHashCte("dedup", "doc_id, source, score", "kept")}
             SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
               FLOOR((AVG(score)) * 10000 + 0.5) / 10000 AS avg_score
             FROM dedup GROUP BY source ORDER BY source"""))
@@ -142,37 +152,9 @@ object PipelineQueries {
         .orderBy(col("lang"))
     },
     Some(s"""WITH RECURSIVE
-             t AS (SELECT doc_id, lang, text,
-                     list_filter(string_split(text, ' '), w -> w <> '') AS ws
-                   FROM documents),
-             m AS (SELECT doc_id, lang, text,
-                     CAST(len(ws) AS DOUBLE) AS n_tok,
-                     CASE WHEN len(ws) = 0 THEN 0.0
-                          ELSE CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE)
-                               / CAST(len(ws) AS DOUBLE) END AS avg_len,
-                     CASE WHEN len(ws) = 0 THEN 0.0
-                          ELSE CAST(len(list_filter(ws, w -> w IN
-                            ('the','a','of','and','to','in','is','on','for','with'))) AS DOUBLE)
-                            / CAST(len(ws) AS DOUBLE) END AS ratio
-                   FROM t),
-             scored AS (SELECT doc_id, lang, text,
-                          LEAST(n_tok / 100.0, 1.0) * 0.4 + ratio * 0.3
-                            + LEAST(avg_len / 8.0, 1.0) * 0.3 AS score
-                        FROM m),
-             kept AS (SELECT * FROM scored WHERE score >= 0.4),
-             exact AS (SELECT doc_id, lang, text, score FROM (
-                         SELECT doc_id, lang, text, score,
-                           row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-                         FROM kept)
-                       WHERE rn = 1),
-             ${DedupQueries.minhashCandCteFrom("exact")},
-             cc_edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-                          UNION ALL SELECT doc_b, doc_a FROM cand),
-             walk(node, lbl) AS (
-               SELECT DISTINCT src, src FROM cc_edges
-               UNION
-               SELECT e.dst, w.lbl FROM walk w JOIN cc_edges e ON e.src = w.node),
-             cc AS (SELECT node, MIN(lbl) AS component FROM walk GROUP BY node),
+             ${keptCtes("lang")},
+             ${firstByHashCte("exact", "doc_id, lang, text, score", "kept")},
+             ${nearDupComponentsCtes("exact")},
              final AS (SELECT * FROM exact
                        WHERE doc_id NOT IN (SELECT node FROM cc WHERE node <> component))
              SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -416,6 +398,49 @@ object PipelineQueries {
       .unionAll(c(dExact, "3_exact")).unionAll(c(dNear, "4_near"))
   }
 
+  /** Oracle replay of the corpus stores' ingest over the base docs
+    * (doc_id ≢ 0 mod 10): quality `kept`, hash-deduped `exact`, the
+    * near-dup-canonical `canon` (band store source) and `hstore`, the
+    * content-hash store. */
+  private val baseIngestCtes =
+    s"""${TextQueries.qualityCtes("t", "m", "doc_id, text", "documents WHERE doc_id % 10 <> 0")},
+        kept AS (SELECT doc_id, text FROM m
+                 WHERE ${TextQueries.qualityScoreSql} >= 0.4),
+        ${firstByHashCte("exact", "doc_id, text", "kept")},
+        ${nearDupComponentsCtes("exact")},
+        canon AS (SELECT doc_id, text FROM exact
+                  WHERE doc_id NOT IN (SELECT node FROM cc WHERE node <> component)),
+        hstore AS (SELECT DISTINCT md5(text) AS h FROM exact)"""
+
+  /** Oracle CTEs of tonight's delta (doc_id ≡ 0 mod 10) through the
+    * quality filter: `dkept`. */
+  private val deltaKeptCtes =
+    s"""${TextQueries.qualityCtes("dt", "dmet", "doc_id, text", "documents WHERE doc_id % 10 = 0")},
+        dkept AS (SELECT doc_id, text FROM dmet
+                  WHERE ${TextQueries.qualityScoreSql} >= 0.4)"""
+
+  /** Oracle CTE `name`: the `dkept` docs whose hash is absent from
+    * `hstore`, deduped by content hash. */
+  private def deltaExactCte(name: String, hstore: String): String =
+    firstByHashCte(name, "doc_id, text",
+      s"dkept WHERE md5(text) NOT IN (SELECT h FROM $hstore)")
+
+  /** Oracle CTE `name`: the delta docs of `${d}bands` that match a store
+    * doc of `${s}bands`, or an earlier delta doc, on >= 8 of 16 minhash
+    * rows in a shared band. */
+  private def nearDropCte(name: String, d: String, s: String): String = {
+    val mm = (0 until 16).map(i =>
+      s"CASE WHEN $d.mh$i = $s.mh$i THEN 1 ELSE 0 END").mkString(" + ")
+    s"""$name AS (SELECT DISTINCT $d.doc_id
+                FROM ${d}bands $d JOIN ${s}bands $s ON $d.bandkey = $s.bandkey
+                WHERE $mm >= 8
+                UNION
+                SELECT $d.doc_id
+                FROM ${d}bands $d JOIN ${d}bands $s
+                  ON $d.bandkey = $s.bandkey AND $s.doc_id < $d.doc_id
+                WHERE $mm >= 8)"""
+  }
+
   private val corpusIncremental = Q(
     "q_corpus_incremental",
     (spark, dir) => {
@@ -423,74 +448,13 @@ object PipelineQueries {
       deltaFunnel(spark, dir, hT, spark.table(bT), deltaPrep(spark, dir), None)
         .orderBy(col("stage"))
     },
-    Some {
-      val mmE = (0 until 16).map(i =>
-        s"CASE WHEN d.mh$i = s.mh$i THEN 1 ELSE 0 END").mkString(" + ")
-      s"""WITH RECURSIVE
-          t AS (SELECT doc_id, text,
-                  list_filter(string_split(text, ' '), w -> w <> '') AS ws
-                FROM documents WHERE doc_id % 10 <> 0),
-          m AS (SELECT doc_id, text,
-                  CAST(len(ws) AS DOUBLE) AS n_tok,
-                  CASE WHEN len(ws) = 0 THEN 0.0
-                       ELSE CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE)
-                            / CAST(len(ws) AS DOUBLE) END AS avg_len,
-                  CASE WHEN len(ws) = 0 THEN 0.0
-                       ELSE CAST(len(list_filter(ws, w -> w IN
-                         ('the','a','of','and','to','in','is','on','for','with'))) AS DOUBLE)
-                         / CAST(len(ws) AS DOUBLE) END AS ratio
-                FROM t),
-          kept AS (SELECT doc_id, text FROM m
-                   WHERE LEAST(n_tok / 100.0, 1.0) * 0.4 + ratio * 0.3
-                     + LEAST(avg_len / 8.0, 1.0) * 0.3 >= 0.4),
-          exact AS (SELECT doc_id, text FROM (
-                      SELECT doc_id, text,
-                        row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-                      FROM kept)
-                    WHERE rn = 1),
-          ${DedupQueries.minhashCandCteFrom("exact")},
-          cc_edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-                       UNION ALL SELECT doc_b, doc_a FROM cand),
-          walk(node, lbl) AS (
-            SELECT DISTINCT src, src FROM cc_edges
-            UNION
-            SELECT e.dst, w.lbl FROM walk w JOIN cc_edges e ON e.src = w.node),
-          cc AS (SELECT node, MIN(lbl) AS component FROM walk GROUP BY node),
-          canon AS (SELECT doc_id, text FROM exact
-                    WHERE doc_id NOT IN (SELECT node FROM cc WHERE node <> component)),
-          hstore AS (SELECT DISTINCT md5(text) AS h FROM exact),
+    Some(s"""WITH RECURSIVE
+          $baseIngestCtes,
           ${DedupQueries.bandKeyedCteFrom("canon", "s")},
-          dt AS (SELECT doc_id, text,
-                   list_filter(string_split(text, ' '), w -> w <> '') AS ws
-                 FROM documents WHERE doc_id % 10 = 0),
-          dmet AS (SELECT doc_id, text,
-                     CAST(len(ws) AS DOUBLE) AS n_tok,
-                     CASE WHEN len(ws) = 0 THEN 0.0
-                          ELSE CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE)
-                               / CAST(len(ws) AS DOUBLE) END AS avg_len,
-                     CASE WHEN len(ws) = 0 THEN 0.0
-                          ELSE CAST(len(list_filter(ws, w -> w IN
-                            ('the','a','of','and','to','in','is','on','for','with'))) AS DOUBLE)
-                            / CAST(len(ws) AS DOUBLE) END AS ratio
-                   FROM dt),
-          dkept AS (SELECT doc_id, text FROM dmet
-                    WHERE LEAST(n_tok / 100.0, 1.0) * 0.4 + ratio * 0.3
-                      + LEAST(avg_len / 8.0, 1.0) * 0.3 >= 0.4),
-          dexact AS (SELECT doc_id, text FROM (
-                       SELECT doc_id, text,
-                         row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-                       FROM dkept
-                       WHERE md5(text) NOT IN (SELECT h FROM hstore))
-                     WHERE rn = 1),
+          $deltaKeptCtes,
+          ${deltaExactCte("dexact", "hstore")},
           ${DedupQueries.bandKeyedCteFrom("dexact", "d")},
-          ndrop AS (SELECT DISTINCT d.doc_id
-                    FROM dbands d JOIN sbands s ON d.bandkey = s.bandkey
-                    WHERE $mmE >= 8
-                    UNION
-                    SELECT d.doc_id
-                    FROM dbands d JOIN dbands s
-                      ON d.bandkey = s.bandkey AND s.doc_id < d.doc_id
-                    WHERE $mmE >= 8),
+          ${nearDropCte("ndrop", "d", "s")},
           dnear AS (SELECT doc_id FROM dexact
                     WHERE doc_id NOT IN (SELECT doc_id FROM ndrop))
           SELECT stage, n_docs FROM (
@@ -499,8 +463,7 @@ object PipelineQueries {
             UNION ALL SELECT '2_quality', CAST(COUNT(*) AS BIGINT) FROM dkept
             UNION ALL SELECT '3_exact', CAST(COUNT(*) AS BIGINT) FROM dexact
             UNION ALL SELECT '4_near', CAST(COUNT(*) AS BIGINT) FROM dnear)
-          ORDER BY stage"""
-    })
+          ORDER BY stage"""))
 
   /** q_corpus_delete's post-purge catalog tables: the refcount-purged
     * hash store and the band-store TOMBSTONE set (purged doc ids — the
@@ -601,44 +564,8 @@ object PipelineQueries {
           .select(lit("post").as("phase"), col("stage"), col("n_docs")))
         .orderBy(col("phase"), col("stage"))
     },
-    Some {
-      val mmE = (0 until 16).map(i =>
-        s"CASE WHEN d.mh$i = s.mh$i THEN 1 ELSE 0 END").mkString(" + ")
-      val mmE2 = (0 until 16).map(i =>
-        s"CASE WHEN d2.mh$i = s2.mh$i THEN 1 ELSE 0 END").mkString(" + ")
-      s"""WITH RECURSIVE
-          t AS (SELECT doc_id, text,
-                  list_filter(string_split(text, ' '), w -> w <> '') AS ws
-                FROM documents WHERE doc_id % 10 <> 0),
-          m AS (SELECT doc_id, text,
-                  CAST(len(ws) AS DOUBLE) AS n_tok,
-                  CASE WHEN len(ws) = 0 THEN 0.0
-                       ELSE CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE)
-                            / CAST(len(ws) AS DOUBLE) END AS avg_len,
-                  CASE WHEN len(ws) = 0 THEN 0.0
-                       ELSE CAST(len(list_filter(ws, w -> w IN
-                         ('the','a','of','and','to','in','is','on','for','with'))) AS DOUBLE)
-                         / CAST(len(ws) AS DOUBLE) END AS ratio
-                FROM t),
-          kept AS (SELECT doc_id, text FROM m
-                   WHERE LEAST(n_tok / 100.0, 1.0) * 0.4 + ratio * 0.3
-                     + LEAST(avg_len / 8.0, 1.0) * 0.3 >= 0.4),
-          exact AS (SELECT doc_id, text FROM (
-                      SELECT doc_id, text,
-                        row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-                      FROM kept)
-                    WHERE rn = 1),
-          ${DedupQueries.minhashCandCteFrom("exact")},
-          cc_edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-                       UNION ALL SELECT doc_b, doc_a FROM cand),
-          walk(node, lbl) AS (
-            SELECT DISTINCT src, src FROM cc_edges
-            UNION
-            SELECT e.dst, w.lbl FROM walk w JOIN cc_edges e ON e.src = w.node),
-          cc AS (SELECT node, MIN(lbl) AS component FROM walk GROUP BY node),
-          canon AS (SELECT doc_id, text FROM exact
-                    WHERE doc_id NOT IN (SELECT node FROM cc WHERE node <> component)),
-          hstore AS (SELECT DISTINCT md5(text) AS h FROM exact),
+    Some(s"""WITH RECURSIVE
+          $baseIngestCtes,
           orphanh AS (SELECT DISTINCT md5(text) AS h FROM kept
                       WHERE doc_id % 10 = 5
                         AND md5(text) NOT IN (SELECT md5(text) FROM kept
@@ -647,52 +574,13 @@ object PipelineQueries {
           canon2 AS (SELECT doc_id, text FROM canon WHERE doc_id % 10 <> 5),
           ${DedupQueries.bandKeyedCteFrom("canon", "s")},
           ${DedupQueries.bandKeyedCteFrom("canon2", "s2")},
-          dt AS (SELECT doc_id, text,
-                   list_filter(string_split(text, ' '), w -> w <> '') AS ws
-                 FROM documents WHERE doc_id % 10 = 0),
-          dmet AS (SELECT doc_id, text,
-                     CAST(len(ws) AS DOUBLE) AS n_tok,
-                     CASE WHEN len(ws) = 0 THEN 0.0
-                          ELSE CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE)
-                               / CAST(len(ws) AS DOUBLE) END AS avg_len,
-                     CASE WHEN len(ws) = 0 THEN 0.0
-                          ELSE CAST(len(list_filter(ws, w -> w IN
-                            ('the','a','of','and','to','in','is','on','for','with'))) AS DOUBLE)
-                            / CAST(len(ws) AS DOUBLE) END AS ratio
-                   FROM dt),
-          dkept AS (SELECT doc_id, text FROM dmet
-                    WHERE LEAST(n_tok / 100.0, 1.0) * 0.4 + ratio * 0.3
-                      + LEAST(avg_len / 8.0, 1.0) * 0.3 >= 0.4),
-          dexact AS (SELECT doc_id, text FROM (
-                       SELECT doc_id, text,
-                         row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-                       FROM dkept
-                       WHERE md5(text) NOT IN (SELECT h FROM hstore))
-                     WHERE rn = 1),
-          dexact2 AS (SELECT doc_id, text FROM (
-                        SELECT doc_id, text,
-                          row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-                        FROM dkept
-                        WHERE md5(text) NOT IN (SELECT h FROM hstore2))
-                      WHERE rn = 1),
+          $deltaKeptCtes,
+          ${deltaExactCte("dexact", "hstore")},
+          ${deltaExactCte("dexact2", "hstore2")},
           ${DedupQueries.bandKeyedCteFrom("dexact", "d")},
           ${DedupQueries.bandKeyedCteFrom("dexact2", "d2")},
-          ndrop AS (SELECT DISTINCT d.doc_id
-                    FROM dbands d JOIN sbands s ON d.bandkey = s.bandkey
-                    WHERE $mmE >= 8
-                    UNION
-                    SELECT d.doc_id
-                    FROM dbands d JOIN dbands s
-                      ON d.bandkey = s.bandkey AND s.doc_id < d.doc_id
-                    WHERE $mmE >= 8),
-          ndrop2 AS (SELECT DISTINCT d2.doc_id
-                     FROM d2bands d2 JOIN s2bands s2 ON d2.bandkey = s2.bandkey
-                     WHERE $mmE2 >= 8
-                     UNION
-                     SELECT d2.doc_id
-                     FROM d2bands d2 JOIN d2bands s2
-                       ON d2.bandkey = s2.bandkey AND s2.doc_id < d2.doc_id
-                     WHERE $mmE2 >= 8),
+          ${nearDropCte("ndrop", "d", "s")},
+          ${nearDropCte("ndrop2", "d2", "s2")},
           dnear AS (SELECT doc_id FROM dexact
                     WHERE doc_id NOT IN (SELECT doc_id FROM ndrop)),
           dnear2 AS (SELECT doc_id FROM dexact2
@@ -709,8 +597,7 @@ object PipelineQueries {
             UNION ALL SELECT 'post', '2_quality', CAST(COUNT(*) AS BIGINT) FROM dkept
             UNION ALL SELECT 'post', '3_exact', CAST(COUNT(*) AS BIGINT) FROM dexact2
             UNION ALL SELECT 'post', '4_near', CAST(COUNT(*) AS BIGINT) FROM dnear2)
-          ORDER BY phase, stage"""
-    })
+          ORDER BY phase, stage"""))
 
   /** q_corpus_refcount's three store-rung catalog tables. */
   private[graft] def corpusRefcountTables(spark: org.apache.spark.sql.SparkSession,
@@ -756,17 +643,9 @@ object PipelineQueries {
                 FROM documents WHERE $where),
           $alias AS (SELECT doc_id, md5(text) AS h FROM (
                 SELECT doc_id, text,
-                  CAST(len(ws) AS DOUBLE) AS n_tok,
-                  CASE WHEN len(ws) = 0 THEN 0.0
-                       ELSE CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE)
-                            / CAST(len(ws) AS DOUBLE) END AS avg_len,
-                  CASE WHEN len(ws) = 0 THEN 0.0
-                       ELSE CAST(len(list_filter(ws, w -> w IN
-                         ('the','a','of','and','to','in','is','on','for','with'))) AS DOUBLE)
-                         / CAST(len(ws) AS DOUBLE) END AS ratio
+                  ${TextQueries.qualityMetricsSql}
                 FROM ${alias}_t)
-              WHERE LEAST(n_tok / 100.0, 1.0) * 0.4 + ratio * 0.3
-                + LEAST(avg_len / 8.0, 1.0) * 0.3 >= 0.4)"""
+              WHERE ${TextQueries.qualityScoreSql} >= 0.4)"""
 
   /** REFCOUNTED CONTENT-HASH STORE (VERDICT r14 task 2): q_corpus_delete's
     * orphan rule — "a hash leaves the store only with its LAST holder" —

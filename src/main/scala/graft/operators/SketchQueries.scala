@@ -36,6 +36,148 @@ object SketchQueries {
     */
   private val HllC = 4.2399330249068963e20
 
+  /** Orders keyed by customer (`k`) and split into base/delta vintages at
+    * the midpoint of their date span — the q_incremental_agg split. */
+  private def vintageKeys(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
+    val o = Tables(spark, dir, "orders")
+    val span = broadcast(o.agg(min(col("o_orderdate")).as("dmin"),
+      max(col("o_orderdate")).as("dmax")))
+    o.crossJoin(span)
+      .select(col("o_custkey").as("k"),
+        when(datediff(col("o_orderdate"), col("dmin")) * 2 <=
+          datediff(col("dmax"), col("dmin")), lit("base")).otherwise(lit("delta"))
+          .as("vintage"))
+  }
+
+  /** Oracle twin of [[vintageKeys]]: CTEs `span` and `tagged`. */
+  private val vintageCtes =
+    """span AS (SELECT MIN(o_orderdate) AS dmin, MAX(o_orderdate) AS dmax
+                FROM orders),
+       tagged AS (SELECT o_custkey AS k,
+                    CASE WHEN (CAST(o_orderdate AS DATE) - CAST(span.dmin AS DATE)) * 2 <=
+                              (CAST(span.dmax AS DATE) - CAST(span.dmin AS DATE))
+                         THEN 'base' ELSE 'delta' END AS vintage
+                  FROM orders, span)"""
+
+  /** The theta sketches' inputs: the [[vintageKeys]] rows with their
+    * key hash `h` (cached), and each vintage's bottom-128 distinct
+    * hashes (base, delta; cached). */
+  private def bottomKSamples(spark: org.apache.spark.sql.SparkSession,
+      dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val keyed = graft.Caches.persisted(
+      vintageKeys(spark, dir).select(col("vintage"), col("k"),
+        Portable.hash60(col("k").cast("string")).as("h")))
+    def sample(v: String): DataFrame =
+      keyed.filter(col("vintage") === v).select(col("h")).distinct()
+        .orderBy(col("h")).limit(128)
+    (keyed, graft.Caches.persisted(sample("base")), graft.Caches.persisted(sample("delta")))
+  }
+
+  /** Oracle twin of [[bottomKSamples]]: `keyed`, `sa` and `sb`. */
+  private val bottomKCtes =
+    s"""$vintageCtes,
+        keyed AS (SELECT vintage, k,
+                    CAST('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 15) AS BIGINT) AS h
+                  FROM tagged),
+        sa AS (SELECT DISTINCT h FROM keyed WHERE vintage = 'base'
+               ORDER BY h LIMIT 128),
+        sb AS (SELECT DISTINCT h FROM keyed WHERE vintage = 'delta'
+               ORDER BY h LIMIT 128)"""
+
+  /** Each part's HLL estimate (from its register sum `z` and empty
+    * register count `v`, small-range corrected) beside its exact count,
+    * with the error in exact ppm. */
+  private def hllReport(ests: DataFrame, exacts: DataFrame): DataFrame = {
+    val raw = lit(HllC) / col("z").cast("double")
+    val corrected = when(raw <= 640.0 && col("v") > 0,
+      lit(256.0) * log(lit(256.0) / col("v").cast("double"))).otherwise(raw)
+    ests.join(exacts, "part")
+      .select(col("part"), col("exact"),
+        floor(corrected + 0.5d).cast("long").as("hll_est"))
+      .select(col("part"), col("exact"), col("hll_est"),
+        when(col("exact") === 0, lit(null).cast("long"))
+          .otherwise(expr("abs(hll_est - exact) * 1000000 div exact")).as("err_ppm"))
+      .orderBy(col("part"))
+  }
+
+  /** Oracle CTE `parts`: each `pl` part's register sum `z` and empty
+    * register count `v` from its filled-register stats `pr`. */
+  private val hllPartsCte =
+    s"""parts AS (SELECT pl.part,
+                    COALESCE(pr.zp, 0) + (256 - COALESCE(pr.nf, 0)) * $Pow53 AS z,
+                    256 - COALESCE(pr.nf, 0) AS v
+                  FROM pl LEFT JOIN pr ON pr.part = pl.part)"""
+
+  /** Oracle twin of [[hllReport]] over `parts` and the exact counts `ex`. */
+  private val hllReportSql =
+    s"""est AS (SELECT p.part,
+                  CASE WHEN CAST($HllC AS DOUBLE) / CAST(z AS DOUBLE) <= 640.0
+                            AND v > 0
+                       THEN 256.0 * ln(256.0 / CAST(v AS DOUBLE))
+                       ELSE CAST($HllC AS DOUBLE) / CAST(z AS DOUBLE)
+                  END AS e
+                FROM parts p)
+        SELECT ex.part, ex.exact,
+          CAST(FLOOR(est.e + 0.5) AS BIGINT) AS hll_est,
+          CASE WHEN ex.exact = 0 THEN NULL
+               ELSE CAST(ABS(CAST(FLOOR(est.e + 0.5) AS BIGINT) - ex.exact)
+                 * 1000000 // ex.exact AS BIGINT)
+          END AS err_ppm
+        FROM ex JOIN est ON est.part = ex.part
+        ORDER BY ex.part"""
+
+  /** Probes tonight's (doc_id ≡ 0 mod 10) content hashes against a
+    * filter's `bits` and censuses the hits against the member hashes
+    * `hashes`: probes, bloom_hits, true_dups, false_pos. */
+  private def bloomProbeCounts(positioned: DataFrame, bits: DataFrame,
+      hashes: DataFrame): DataFrame = {
+    // dedup (ch, bit) BEFORE the probe join (ADVICE r11): repeated
+    // delta content hashes would otherwise double the per-ch matched
+    // count (matched = 8 for a genuine duplicate pair ≠ 4 → silent
+    // miss), and a doc whose 4 carved positions collide would need
+    // fewer than 4 distinct matches; the hit test compares distinct
+    // matched bits against the ch's own distinct-bit count
+    val deltaPairs = positioned.filter(col("doc_id") % 10 === 0)
+      .select(col("ch"), col("bit")).distinct()
+    val probeMatch = deltaPairs
+      .join(broadcast(bits.select(col("bit").as("b"))),
+        col("bit") === col("b"), "left")
+      .groupBy(col("ch")).agg(count(col("b")).as("matched"),
+        count(lit(1)).as("need"))
+    val probed = probeMatch
+      .join(hashes.select(col("ch").as("bh")), col("ch") === col("bh"), "left")
+      .select((col("matched") === col("need")).as("hit"), col("bh").isNotNull.as("indeed"))
+    probed.agg(
+      count(lit(1)).cast("bigint").as("probes"),
+      count_if(col("hit")).cast("bigint").as("bloom_hits"),
+      count_if(col("hit") && col("indeed")).cast("bigint").as("true_dups"),
+      count_if(col("hit") && !col("indeed")).cast("bigint").as("false_pos"))
+  }
+
+  /** Oracle twin of [[bloomPositionedOf]]: CTEs `docs`, `hp`, `positioned`. */
+  private val positionedCtes =
+    """docs AS (SELECT doc_id, md5(text) AS ch FROM documents),
+       hp AS (SELECT doc_id, ch,
+                CAST('0x' || substr(md5(ch), 1, 15) AS BIGINT) AS hv
+              FROM docs),
+       positioned AS (SELECT doc_id, ch, (hv >> (12 * i)) & 4095 AS bit
+                      FROM hp, UNNEST(generate_series(0, 3)) AS u(i))"""
+
+  /** Oracle twin of [[bloomProbeCounts]] against the CTEs `bits` and
+    * `hashes` (aliased `ha`). */
+  private def bloomProbeCtes(bits: String, hashes: String, ha: String): String =
+    s"""dpairs AS (SELECT DISTINCT ch, bit FROM positioned WHERE doc_id % 10 = 0),
+        probem AS (SELECT p.ch, COUNT(b.bit) AS matched, COUNT(*) AS need
+                   FROM dpairs p LEFT JOIN $bits b ON b.bit = p.bit
+                   GROUP BY p.ch),
+        probed AS (SELECT pm.matched = pm.need AS hit, $ha.ch IS NOT NULL AS indeed
+                   FROM probem pm LEFT JOIN $hashes $ha ON $ha.ch = pm.ch),
+        counts AS (SELECT CAST(COUNT(*) AS BIGINT) AS probes,
+                     CAST(COUNT(*) FILTER (WHERE hit) AS BIGINT) AS bloom_hits,
+                     CAST(COUNT(*) FILTER (WHERE hit AND indeed) AS BIGINT) AS true_dups,
+                     CAST(COUNT(*) FILTER (WHERE hit AND NOT indeed) AS BIGINT) AS false_pos
+                   FROM probed)"""
+
   /** HyperLogLog distinct-merge across data vintages — incremental
     * COUNT DISTINCT: orders split into base/delta halves by date (the
     * q_incremental_agg split whose naive merge over-counts repeat
@@ -61,17 +203,9 @@ object SketchQueries {
   private val hllMerge = Q(
     "q_hll_merge",
     (spark, dir) => {
-      val o = Tables(spark, dir, "orders")
-      val span = broadcast(o.agg(min(col("o_orderdate")).as("dmin"),
-        max(col("o_orderdate")).as("dmax")))
-      val tagged = o.crossJoin(span)
-        .select(col("o_custkey").as("k"),
-          when(datediff(col("o_orderdate"), col("dmin")) * 2 <=
-            datediff(col("dmax"), col("dmin")), lit("base")).otherwise(lit("delta"))
-            .as("vintage"))
       val keyed = graft.Caches.persisted(
-        tagged.select(col("vintage"), Portable.hash60(col("k").cast("string")).as("h"),
-            col("k"))
+        vintageKeys(spark, dir)
+          .select(col("vintage"), Portable.hash60(col("k").cast("string")).as("h"), col("k"))
           .select(col("vintage"), col("k"), (col("h") % 256).cast("int").as("j"),
             expr("h div 256").as("w"))
           .select(col("vintage"), col("k"), col("j"),
@@ -95,24 +229,9 @@ object SketchQueries {
       val exacts = exact(keyed.filter(col("vintage") === "base"), "base")
         .unionAll(exact(keyed.filter(col("vintage") === "delta"), "delta"))
         .unionAll(exact(keyed, "merged"))
-      val raw = lit(HllC) / col("z").cast("double")
-      val corrected = when(raw <= 640.0 && col("v") > 0,
-        lit(256.0) * log(lit(256.0) / col("v").cast("double"))).otherwise(raw)
-      ests.join(exacts, "part")
-        .select(col("part"), col("exact"),
-          floor(corrected + 0.5d).cast("long").as("hll_est"))
-        .select(col("part"), col("exact"), col("hll_est"),
-          when(col("exact") === 0, lit(null).cast("long"))
-            .otherwise(expr("abs(hll_est - exact) * 1000000 div exact")).as("err_ppm"))
-        .orderBy(col("part"))
+      hllReport(ests, exacts)
     },
-    Some(s"""WITH span AS (SELECT MIN(o_orderdate) AS dmin, MAX(o_orderdate) AS dmax
-                           FROM orders),
-             tagged AS (SELECT o_custkey AS k,
-                          CASE WHEN (CAST(o_orderdate AS DATE) - CAST(span.dmin AS DATE)) * 2 <=
-                                    (CAST(span.dmax AS DATE) - CAST(span.dmin AS DATE))
-                               THEN 'base' ELSE 'delta' END AS vintage
-                        FROM orders, span),
+    Some(s"""WITH $vintageCtes,
              keyed AS (SELECT vintage, k, CAST(h % 256 AS INT) AS j,
                          CASE WHEN h // 256 = 0 THEN 53
                               ELSE 53 - length(bin(h // 256)) END AS r
@@ -128,10 +247,7 @@ object SketchQueries {
                     UNION ALL
                     SELECT 'merged', COUNT(*), SUM(CAST(1 AS BIGINT) << (53 - m))
                     FROM mregs),
-             parts AS (SELECT pl.part,
-                         COALESCE(pr.zp, 0) + (256 - COALESCE(pr.nf, 0)) * $Pow53 AS z,
-                         256 - COALESCE(pr.nf, 0) AS v
-                       FROM pl LEFT JOIN pr ON pr.part = pl.part),
+             $hllPartsCte,
              ex AS (SELECT pl.part, COALESCE(e.exact, 0) AS exact FROM pl
                     LEFT JOIN (SELECT vintage AS part,
                                  CAST(COUNT(DISTINCT k) AS BIGINT) AS exact
@@ -139,21 +255,7 @@ object SketchQueries {
                                UNION ALL
                                SELECT 'merged', CAST(COUNT(DISTINCT k) AS BIGINT)
                                FROM keyed) e ON e.part = pl.part),
-             est AS (SELECT p.part,
-                       CASE WHEN CAST($HllC AS DOUBLE) / CAST(z AS DOUBLE) <= 640.0
-                                 AND v > 0
-                            THEN 256.0 * ln(256.0 / CAST(v AS DOUBLE))
-                            ELSE CAST($HllC AS DOUBLE) / CAST(z AS DOUBLE)
-                       END AS e
-                     FROM parts p)
-             SELECT ex.part, ex.exact,
-               CAST(FLOOR(est.e + 0.5) AS BIGINT) AS hll_est,
-               CASE WHEN ex.exact = 0 THEN NULL
-                    ELSE CAST(ABS(CAST(FLOOR(est.e + 0.5) AS BIGINT) - ex.exact)
-                      * 1000000 // ex.exact AS BIGINT)
-               END AS err_ppm
-             FROM ex JOIN est ON est.part = ex.part
-             ORDER BY ex.part"""))
+             $hllReportSql"""))
 
   /** Bloom-filter membership pre-filter for the incremental pipeline —
     * the store-side gate in front of q_dedup_incremental's exact join
@@ -177,38 +279,11 @@ object SketchQueries {
   private val bloomIncremental = Q(
     "q_bloom_incremental",
     (spark, dir) => {
-      val docs = Tables(spark, dir, "documents")
-        .select(col("doc_id"), md5(col("text")).as("ch"))
-      val hv = Portable.hash60(col("ch"))
-      val positioned = graft.Caches.persisted(
-        docs.select(col("doc_id"), col("ch"), hv.as("hv"))
-          .select(col("doc_id"), col("ch"),
-            explode(array((0 until 4).map(i =>
-              shiftright(col("hv"), 12 * i).bitwiseAND(lit(4095L))): _*)).as("bit")))
+      val positioned = graft.Caches.persisted(bloomPositionedOf(spark, dir))
       val baseP = positioned.filter(col("doc_id") % 10 =!= 0)
-      val deltaP = positioned.filter(col("doc_id") % 10 === 0)
       val baseBits = graft.Caches.persisted(baseP.select(col("bit")).distinct())
       val baseHashes = baseP.select(col("ch")).distinct()
-      // dedup (ch, bit) BEFORE the probe join (ADVICE r11): repeated
-      // delta content hashes would otherwise double the per-ch matched
-      // count (matched = 8 for a genuine duplicate pair ≠ 4 → silent
-      // miss), and a doc whose 4 carved positions collide would need
-      // fewer than 4 distinct matches; the hit test compares distinct
-      // matched bits against the ch's own distinct-bit count
-      val deltaPairs = deltaP.select(col("ch"), col("bit")).distinct()
-      val probeMatch = deltaPairs
-        .join(broadcast(baseBits.select(col("bit").as("b"))),
-          col("bit") === col("b"), "left")
-        .groupBy(col("ch")).agg(count(col("b")).as("matched"),
-          count(lit(1)).as("need"))
-      val probed = probeMatch
-        .join(baseHashes.select(col("ch").as("bh")), col("ch") === col("bh"), "left")
-        .select((col("matched") === col("need")).as("hit"), col("bh").isNotNull.as("indeed"))
-      val counts = probed.agg(
-        count(lit(1)).cast("bigint").as("probes"),
-        count_if(col("hit")).cast("bigint").as("bloom_hits"),
-        count_if(col("hit") && col("indeed")).cast("bigint").as("true_dups"),
-        count_if(col("hit") && !col("indeed")).cast("bigint").as("false_pos"))
+      val counts = bloomProbeCounts(positioned, baseBits, baseHashes)
       val geom = baseBits.agg(count(lit(1)).cast("bigint").as("bits_set"))
         .crossJoin(baseHashes.agg(count(lit(1)).cast("bigint").as("n_base")))
       geom.crossJoin(counts)
@@ -219,25 +294,10 @@ object SketchQueries {
             .otherwise(expr("false_pos * 1000000 div (probes - true_dups)"))
             .as("fpr_ppm"))
     },
-    Some("""WITH docs AS (SELECT doc_id, md5(text) AS ch FROM documents),
-            hp AS (SELECT doc_id, ch,
-                     CAST('0x' || substr(md5(ch), 1, 15) AS BIGINT) AS hv
-                   FROM docs),
-            positioned AS (SELECT doc_id, ch, (hv >> (12 * i)) & 4095 AS bit
-                           FROM hp, UNNEST(generate_series(0, 3)) AS u(i)),
+    Some(s"""WITH $positionedCtes,
             basebits AS (SELECT DISTINCT bit FROM positioned WHERE doc_id % 10 <> 0),
             basehashes AS (SELECT DISTINCT ch FROM positioned WHERE doc_id % 10 <> 0),
-            dpairs AS (SELECT DISTINCT ch, bit FROM positioned WHERE doc_id % 10 = 0),
-            probem AS (SELECT p.ch, COUNT(b.bit) AS matched, COUNT(*) AS need
-                       FROM dpairs p LEFT JOIN basebits b ON b.bit = p.bit
-                       GROUP BY p.ch),
-            probed AS (SELECT pm.matched = pm.need AS hit, bh.ch IS NOT NULL AS indeed
-                       FROM probem pm LEFT JOIN basehashes bh ON bh.ch = pm.ch),
-            counts AS (SELECT CAST(COUNT(*) AS BIGINT) AS probes,
-                         CAST(COUNT(*) FILTER (WHERE hit) AS BIGINT) AS bloom_hits,
-                         CAST(COUNT(*) FILTER (WHERE hit AND indeed) AS BIGINT) AS true_dups,
-                         CAST(COUNT(*) FILTER (WHERE hit AND NOT indeed) AS BIGINT) AS false_pos
-                       FROM probed),
+            ${bloomProbeCtes("basebits", "basehashes", "bh")},
             geom AS (SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM basebits) AS bits_set,
                        (SELECT CAST(COUNT(*) AS BIGINT) FROM basehashes) AS n_base)
             SELECT CAST(4096 AS BIGINT) AS m_bits, CAST(4 AS BIGINT) AS k_hashes,
@@ -687,22 +747,7 @@ object SketchQueries {
   private val thetaSketch = Q(
     "q_theta_sketch",
     (spark, dir) => {
-      val o = Tables(spark, dir, "orders")
-      val span = broadcast(o.agg(min(col("o_orderdate")).as("dmin"),
-        max(col("o_orderdate")).as("dmax")))
-      val tagged = o.crossJoin(span)
-        .select(col("o_custkey").as("k"),
-          when(datediff(col("o_orderdate"), col("dmin")) * 2 <=
-            datediff(col("dmax"), col("dmin")), lit("base")).otherwise(lit("delta"))
-            .as("vintage"))
-      val keyed = graft.Caches.persisted(
-        tagged.select(col("vintage"), col("k"),
-          Portable.hash60(col("k").cast("string")).as("h")))
-      def sample(v: String): DataFrame =
-        keyed.filter(col("vintage") === v).select(col("h")).distinct()
-          .orderBy(col("h")).limit(128)
-      val sa = graft.Caches.persisted(sample("base"))
-      val sb = graft.Caches.persisted(sample("delta"))
+      val (keyed, sa, sb) = bottomKSamples(spark, dir)
       val pow = lit(1152921504606846976L) // 2^60
       // θ per side: the max sampled hash if the sketch is FULL, else 2^60
       def theta(s: DataFrame): DataFrame =
@@ -767,20 +812,7 @@ object SketchQueries {
             .otherwise(expr("abs(est - exact) * 1000000 div exact")).as("err_ppm"))
         .orderBy(col("part"))
     },
-    Some(s"""WITH span AS (SELECT MIN(o_orderdate) AS dmin, MAX(o_orderdate) AS dmax
-                           FROM orders),
-             tagged AS (SELECT o_custkey AS k,
-                          CASE WHEN (CAST(o_orderdate AS DATE) - CAST(span.dmin AS DATE)) * 2 <=
-                                    (CAST(span.dmax AS DATE) - CAST(span.dmin AS DATE))
-                               THEN 'base' ELSE 'delta' END AS vintage
-                        FROM orders, span),
-             keyed AS (SELECT vintage, k,
-                         CAST('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 15) AS BIGINT) AS h
-                       FROM tagged),
-             sa AS (SELECT DISTINCT h FROM keyed WHERE vintage = 'base'
-                    ORDER BY h LIMIT 128),
-             sb AS (SELECT DISTINCT h FROM keyed WHERE vintage = 'delta'
-                    ORDER BY h LIMIT 128),
+    Some(s"""WITH $bottomKCtes,
              su AS (SELECT DISTINCT h FROM (SELECT h FROM sa UNION SELECT h FROM sb)
                     ORDER BY h LIMIT 128),
              ta AS (SELECT COUNT(*) AS n,
@@ -857,23 +889,8 @@ object SketchQueries {
   private val thetaDiff = Q(
     "q_theta_diff",
     (spark, dir) => {
-      val o = Tables(spark, dir, "orders")
-      val span = broadcast(o.agg(min(col("o_orderdate")).as("dmin"),
-        max(col("o_orderdate")).as("dmax")))
-      val tagged = o.crossJoin(span)
-        .select(col("o_custkey").as("k"),
-          when(datediff(col("o_orderdate"), col("dmin")) * 2 <=
-            datediff(col("dmax"), col("dmin")), lit("base")).otherwise(lit("delta"))
-            .as("vintage"))
-      val keyed = graft.Caches.persisted(
-        tagged.select(col("vintage"), col("k"),
-          Portable.hash60(col("k").cast("string")).as("h")))
+      val (keyed, sa, sb) = bottomKSamples(spark, dir)
       val pow = lit(1152921504606846976L)
-      def sample(v: String): DataFrame =
-        keyed.filter(col("vintage") === v).select(col("h")).distinct()
-          .orderBy(col("h")).limit(128)
-      val sa = graft.Caches.persisted(sample("base"))
-      val sb = graft.Caches.persisted(sample("delta"))
       def theta(s: DataFrame): DataFrame =
         s.agg(count(lit(1)).as("n"), coalesce(max(col("h")), pow).as("mx"))
           .select(when(col("n") < 128, pow).otherwise(col("mx")).as("th"))
@@ -904,20 +921,7 @@ object SketchQueries {
             .otherwise(expr("abs(est - exact) * 1000000 div exact")).as("err_ppm"))
         .orderBy(col("part"))
     },
-    Some("""WITH span AS (SELECT MIN(o_orderdate) AS dmin, MAX(o_orderdate) AS dmax
-                          FROM orders),
-            tagged AS (SELECT o_custkey AS k,
-                         CASE WHEN (CAST(o_orderdate AS DATE) - CAST(span.dmin AS DATE)) * 2 <=
-                                   (CAST(span.dmax AS DATE) - CAST(span.dmin AS DATE))
-                              THEN 'base' ELSE 'delta' END AS vintage
-                       FROM orders, span),
-            keyed AS (SELECT vintage, k,
-                        CAST('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 15) AS BIGINT) AS h
-                      FROM tagged),
-            sa AS (SELECT DISTINCT h FROM keyed WHERE vintage = 'base'
-                   ORDER BY h LIMIT 128),
-            sb AS (SELECT DISTINCT h FROM keyed WHERE vintage = 'delta'
-                   ORDER BY h LIMIT 128),
+    Some(s"""WITH $bottomKCtes,
             ta AS (SELECT CASE WHEN COUNT(*) < 128 THEN 1152921504606846976
                           ELSE COALESCE(MAX(h), 1152921504606846976) END AS th FROM sa),
             tb AS (SELECT CASE WHEN COUNT(*) < 128 THEN 1152921504606846976
@@ -1272,16 +1276,7 @@ object SketchQueries {
         .unionAll(exact(o.filter(col("o_orderkey") % 10 =!= 0), "day2"))
         .unionAll(exact(o, "today"))
         .unionAll(exact(o, "full"))
-      val raw = lit(HllC) / col("z").cast("double")
-      val corrected = when(raw <= 640.0 && col("v") > 0,
-        lit(256.0) * log(lit(256.0) / col("v").cast("double"))).otherwise(raw)
-      ests.join(exacts, "part")
-        .select(col("part"), col("exact"),
-          floor(corrected + 0.5d).cast("long").as("hll_est"))
-        .select(col("part"), col("exact"), col("hll_est"),
-          when(col("exact") === 0, lit(null).cast("long"))
-            .otherwise(expr("abs(hll_est - exact) * 1000000 div exact")).as("err_ppm"))
-        .orderBy(col("part"))
+      hllReport(ests, exacts)
     },
     Some(s"""WITH keyed AS (SELECT o_orderkey % 10 AS g, o_custkey AS k,
                               CAST(h % 256 AS INT) AS j,
@@ -1308,10 +1303,7 @@ object SketchQueries {
              pr AS (SELECT part, COUNT(*) AS nf,
                       SUM(CAST(1 AS BIGINT) << (53 - m)) AS zp
                     FROM armregs GROUP BY part),
-             parts AS (SELECT pl.part,
-                         COALESCE(pr.zp, 0) + (256 - COALESCE(pr.nf, 0)) * $Pow53 AS z,
-                         256 - COALESCE(pr.nf, 0) AS v
-                       FROM pl LEFT JOIN pr ON pr.part = pl.part),
+             $hllPartsCte,
              ex AS (SELECT pl.part, COALESCE(e.exact, 0) AS exact FROM pl
                     LEFT JOIN (SELECT 'day1' AS part,
                                  CAST(COUNT(DISTINCT k) AS BIGINT) AS exact
@@ -1325,21 +1317,7 @@ object SketchQueries {
                                UNION ALL
                                SELECT 'full', CAST(COUNT(DISTINCT k) AS BIGINT)
                                FROM keyed) e ON e.part = pl.part),
-             est AS (SELECT p.part,
-                       CASE WHEN CAST($HllC AS DOUBLE) / CAST(z AS DOUBLE) <= 640.0
-                                 AND v > 0
-                            THEN 256.0 * ln(256.0 / CAST(v AS DOUBLE))
-                            ELSE CAST($HllC AS DOUBLE) / CAST(z AS DOUBLE)
-                       END AS e
-                     FROM parts p)
-             SELECT ex.part, ex.exact,
-               CAST(FLOOR(est.e + 0.5) AS BIGINT) AS hll_est,
-               CASE WHEN ex.exact = 0 THEN NULL
-                    ELSE CAST(ABS(CAST(FLOOR(est.e + 0.5) AS BIGINT) - ex.exact)
-                      * 1000000 // ex.exact AS BIGINT)
-               END AS err_ppm
-             FROM ex JOIN est ON est.part = ex.part
-             ORDER BY ex.part"""))
+             $hllReportSql"""))
 
   /** PERSISTED Count-Min counter store + day-2 merge — the frequency
     * twin of q_hll_store (VERDICT r11 task 4, CMS half): the base
@@ -1539,21 +1517,7 @@ object SketchQueries {
       val grownBits = graft.Caches.persisted(store.select(col("bit")).distinct())
       val grownHashes = positioned.filter(col("doc_id") % 10 =!= 0)
         .select(col("ch")).distinct()
-      val deltaPairs = positioned.filter(col("doc_id") % 10 === 0)
-        .select(col("ch"), col("bit")).distinct()
-      val probeMatch = deltaPairs
-        .join(broadcast(grownBits.select(col("bit").as("b"))),
-          col("bit") === col("b"), "left")
-        .groupBy(col("ch")).agg(count(col("b")).as("matched"),
-          count(lit(1)).as("need"))
-      val probed = probeMatch
-        .join(grownHashes.select(col("ch").as("bh")), col("ch") === col("bh"), "left")
-        .select((col("matched") === col("need")).as("hit"), col("bh").isNotNull.as("indeed"))
-      val counts = probed.agg(
-        count(lit(1)).cast("bigint").as("probes"),
-        count_if(col("hit")).cast("bigint").as("bloom_hits"),
-        count_if(col("hit") && col("indeed")).cast("bigint").as("true_dups"),
-        count_if(col("hit") && !col("indeed")).cast("bigint").as("false_pos"))
+      val counts = bloomProbeCounts(positioned, grownBits, grownHashes)
       val geom = store.filter(col("vintage") === "base")
         .agg(count(lit(1)).cast("bigint").as("bits_day1"))
         .crossJoin(grownBits.agg(count(lit(1)).cast("bigint").as("bits_set")))
@@ -1566,28 +1530,13 @@ object SketchQueries {
             .otherwise(expr("false_pos * 1000000 div (probes - true_dups)"))
             .as("fpr_ppm"))
     },
-    Some("""WITH docs AS (SELECT doc_id, md5(text) AS ch FROM documents),
-            hp AS (SELECT doc_id, ch,
-                     CAST('0x' || substr(md5(ch), 1, 15) AS BIGINT) AS hv
-                   FROM docs),
-            positioned AS (SELECT doc_id, ch, (hv >> (12 * i)) & 4095 AS bit
-                           FROM hp, UNNEST(generate_series(0, 3)) AS u(i)),
+    Some(s"""WITH $positionedCtes,
             basebits AS (SELECT DISTINCT bit FROM positioned WHERE doc_id % 10 >= 2),
             d1bits AS (SELECT DISTINCT bit FROM positioned WHERE doc_id % 10 = 1),
             grownbits AS (SELECT DISTINCT bit FROM
               (SELECT bit FROM basebits UNION ALL SELECT bit FROM d1bits)),
             grownhashes AS (SELECT DISTINCT ch FROM positioned WHERE doc_id % 10 <> 0),
-            dpairs AS (SELECT DISTINCT ch, bit FROM positioned WHERE doc_id % 10 = 0),
-            probem AS (SELECT p.ch, COUNT(b.bit) AS matched, COUNT(*) AS need
-                       FROM dpairs p LEFT JOIN grownbits b ON b.bit = p.bit
-                       GROUP BY p.ch),
-            probed AS (SELECT pm.matched = pm.need AS hit, gh.ch IS NOT NULL AS indeed
-                       FROM probem pm LEFT JOIN grownhashes gh ON gh.ch = pm.ch),
-            counts AS (SELECT CAST(COUNT(*) AS BIGINT) AS probes,
-                         CAST(COUNT(*) FILTER (WHERE hit) AS BIGINT) AS bloom_hits,
-                         CAST(COUNT(*) FILTER (WHERE hit AND indeed) AS BIGINT) AS true_dups,
-                         CAST(COUNT(*) FILTER (WHERE hit AND NOT indeed) AS BIGINT) AS false_pos
-                       FROM probed),
+            ${bloomProbeCtes("grownbits", "grownhashes", "gh")},
             geom AS (SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM basebits) AS bits_day1,
                        (SELECT CAST(COUNT(*) AS BIGINT) FROM grownbits) AS bits_set,
                        (SELECT CAST(COUNT(*) AS BIGINT) FROM grownhashes) AS n_keys)

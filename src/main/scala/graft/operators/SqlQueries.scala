@@ -9,7 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * posexplode (the SQL spelling of the reference's emit-many map, with
   * ordinal position). Catalyst plans both entry paths into the same
   * logical algebra, so these also pin that the SQL front-end decorrelates
-  * subqueries into joins rather than per-row re-execution (see PLANS.md).
+  * subqueries into joins rather than per-row re-execution (PlanSpec pins
+  * q_lateral_join's decorrelated plan; `graft.tools.ExplainAll` dumps the
+  * rest).
   */
 object SqlQueries {
 
@@ -129,7 +131,7 @@ object SqlQueries {
 
   /** Correlated LATERAL subquery with ORDER BY + LIMIT: each customer's
     * top-2 orders by price. Catalyst decorrelates the per-row LIMIT into
-    * a ranked window join (no per-customer re-execution — PLANS.md shows
+    * a ranked window join (no per-customer re-execution — PlanSpec pins
     * a single Window + filter, the same plan q_topk_per_group builds by
     * hand), so the lateral spelling costs one shuffle at any scale. The
     * same SQL text runs on both engines. Tiebreak (o_totalprice DESC,

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Caches, Q, Tables}
 import graft.functions.Portable.pround
 import graft.functions.Prefix
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distribution-comparison tests — the nonparametric/statistical leg of a
@@ -136,22 +137,29 @@ object StatsTests {
     * dimension-bounded (≤ |status|·|priority| rows), so the test costs
     * one scan at any scale.
     */
+  /** Every (s, p) cell of the contingency grid of the observed counts
+    * `obs` (s, p, o): observed `o` (0 where absent), expected `e` =
+    * row·col / total, and the total `t`. */
+  private[operators] def contingencyCells(obs: DataFrame): DataFrame = {
+    // cached: marginals, total and the grid join all re-read the tiny
+    // observed relation; released by the harness post-query
+    val o = Caches.persisted(obs)
+    val rt = o.groupBy(col("s")).agg(sum(col("o")).cast("bigint").as("r"))
+    val ct = o.groupBy(col("p")).agg(sum(col("o")).cast("bigint").as("c"))
+    val tot = broadcast(o.agg(sum(col("o")).cast("bigint").as("t")))
+    rt.crossJoin(ct).crossJoin(tot)
+      .join(o, Seq("s", "p"), "left")
+      .select(col("s"), col("p"), coalesce(col("o"), lit(0L)).as("o"),
+        ((col("r") * col("c")).cast("double") / col("t").cast("double")).as("e"),
+        col("t"))
+  }
+
   private val chi2 = Q(
     "q_chi2",
     (spark, dir) => {
-      // cached: marginals, total and the grid join all re-read the tiny
-      // observed relation; released by the harness post-query
-      val obs = Caches.persisted(Tables(spark, dir, "orders")
-        .groupBy(col("o_orderstatus").as("s"), col("o_orderpriority").as("p"))
-        .agg(count(lit(1)).as("o")))
-      val rt = obs.groupBy(col("s")).agg(sum(col("o")).cast("bigint").as("r"))
-      val ct = obs.groupBy(col("p")).agg(sum(col("o")).cast("bigint").as("c"))
-      val tot = broadcast(obs.agg(sum(col("o")).cast("bigint").as("t")))
-      rt.crossJoin(ct).crossJoin(tot)
-        .join(obs, Seq("s", "p"), "left")
-        .select(col("s"), col("p"), coalesce(col("o"), lit(0L)).as("o"),
-          ((col("r") * col("c")).cast("double") / col("t").cast("double")).as("e"),
-          col("t"))
+      contingencyCells(Tables(spark, dir, "orders")
+          .groupBy(col("o_orderstatus").as("s"), col("o_orderpriority").as("p"))
+          .agg(count(lit(1)).as("o")))
         .agg(
           max(col("t")).as("n"),
           ((countDistinct(col("s")) - 1) * (countDistinct(col("p")) - 1))

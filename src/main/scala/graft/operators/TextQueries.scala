@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Caches, Q, Tables}
 import graft.functions.Portable.pround
 import graft.functions.TextOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Text operators over the `documents` table: the reference's flagship
@@ -148,6 +149,35 @@ object TextQueries {
   /** Quality score: blend of token count, stopword ratio and mean token
     * length — the standard cheap pre-filter for LLM training corpora.
     */
+  /** Oracle twin of [[TextOps.qualityScore]]'s metrics over the word list
+    * `ws`: `n_tok`, `avg_len` and `ratio`, the stopword share. */
+  private[operators] val qualityMetricsSql =
+    """CAST(len(ws) AS DOUBLE) AS n_tok,
+       CASE WHEN len(ws) = 0 THEN 0.0
+            ELSE CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE)
+                 / CAST(len(ws) AS DOUBLE) END AS avg_len,
+       CASE WHEN len(ws) = 0 THEN 0.0
+            ELSE CAST(len(list_filter(ws, w -> w IN
+              ('the','a','of','and','to','in','is','on','for','with'))) AS DOUBLE)
+              / CAST(len(ws) AS DOUBLE) END AS ratio"""
+
+  /** Oracle twin of [[TextOps.qualityScore]]'s score over those metrics. */
+  private[operators] val qualityScoreSql =
+    """LEAST(n_tok / 100.0, 1.0) * 0.4 + ratio * 0.3
+         + LEAST(avg_len / 8.0, 1.0) * 0.3"""
+
+  /** Oracle CTEs `t`, the `cols` of `from` with their non-empty words
+    * `ws`, and `m`, the same `cols` (then `mExtra`) with the quality
+    * metrics. */
+  private[operators] def qualityCtes(t: String, m: String, cols: String, from: String,
+      mExtra: String = ""): String =
+    s"""$t AS (SELECT $cols,
+                 list_filter(string_split(text, ' '), w -> w <> '') AS ws
+               FROM $from),
+        $m AS (SELECT $cols, $mExtra
+                 $qualityMetricsSql
+               FROM $t)"""
+
   private val qualityScore = Q(
     "q_quality_score",
     (spark, dir) => {
@@ -157,22 +187,10 @@ object TextQueries {
           pround(avgLen, 4).as("avg_token_len"), pround(score, 4).as("score"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH t AS (SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS ws
-                       FROM documents),
-            m AS (SELECT doc_id,
-                    CAST(len(ws) AS DOUBLE) AS n_tok,
-                    CASE WHEN len(ws) = 0 THEN 0.0
-                         ELSE CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE)
-                              / CAST(len(ws) AS DOUBLE) END AS avg_len,
-                    CASE WHEN len(ws) = 0 THEN 0.0
-                         ELSE CAST(len(list_filter(ws, w -> w IN
-                           ('the','a','of','and','to','in','is','on','for','with'))) AS DOUBLE)
-                           / CAST(len(ws) AS DOUBLE) END AS ratio
-                  FROM t)
+    Some(s"""WITH ${qualityCtes("t", "m", "doc_id", "documents")}
             SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tokens,
               FLOOR((avg_len) * 10000 + 0.5) / 10000 AS avg_token_len,
-              FLOOR((LEAST(n_tok / 100.0, 1.0) * 0.4 + ratio * 0.3
-                    + LEAST(avg_len / 8.0, 1.0) * 0.3) * 10000 + 0.5) / 10000 AS score
+              FLOOR(($qualityScoreSql) * 10000 + 0.5) / 10000 AS score
             FROM m ORDER BY doc_id"""))
 
   /** Document fingerprint: min/max hash over word-3-gram shingles (a
@@ -209,19 +227,26 @@ object TextQueries {
     * (doc, word) / word, then a broadcast-joined scalar N. ln() is IEEE-
     * identical enough across engines that pround(4) is stable.
     */
+  /** Term statistics of `docs`: per-(doc_id, word) counts `tf`, per-doc
+    * token counts `dt`, and per-word document frequencies `df`. */
+  private def termCounts(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val wd = docs.select(col("doc_id"), explode(TextOps.wordsNative(col("text"))).as("word"))
+    val tf = wd.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
+    val dt = wd.groupBy(col("doc_id")).agg(count(lit(1)).as("dt"))
+    // document frequency via the map-side-distinct shingle pass (the
+    // q_inverted_index discipline): the shuffle carries each (doc, word)
+    // posting once — no corpus-wide distinct over raw occurrences
+    val df = docs
+      .select(explode(TextOps.distinctWordNGrams(col("text"), 1)).as("word"))
+      .groupBy(col("word")).agg(count(lit(1)).as("df"))
+    (tf, dt, df)
+  }
+
   private val tfidf = Q(
     "q_tfidf",
     (spark, dir) => {
       val docs = Tables(spark, dir, "documents")
-      val wd = docs.select(col("doc_id"), explode(TextOps.wordsNative(col("text"))).as("word"))
-      val tf = wd.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-      val dt = wd.groupBy(col("doc_id")).agg(count(lit(1)).as("dt"))
-      // document frequency via the map-side-distinct shingle pass (the
-      // q_inverted_index discipline): the shuffle carries each (doc, word)
-      // posting once — no corpus-wide distinct over raw occurrences
-      val df = docs
-        .select(explode(TextOps.distinctWordNGrams(col("text"), 1)).as("word"))
-        .groupBy(col("word")).agg(count(lit(1)).as("df"))
+      val (tf, dt, df) = termCounts(docs)
       val n = docs.select(countDistinct(col("doc_id")).as("n"))
       val scored = tf.join(dt, "doc_id").join(broadcast(df), "word").crossJoin(broadcast(n))
         .select(col("doc_id"), col("word"),
@@ -395,22 +420,43 @@ object TextQueries {
     * before rounding, keeping libm ulp drift inside pround(4). Documents
     * with no bigram (< 2 words) have no likelihood and are not emitted.
     */
+  /** The corpus bigram LM: per-doc (doc_id, w1, w2) counts `dcnt`
+    * (cached — they feed both the LM re-aggregation and the scoring join;
+    * released by the harness's post-query Caches.releaseAll()) and the
+    * conditional probabilities (w1, w2, p). */
+  private def bigramLm(spark: org.apache.spark.sql.SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val docBg = Caches.persisted(Tables(spark, dir, "documents")
+      .select(col("doc_id"), explode(TextOps.wordNGramsAll(col("text"), 2)).as("bg"))
+      .groupBy(col("doc_id"),
+        substring_index(col("bg"), " ", 1).as("w1"),
+        substring_index(col("bg"), " ", -1).as("w2"))
+      .agg(count(lit(1)).as("dcnt")))
+    val lm = docBg.groupBy(col("w1"), col("w2")).agg(sum(col("dcnt")).as("cnt"))
+    val tot = lm.groupBy(col("w1")).agg(sum(col("cnt")).as("tot"))
+    (docBg, lm.join(tot, "w1")
+      .select(col("w1"), col("w2"),
+        (col("cnt").cast("double") / col("tot").cast("double")).as("p")))
+  }
+
+  /** Oracle twin of [[bigramLm]]: CTEs `toks`, `bg`, `dbg`, `lm`, `tot`, `p`. */
+  private val bigramLmCtes =
+    """toks AS (SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS ws
+                FROM documents),
+       bg AS (SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
+              FROM toks, UNNEST(generate_series(1, len(ws) - 1)) AS u(i)
+              WHERE len(ws) >= 2),
+       dbg AS (SELECT doc_id, w1, w2, CAST(COUNT(*) AS BIGINT) AS dcnt
+               FROM bg GROUP BY doc_id, w1, w2),
+       lm AS (SELECT w1, w2, CAST(SUM(dcnt) AS BIGINT) AS cnt FROM dbg GROUP BY w1, w2),
+       tot AS (SELECT w1, CAST(SUM(cnt) AS BIGINT) AS tot FROM lm GROUP BY w1),
+       p AS (SELECT w1, w2, CAST(cnt AS DOUBLE) / CAST(tot AS DOUBLE) AS p
+             FROM lm JOIN tot USING (w1))"""
+
   private val lmPerplexity = Q(
     "q_lm_perplexity",
     (spark, dir) => {
-      // cached: feeds both the LM re-aggregation and the scoring join;
-      // released by the harness's post-query Caches.releaseAll()
-      val docBg = Caches.persisted(Tables(spark, dir, "documents")
-        .select(col("doc_id"), explode(TextOps.wordNGramsAll(col("text"), 2)).as("bg"))
-        .groupBy(col("doc_id"),
-          substring_index(col("bg"), " ", 1).as("w1"),
-          substring_index(col("bg"), " ", -1).as("w2"))
-        .agg(count(lit(1)).as("dcnt")))
-      val lm = docBg.groupBy(col("w1"), col("w2")).agg(sum(col("dcnt")).as("cnt"))
-      val tot = lm.groupBy(col("w1")).agg(sum(col("cnt")).as("tot"))
-      val probs = lm.join(tot, "w1")
-        .select(col("w1"), col("w2"),
-          (col("cnt").cast("double") / col("tot").cast("double")).as("p"))
+      val (docBg, probs) = bigramLm(spark, dir)
       docBg.join(probs, Seq("w1", "w2"))
         .groupBy(col("doc_id"))
         .agg(sum(col("dcnt")).cast("bigint").as("n_bigrams"),
@@ -418,17 +464,7 @@ object TextQueries {
             sum(col("dcnt").cast("double")), 4).as("avg_nll"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS ws
-                          FROM documents),
-            bg AS (SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
-                   FROM toks, UNNEST(generate_series(1, len(ws) - 1)) AS u(i)
-                   WHERE len(ws) >= 2),
-            dbg AS (SELECT doc_id, w1, w2, CAST(COUNT(*) AS BIGINT) AS dcnt
-                    FROM bg GROUP BY doc_id, w1, w2),
-            lm AS (SELECT w1, w2, CAST(SUM(dcnt) AS BIGINT) AS cnt FROM dbg GROUP BY w1, w2),
-            tot AS (SELECT w1, CAST(SUM(cnt) AS BIGINT) AS tot FROM lm GROUP BY w1),
-            p AS (SELECT w1, w2, CAST(cnt AS DOUBLE) / CAST(tot AS DOUBLE) AS p
-                  FROM lm JOIN tot USING (w1))
+    Some(s"""WITH $bigramLmCtes
             SELECT doc_id, CAST(SUM(dcnt) AS BIGINT) AS n_bigrams,
               FLOOR((SUM(CAST(dcnt AS DOUBLE) * -log2(p))
                 / SUM(CAST(dcnt AS DOUBLE))) * 10000 + 0.5) / 10000 AS avg_nll
@@ -729,13 +765,8 @@ object TextQueries {
     "q_cosine_pairs",
     (spark, dir) => {
       val docs = Tables(spark, dir, "documents")
-      val wd = docs.select(col("doc_id"), explode(TextOps.wordsNative(col("text"))).as("word"))
-      val tf = wd.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-      val dt = wd.groupBy(col("doc_id")).agg(count(lit(1)).as("dt"))
-      val df = docs
-        .select(explode(TextOps.distinctWordNGrams(col("text"), 1)).as("word"))
-        .groupBy(col("word")).agg(count(lit(1)).as("df"))
-        .filter(col("df") >= 2 && col("df") <= 50)
+      val (tf, dt, dfAll) = termCounts(docs)
+      val df = dfAll.filter(col("df") >= 2 && col("df") <= 50)
       val n = docs.select(countDistinct(col("doc_id")).as("n"))
       // cached: consumed by the norm aggregate and both join sides;
       // released by the harness post-query
@@ -815,17 +846,7 @@ object TextQueries {
   private val ccnetBucket = Q(
     "q_ccnet_bucket",
     (spark, dir) => {
-      val docBg = Caches.persisted(Tables(spark, dir, "documents")
-        .select(col("doc_id"), explode(TextOps.wordNGramsAll(col("text"), 2)).as("bg"))
-        .groupBy(col("doc_id"),
-          substring_index(col("bg"), " ", 1).as("w1"),
-          substring_index(col("bg"), " ", -1).as("w2"))
-        .agg(count(lit(1)).as("dcnt")))
-      val lm = docBg.groupBy(col("w1"), col("w2")).agg(sum(col("dcnt")).as("cnt"))
-      val tot = lm.groupBy(col("w1")).agg(sum(col("cnt")).as("tot"))
-      val probs = lm.join(tot, "w1")
-        .select(col("w1"), col("w2"),
-          (col("cnt").cast("double") / col("tot").cast("double")).as("p"))
+      val (docBg, probs) = bigramLm(spark, dir)
       val scored = docBg.join(probs, Seq("w1", "w2"))
         .groupBy(col("doc_id"))
         .agg(pround(sum(col("dcnt").cast("double") * -log2(col("p"))) /
@@ -842,17 +863,7 @@ object TextQueries {
           max(col("avg_nll")).as("max_nll"))
         .orderBy(col("bucket"))
     },
-    Some("""WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS ws
-                          FROM documents),
-            bg AS (SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
-                   FROM toks, UNNEST(generate_series(1, len(ws) - 1)) AS u(i)
-                   WHERE len(ws) >= 2),
-            dbg AS (SELECT doc_id, w1, w2, CAST(COUNT(*) AS BIGINT) AS dcnt
-                    FROM bg GROUP BY doc_id, w1, w2),
-            lm AS (SELECT w1, w2, CAST(SUM(dcnt) AS BIGINT) AS cnt FROM dbg GROUP BY w1, w2),
-            tot AS (SELECT w1, CAST(SUM(cnt) AS BIGINT) AS tot FROM lm GROUP BY w1),
-            p AS (SELECT w1, w2, CAST(cnt AS DOUBLE) / CAST(tot AS DOUBLE) AS p
-                  FROM lm JOIN tot USING (w1)),
+    Some(s"""WITH $bigramLmCtes,
             scored AS (SELECT doc_id,
                          FLOOR((SUM(CAST(dcnt AS DOUBLE) * -log2(p))
                            / SUM(CAST(dcnt AS DOUBLE))) * 10000 + 0.5) / 10000 AS avg_nll

@@ -275,22 +275,10 @@ object TrainPrepQueries {
           sum(col("tc")).cast("bigint").as("tokens"))
         .orderBy(col("stage"))
     },
-    Some("""WITH t AS (SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS ws
-                       FROM documents),
-            m AS (SELECT doc_id,
-                    CAST(len(ws) AS BIGINT) AS tc,
-                    CAST(len(ws) AS DOUBLE) AS n_tok,
-                    CASE WHEN len(ws) = 0 THEN 0.0
-                         ELSE CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE)
-                              / CAST(len(ws) AS DOUBLE) END AS avg_len,
-                    CASE WHEN len(ws) = 0 THEN 0.0
-                         ELSE CAST(len(list_filter(ws, w -> w IN
-                           ('the','a','of','and','to','in','is','on','for','with'))) AS DOUBLE)
-                           / CAST(len(ws) AS DOUBLE) END AS ratio
-                  FROM t),
+    Some(s"""WITH ${TextQueries.qualityCtes("t", "m", "doc_id", "documents",
+                   "CAST(len(ws) AS BIGINT) AS tc,")},
             sc AS (SELECT doc_id, tc,
-                     FLOOR((LEAST(n_tok / 100.0, 1.0) * 0.4 + ratio * 0.3
-                           + LEAST(avg_len / 8.0, 1.0) * 0.3) * 10000 + 0.5) / 10000 AS s
+                     FLOOR((${TextQueries.qualityScoreSql}) * 10000 + 0.5) / 10000 AS s
                    FROM m),
             r AS (SELECT s, tc,
                     CAST(ROW_NUMBER() OVER (ORDER BY s, doc_id) AS BIGINT) AS rn,

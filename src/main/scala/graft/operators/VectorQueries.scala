@@ -31,8 +31,59 @@ object VectorQueries {
     }
   }
 
-  private def signedDot(emb: Column, signs: Seq[Double]): Column =
-    VectorOps.signedDot(emb, signs.toArray)
+  /** The LSH bucket key under `signs` (rows of [[planeSigns]]): one
+    * '1'/'0' character per plane, the sign of the embedding's dot product
+    * with it. */
+  private[graft] def bucketKey(signs: Seq[Seq[Double]]): Column =
+    concat(signs.map(s =>
+      when(VectorOps.signedDot(col("embedding"), s.toArray) > 0, lit("1")).otherwise(lit("0"))): _*)
+
+  /** Oracle twin of [[bucketKey]]: CTEs `dims`, `planes` (the md5 grid of
+    * [[planeSigns]]), `dots` and `buckets` (vec_id, bk). Planes run
+    * 0..`lastPlane`; a data-driven depth passes its CTE as `depth` ("np, "). */
+  private[graft] def bucketCtes(lastPlane: String = "3", depth: String = ""): String =
+    s"""dims AS (SELECT CAST(COALESCE(MAX(len(embedding)), 0) AS BIGINT) AS nd
+                 FROM embeddings),
+        planes AS (
+          SELECT p, d,
+            CASE WHEN substr(md5('p' || CAST(p AS VARCHAR) || '-' || CAST(d AS VARCHAR)), 1, 1)
+                 IN ('8','9','a','b','c','d','e','f') THEN 1.0 ELSE -1.0 END AS sgn
+          FROM ${depth}dims, UNNEST(generate_series(0, $lastPlane)) AS a(p),
+               UNNEST(generate_series(1, dims.nd)) AS b(d)),
+        dots AS (SELECT e.vec_id, pl.p,
+                   SUM(pl.sgn * CAST(e.embedding[pl.d] AS DOUBLE)) AS dp
+                 FROM embeddings e CROSS JOIN planes pl GROUP BY e.vec_id, pl.p),
+        buckets AS (SELECT vec_id,
+                      string_agg(CASE WHEN dp > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bk
+                    FROM dots GROUP BY vec_id)"""
+
+  /** [[bucketCtes]] at the [[planesFor]] depth of the whole corpus. */
+  private[graft] val corpusBucketCtes: String =
+    s"""np AS (
+          SELECT MIN(k) AS np
+          FROM UNNEST(generate_series(4, 20)) AS t(k),
+               (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings) c
+          WHERE (CAST(32 AS BIGINT) << k) >= c.n OR k = 20),
+        ${bucketCtes("np.np - 1", "np, ")}"""
+
+  /** Oracle tail of the quantized searches: `rr`, the exact re-rank of the
+    * `short` list, `brute`, the exact top-10, and recall@10 of the one
+    * against the other, after the `lead` columns. */
+  private[graft] def rerankRecallSql(lead: String): String =
+    s"""rr AS (SELECT e.vec_id,
+                 FLOOR((list_cosine_similarity(e.v, pv.v)) * 10000 + 0.5) / 10000 AS cos
+               FROM e JOIN short s ON e.vec_id = s.vec_id, pv
+               ORDER BY cos DESC, e.vec_id LIMIT 10),
+        brute AS (SELECT e.vec_id,
+                    FLOOR((list_cosine_similarity(e.v, pv.v)) * 10000 + 0.5) / 10000 AS cos
+                  FROM e, pv WHERE e.vec_id <> 0
+                  ORDER BY cos DESC, e.vec_id LIMIT 10)
+        SELECT ${lead}CAST(COUNT(*) AS INT) AS k,
+          CAST(COUNT(rr.vec_id) AS INT) AS hits,
+          CASE WHEN COUNT(*) = 0 THEN NULL
+               ELSE FLOOR((CAST(COUNT(rr.vec_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE))
+                 * 10000 + 0.5) / 10000 END AS recall
+        FROM brute LEFT JOIN rr ON brute.vec_id = rr.vec_id"""
 
   /** Fixture embedding dimensionality, read from the DATA (a bounded
     * driver scalar, the q_knn_join count() precedent) instead of a
@@ -134,9 +185,7 @@ object VectorQueries {
   private val knnLsh = Q(
     "q_knn_lsh",
     (spark, dir) => {
-      val signs = planeSigns(4, embeddingDim(spark, dir))
-      val bucket = concat(
-        signs.map(s => when(signedDot(col("embedding"), s) > 0, lit("1")).otherwise(lit("0"))): _*)
+      val bucket = bucketKey(planeSigns(4, embeddingDim(spark, dir)))
       val e = Tables(spark, dir, "embeddings").withColumn("bk", bucket)
       val probe = broadcast(
         e.filter(col("vec_id") === 0).select(col("embedding").as("p"), col("bk").as("pbk")))
@@ -147,20 +196,7 @@ object VectorQueries {
         .orderBy(col("cos").desc, col("vec_id"))
         .limit(10)
     },
-    Some("""WITH dims AS (SELECT CAST(COALESCE(MAX(len(embedding)), 0) AS BIGINT) AS nd
-                          FROM embeddings),
-            planes AS (
-              SELECT p, d,
-                CASE WHEN substr(md5('p' || CAST(p AS VARCHAR) || '-' || CAST(d AS VARCHAR)), 1, 1)
-                     IN ('8','9','a','b','c','d','e','f') THEN 1.0 ELSE -1.0 END AS sgn
-              FROM dims, UNNEST(generate_series(0, 3)) AS a(p),
-                   UNNEST(generate_series(1, dims.nd)) AS b(d)),
-            dots AS (SELECT e.vec_id, pl.p,
-                       SUM(pl.sgn * CAST(e.embedding[pl.d] AS DOUBLE)) AS dp
-                     FROM embeddings e CROSS JOIN planes pl GROUP BY e.vec_id, pl.p),
-            buckets AS (SELECT vec_id,
-                          string_agg(CASE WHEN dp > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bk
-                        FROM dots GROUP BY vec_id),
+    Some(s"""WITH ${bucketCtes()},
             probe AS (SELECT CAST(e.embedding AS DOUBLE[]) AS p, b.bk AS pbk
                       FROM embeddings e JOIN buckets b ON e.vec_id = b.vec_id
                       WHERE e.vec_id = 0)
@@ -237,9 +273,7 @@ object VectorQueries {
       // bounded driver scalar (like the k-means model state): row count
       // drives the LSH depth; the scan is metadata-cheap on parquet
       val n = Tables(spark, dir, "embeddings").count()
-      val signs = planeSigns(planesFor(n), embeddingDim(spark, dir))
-      val bucket = concat(
-        signs.map(s => when(signedDot(col("embedding"), s) > 0, lit("1")).otherwise(lit("0"))): _*)
+      val bucket = bucketKey(planeSigns(planesFor(n), embeddingDim(spark, dir)))
       val e = Tables(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), bucket.as("bk"))
       val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"), col("bk"))
@@ -254,25 +288,7 @@ object VectorQueries {
         .select(col("vec_a"), col("rn").cast("int").as("rn"), col("vec_b"), col("cos"))
         .orderBy(col("vec_a"), col("rn"))
     },
-    Some("""WITH np AS (
-              SELECT MIN(k) AS np
-              FROM UNNEST(generate_series(4, 20)) AS t(k),
-                   (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings) c
-              WHERE (CAST(32 AS BIGINT) << k) >= c.n OR k = 20),
-            dims AS (SELECT CAST(COALESCE(MAX(len(embedding)), 0) AS BIGINT) AS nd
-                     FROM embeddings),
-            planes AS (
-              SELECT p, d,
-                CASE WHEN substr(md5('p' || CAST(p AS VARCHAR) || '-' || CAST(d AS VARCHAR)), 1, 1)
-                     IN ('8','9','a','b','c','d','e','f') THEN 1.0 ELSE -1.0 END AS sgn
-              FROM np, dims, UNNEST(generate_series(0, np.np - 1)) AS a(p),
-                   UNNEST(generate_series(1, dims.nd)) AS b(d)),
-            dots AS (SELECT e.vec_id, pl.p,
-                       SUM(pl.sgn * CAST(e.embedding[pl.d] AS DOUBLE)) AS dp
-                     FROM embeddings e CROSS JOIN planes pl GROUP BY e.vec_id, pl.p),
-            buckets AS (SELECT vec_id,
-                          string_agg(CASE WHEN dp > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bk
-                        FROM dots GROUP BY vec_id),
+    Some(s"""WITH $corpusBucketCtes,
             cand AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
                        FLOOR((list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
                                                      CAST(eb.embedding AS DOUBLE[]))) * 10000 + 0.5) / 10000 AS cos
@@ -305,10 +321,7 @@ object VectorQueries {
           pround(VectorOps.cosine(col("embedding"), col("p")), 4).as("cos"))
         .orderBy(col("cos").desc, col("vec_id"))
         .limit(10)
-      val signs = planeSigns(4, embeddingDim(spark, dir))
-      val bucket = concat(
-        signs.map(s => when(signedDot(col("embedding"), s) > 0, lit("1")).otherwise(lit("0"))): _*)
-      val eb = e.withColumn("bk", bucket)
+      val eb = e.withColumn("bk", bucketKey(planeSigns(4, embeddingDim(spark, dir))))
       val probeB = broadcast(eb.filter(col("vec_id") === 0)
         .select(col("embedding").as("p"), col("bk").as("pbk")))
       val lsh = eb.filter(col("vec_id") =!= 0)
@@ -327,25 +340,12 @@ object VectorQueries {
             .otherwise(pround(col("hits").cast("double") / col("k").cast("double"), 4))
             .as("recall"))
     },
-    Some("""WITH probe0 AS (SELECT CAST(embedding AS DOUBLE[]) AS p FROM embeddings WHERE vec_id = 0),
+    Some(s"""WITH probe0 AS (SELECT CAST(embedding AS DOUBLE[]) AS p FROM embeddings WHERE vec_id = 0),
             brute AS (SELECT vec_id,
                         FLOOR((list_cosine_similarity(CAST(embedding AS DOUBLE[]), p)) * 10000 + 0.5) / 10000 AS cos
                       FROM embeddings, probe0 WHERE vec_id <> 0
                       ORDER BY cos DESC, vec_id LIMIT 10),
-            dims AS (SELECT CAST(COALESCE(MAX(len(embedding)), 0) AS BIGINT) AS nd
-                     FROM embeddings),
-            planes AS (
-              SELECT p, d,
-                CASE WHEN substr(md5('p' || CAST(p AS VARCHAR) || '-' || CAST(d AS VARCHAR)), 1, 1)
-                     IN ('8','9','a','b','c','d','e','f') THEN 1.0 ELSE -1.0 END AS sgn
-              FROM dims, UNNEST(generate_series(0, 3)) AS a(p),
-                   UNNEST(generate_series(1, dims.nd)) AS b(d)),
-            dots AS (SELECT e.vec_id, pl.p,
-                       SUM(pl.sgn * CAST(e.embedding[pl.d] AS DOUBLE)) AS dp
-                     FROM embeddings e CROSS JOIN planes pl GROUP BY e.vec_id, pl.p),
-            buckets AS (SELECT vec_id,
-                          string_agg(CASE WHEN dp > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bk
-                        FROM dots GROUP BY vec_id),
+            ${bucketCtes()},
             pb AS (SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS p, b.bk AS pbk
                    FROM embeddings e JOIN buckets b ON e.vec_id = b.vec_id
                    WHERE e.vec_id = 0),
@@ -502,7 +502,7 @@ object VectorQueries {
             .otherwise(pround(col("hits").cast("double") / col("k").cast("double"), 4))
             .as("recall"))
     },
-    Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
             x AS (SELECT vec_id, t.d, v[t.d] AS x
                   FROM e, UNNEST(generate_series(1, len(v))) AS t(d)),
             cal AS (SELECT d, MAX(ABS(x)) AS amax FROM x GROUP BY d),
@@ -521,20 +521,7 @@ object VectorQueries {
                    WHERE qz.vec_id <> 0 GROUP BY qz.vec_id),
             short AS (SELECT vec_id FROM ap ORDER BY approx_u DESC, vec_id LIMIT 50),
             pv AS (SELECT v FROM e WHERE vec_id = 0),
-            rr AS (SELECT e.vec_id,
-                     FLOOR((list_cosine_similarity(e.v, pv.v)) * 10000 + 0.5) / 10000 AS cos
-                   FROM e JOIN short s ON e.vec_id = s.vec_id, pv
-                   ORDER BY cos DESC, e.vec_id LIMIT 10),
-            brute AS (SELECT e.vec_id,
-                        FLOOR((list_cosine_similarity(e.v, pv.v)) * 10000 + 0.5) / 10000 AS cos
-                      FROM e, pv WHERE e.vec_id <> 0
-                      ORDER BY cos DESC, e.vec_id LIMIT 10)
-            SELECT CAST(COUNT(*) AS INT) AS k,
-              CAST(COUNT(rr.vec_id) AS INT) AS hits,
-              CASE WHEN COUNT(*) = 0 THEN NULL
-                   ELSE FLOOR((CAST(COUNT(rr.vec_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE))
-                     * 10000 + 0.5) / 10000 END AS recall
-            FROM brute LEFT JOIN rr ON brute.vec_id = rr.vec_id"""))
+            ${rerankRecallSql("")}"""))
 
   /** Hard-negative mining — the contrastive-training data prep step
     * (retrieval/embedding trainers sample negatives that are SIMILAR but
@@ -608,9 +595,7 @@ object VectorQueries {
   private val multiprobeLsh = Q(
     "q_multiprobe_lsh",
     (spark, dir) => {
-      val signs = planeSigns(4, embeddingDim(spark, dir))
-      val bucket = concat(
-        signs.map(s => when(signedDot(col("embedding"), s) > 0, lit("1")).otherwise(lit("0"))): _*)
+      val bucket = bucketKey(planeSigns(4, embeddingDim(spark, dir)))
       val e = graft.Caches.persisted(
         Tables(spark, dir, "embeddings").withColumn("bk", bucket))
       val probe = e.filter(col("vec_id") === 0)
@@ -644,20 +629,7 @@ object VectorQueries {
         .unionAll(report(cands, "multiprobe"))
         .orderBy(col("method"))
     },
-    Some("""WITH dims AS (SELECT CAST(COALESCE(MAX(len(embedding)), 0) AS BIGINT) AS nd
-                          FROM embeddings),
-            planes AS (
-              SELECT p, d,
-                CASE WHEN substr(md5('p' || CAST(p AS VARCHAR) || '-' || CAST(d AS VARCHAR)), 1, 1)
-                     IN ('8','9','a','b','c','d','e','f') THEN 1.0 ELSE -1.0 END AS sgn
-              FROM dims, UNNEST(generate_series(0, 3)) AS a(p),
-                   UNNEST(generate_series(1, dims.nd)) AS b(d)),
-            dots AS (SELECT e.vec_id, pl.p,
-                       SUM(pl.sgn * CAST(e.embedding[pl.d] AS DOUBLE)) AS dp
-                     FROM embeddings e CROSS JOIN planes pl GROUP BY e.vec_id, pl.p),
-            buckets AS (SELECT vec_id,
-                          string_agg(CASE WHEN dp > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bk
-                        FROM dots GROUP BY vec_id),
+    Some(s"""WITH ${bucketCtes()},
             probe AS (SELECT CAST(e.embedding AS DOUBLE[]) AS p, b.bk AS pbk
                       FROM embeddings e JOIN buckets b ON e.vec_id = b.vec_id
                       WHERE e.vec_id = 0),
@@ -723,24 +695,13 @@ object VectorQueries {
       // bounded driver scalars (the q_knn_join precedent): base count
       // drives the stored LSH depth; dim read as MAX(size) like every oracle
       val nBase = base.count()
-      val signs = planeSigns(planesFor(nBase), embeddingDim(spark, dir))
-      val bucket = concat(
-        signs.map(s => when(signedDot(col("embedding"), s) > 0, lit("1")).otherwise(lit("0"))): _*)
+      val bucket = bucketKey(planeSigns(planesFor(nBase), embeddingDim(spark, dir)))
       StoreOnce(ws.dir) {
         Stores.create(base.select(col("vec_id"), bucket.as("bk"), col("embedding")),
           storeT, ws.path("index"), Some("bk"))
       }
-      val store = spark.table(storeT)
-        .select(col("vec_id").as("nb"), col("bk"), col("embedding").as("se"))
-      val probes = graft.Caches.persisted(
-        e.filter(col("vec_id") % 10 === 0)
-          .select(col("vec_id").as("pid"), bucket.as("bk"), col("embedding").as("pe")))
-      val cand = probes.join(store.hint("merge"), "bk")
-        .select(col("pid"),
-          pround(VectorOps.cosine(col("pe"), col("se")), 4).as("cos"), col("nb"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("pid")).orderBy(col("cos").desc, col("nb"))
-      val ann = cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+      val probes = graft.Caches.persisted(annProbes(e, bucket))
+      val ann = annTop3(probes, storeT)
       // ground-truth arm: bounded probe sample × full base side
       val baseAll = e.filter(col("vec_id") % 10 =!= 0)
         .select(col("vec_id").as("xm"), col("embedding").as("xe"))
@@ -761,38 +722,8 @@ object VectorQueries {
             .as("hit"))
         .orderBy(col("probe_id"), col("rn"))
     },
-    Some("""WITH bcnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings
-                          WHERE vec_id % 10 <> 0),
-            np AS (SELECT MIN(k) AS np
-                   FROM UNNEST(generate_series(4, 20)) AS t(k), bcnt
-                   WHERE (CAST(32 AS BIGINT) << k) >= bcnt.n OR k = 20),
-            dims AS (SELECT CAST(COALESCE(MAX(len(embedding)), 0) AS BIGINT) AS nd
-                     FROM embeddings),
-            planes AS (
-              SELECT p, d,
-                CASE WHEN substr(md5('p' || CAST(p AS VARCHAR) || '-' || CAST(d AS VARCHAR)), 1, 1)
-                     IN ('8','9','a','b','c','d','e','f') THEN 1.0 ELSE -1.0 END AS sgn
-              FROM np, dims, UNNEST(generate_series(0, np.np - 1)) AS a(p),
-                   UNNEST(generate_series(1, dims.nd)) AS b(d)),
-            dots AS (SELECT e.vec_id, pl.p,
-                       SUM(pl.sgn * CAST(e.embedding[pl.d] AS DOUBLE)) AS dp
-                     FROM embeddings e CROSS JOIN planes pl GROUP BY e.vec_id, pl.p),
-            buckets AS (SELECT vec_id,
-                          string_agg(CASE WHEN dp > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bk
-                        FROM dots GROUP BY vec_id),
-            store AS (SELECT b.vec_id AS nb, b.bk, CAST(e.embedding AS DOUBLE[]) AS se
-                      FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
-                      WHERE b.vec_id % 10 <> 0),
-            probes AS (SELECT b.vec_id AS pid, b.bk, CAST(e.embedding AS DOUBLE[]) AS pe
-                       FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
-                       WHERE b.vec_id % 10 = 0),
-            cand AS (SELECT p.pid,
-                       FLOOR((list_cosine_similarity(p.pe, s.se)) * 10000 + 0.5) / 10000 AS cos,
-                       s.nb
-                     FROM probes p JOIN store s ON p.bk = s.bk),
-            ranked AS (SELECT pid, cos, nb,
-                         row_number() OVER (PARTITION BY pid ORDER BY cos DESC, nb) AS rn
-                       FROM cand),
+    Some(s"""WITH ${annProbeCtes("vec_id % 10 <> 0")},
+            ${rankedCte("ranked")},
             ann AS (SELECT pid, rn, nb, cos FROM ranked WHERE rn <= 3),
             xcand AS (SELECT p.pid AS xp,
                         FLOOR((list_cosine_similarity(p.pe, s.se)) * 10000 + 0.5) / 10000 AS xcos,
@@ -837,26 +768,118 @@ object VectorQueries {
   private def annStore(spark: org.apache.spark.sql.SparkSession, dir: String): Store =
     Stores(spark, dir, "annstore2")
 
-  /** The INGEST-time bucket expression of the q_ann_store_append index:
-    * plane depth from the BASE population (re-deriving planes per append
-    * would re-bucket the whole index = a rebuild). */
   private val ingestBucketCache =
     new java.util.concurrent.ConcurrentHashMap[String, Column]()
 
+  /** The INGEST-time bucket expression of the q_ann_store_append index:
+    * plane depth from the BASE population (re-deriving planes per append
+    * would re-bucket the whole index = a rebuild). */
   private def annIngestBucket(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Column =
-    // Memoized per (session, dir) — ADVICE r13: the base count() and the
-    // dim scan are driver-side model derivation, computed once at ingest
-    // in production; q_ann_store_append / q_store_compact / the
-    // lifecycle ladder each consult the bucket expression several times
-    // per run and must not re-pay two Spark jobs per consult.
-    ingestBucketCache.computeIfAbsent(StoreToken(spark, dir), _ => {
+      dir: String): Column = ingestBucket(spark, dir, 2, "")
+
+  /** The ingest-time bucket expression of a store whose base population is
+    * vec_id ≡ `baseFrom`..9 mod 10, memoized per (session, dir, `tag`) —
+    * ADVICE r13: the base count() and the dim scan are driver-side model
+    * derivation, computed once at ingest in production; q_ann_store_append
+    * / q_store_compact / the lifecycle ladder each consult the bucket
+    * expression several times per run and must not re-pay two Spark jobs
+    * per consult. */
+  private def ingestBucket(spark: org.apache.spark.sql.SparkSession, dir: String,
+      baseFrom: Int, tag: String): Column =
+    ingestBucketCache.computeIfAbsent(StoreToken(spark, dir) + tag, _ => {
       val e = Tables(spark, dir, "embeddings")
-      val nBase = e.filter(col("vec_id") % 10 >= 2).count()
-      val signs = planeSigns(planesFor(nBase), embeddingDim(spark, dir))
-      concat(signs.map(s =>
-        when(signedDot(col("embedding"), s) > 0, lit("1")).otherwise(lit("0"))): _*)
+      val nBase = e.filter(col("vec_id") % 10 >= baseFrom).count()
+      bucketKey(planeSigns(planesFor(nBase), embeddingDim(spark, dir)))
     })
+
+  /** Today's probe batch (vec_id ≡ 0 mod 10), keyed by the store's
+    * ingest-time `bucket`. */
+  private def annProbes(e: org.apache.spark.sql.DataFrame,
+      bucket: Column): org.apache.spark.sql.DataFrame =
+    e.filter(col("vec_id") % 10 === 0)
+      .select(col("vec_id").as("pid"), bucket.as("bk"), col("embedding").as("pe"))
+
+  /** Each probe's top-3 neighbours (pid, cos, nb, rn) from ANN store table
+    * `t`: a merge join on the stored bucket layout (no store-side
+    * exchange), cosine rounded then ranked with an nb tiebreak. */
+  private def annTop3(probes: org.apache.spark.sql.DataFrame,
+      t: String): org.apache.spark.sql.DataFrame = {
+    val store = probes.sparkSession.table(t)
+      .select(col("vec_id").as("nb"), col("bk"), col("embedding").as("se"))
+    val cand = probes.join(store.hint("merge"), "bk")
+      .select(col("pid"),
+        pround(VectorOps.cosine(col("pe"), col("se")), 4).as("cos"), col("nb"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("pid")).orderBy(col("cos").desc, col("nb"))
+    cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+  }
+
+  /** [[annTop3]] under a `phase` label, with one attribution column. */
+  private def phaseTop3(probes: org.apache.spark.sql.DataFrame, t: String, phase: String,
+      attr: Column): org.apache.spark.sql.DataFrame =
+    annTop3(probes, t)
+      .select(lit(phase).as("phase"), col("pid").as("probe_id"),
+        col("rn").cast("int").as("rn"), col("nb"), col("cos"), attr)
+
+  /** Attributes a neighbour to the base or delta1 vintage. */
+  private def deltaSrc: Column =
+    when(col("nb") % 10 === 1, lit("delta1")).otherwise(lit("base")).as("src")
+
+  /** Oracle replay of a persisted ANN store probe: the buckets at the
+    * [[planesFor]] depth of the base rows (`baseWhere`), the store rows
+    * (`storeWhere`), the vec_id ≡ 0 probes, and `cand`, every probe ×
+    * same-bucket store pair with its rounded cosine. */
+  private def annProbeCtes(baseWhere: String,
+      storeWhere: String = "b.vec_id % 10 <> 0"): String =
+    s"""bcnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings
+                 WHERE $baseWhere),
+        np AS (SELECT MIN(k) AS np
+               FROM UNNEST(generate_series(4, 20)) AS t(k), bcnt
+               WHERE (CAST(32 AS BIGINT) << k) >= bcnt.n OR k = 20),
+        ${bucketCtes("np.np - 1", "np, ")},
+        store AS (SELECT b.vec_id AS nb, b.bk, CAST(e.embedding AS DOUBLE[]) AS se
+                  FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
+                  WHERE $storeWhere),
+        probes AS (SELECT b.vec_id AS pid, b.bk, CAST(e.embedding AS DOUBLE[]) AS pe
+                   FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
+                   WHERE b.vec_id % 10 = 0),
+        cand AS (SELECT p.pid,
+                   FLOOR((list_cosine_similarity(p.pe, s.se)) * 10000 + 0.5) / 10000 AS cos,
+                   s.nb
+                 FROM probes p JOIN store s ON p.bk = s.bk)"""
+
+  /** Oracle CTE `name`: `cand` (plus a `where` clause) ranked per probe. */
+  private def rankedCte(name: String, where: String = ""): String =
+    s"""$name AS (SELECT pid, cos, nb,
+                   row_number() OVER (PARTITION BY pid ORDER BY cos DESC, nb) AS rn
+                 FROM cand$where)"""
+
+  /** Oracle of a store served from two layouts that must agree (a pure
+    * layout verb): the same top-3 under both `phases` labels. */
+  private def samePhasesOracle(baseWhere: String, storeWhere: String, src: String,
+      phases: (String, String)): String =
+    s"""WITH ${annProbeCtes(baseWhere, storeWhere)},
+        ${rankedCte("ranked")},
+        top AS (SELECT pid, rn, nb, cos,
+                  $src AS src
+                FROM ranked WHERE rn <= 3)
+        SELECT phase, pid AS probe_id, CAST(rn AS INT) AS rn, nb, cos, src
+        FROM (SELECT '${phases._1}' AS phase, * FROM top
+              UNION ALL SELECT '${phases._2}', * FROM top)
+        ORDER BY phase, probe_id, rn"""
+
+  /** Oracle of the grown store before (`pre`) and after (`post`) a verb
+    * that keeps only the neighbours matching `postWhere`. */
+  private def prePostOracle(postWhere: String, attr: String): String =
+    s"""WITH ${annProbeCtes("vec_id % 10 >= 2")},
+        ${rankedCte("rpre")},
+        ${rankedCte("rpost", s" WHERE $postWhere")}
+        SELECT phase, pid AS probe_id, CAST(rn AS INT) AS rn, nb, cos,
+          $attr
+        FROM (SELECT 'pre' AS phase, pid, rn, nb, cos FROM rpre WHERE rn <= 3
+              UNION ALL
+              SELECT 'post', pid, rn, nb, cos FROM rpost WHERE rn <= 3)
+        ORDER BY phase, probe_id, rn"""
 
   /** The day-2 index append, re-runnable: a [[VintageWrite]] dynamic
     * overwrite of vintage=delta1, bucketed with the ingest-time planes
@@ -896,55 +919,14 @@ object VectorQueries {
     "q_ann_store_append",
     (spark, dir) => {
       val storeT = ensureAnnStore(spark, dir)
-      val e = Tables(spark, dir, "embeddings")
-      val bucket = annIngestBucket(spark, dir)
-      val store = spark.table(storeT)
-        .select(col("vec_id").as("nb"), col("bk"), col("embedding").as("se"))
-      val probes = e.filter(col("vec_id") % 10 === 0)
-        .select(col("vec_id").as("pid"), bucket.as("bk"), col("embedding").as("pe"))
-      val cand = probes.join(store.hint("merge"), "bk")
-        .select(col("pid"),
-          pround(VectorOps.cosine(col("pe"), col("se")), 4).as("cos"), col("nb"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("pid")).orderBy(col("cos").desc, col("nb"))
-      cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+      val probes = annProbes(Tables(spark, dir, "embeddings"), annIngestBucket(spark, dir))
+      annTop3(probes, storeT)
         .select(col("pid").as("probe_id"), col("rn").cast("int").as("rn"),
-          col("nb"), col("cos"),
-          when(col("nb") % 10 === 1, lit("delta1")).otherwise(lit("base")).as("src"))
+          col("nb"), col("cos"), deltaSrc)
         .orderBy(col("probe_id"), col("rn"))
     },
-    Some("""WITH bcnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings
-                          WHERE vec_id % 10 >= 2),
-            np AS (SELECT MIN(k) AS np
-                   FROM UNNEST(generate_series(4, 20)) AS t(k), bcnt
-                   WHERE (CAST(32 AS BIGINT) << k) >= bcnt.n OR k = 20),
-            dims AS (SELECT CAST(COALESCE(MAX(len(embedding)), 0) AS BIGINT) AS nd
-                     FROM embeddings),
-            planes AS (
-              SELECT p, d,
-                CASE WHEN substr(md5('p' || CAST(p AS VARCHAR) || '-' || CAST(d AS VARCHAR)), 1, 1)
-                     IN ('8','9','a','b','c','d','e','f') THEN 1.0 ELSE -1.0 END AS sgn
-              FROM np, dims, UNNEST(generate_series(0, np.np - 1)) AS a(p),
-                   UNNEST(generate_series(1, dims.nd)) AS b(d)),
-            dots AS (SELECT e.vec_id, pl.p,
-                       SUM(pl.sgn * CAST(e.embedding[pl.d] AS DOUBLE)) AS dp
-                     FROM embeddings e CROSS JOIN planes pl GROUP BY e.vec_id, pl.p),
-            buckets AS (SELECT vec_id,
-                          string_agg(CASE WHEN dp > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bk
-                        FROM dots GROUP BY vec_id),
-            store AS (SELECT b.vec_id AS nb, b.bk, CAST(e.embedding AS DOUBLE[]) AS se
-                      FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
-                      WHERE b.vec_id % 10 <> 0),
-            probes AS (SELECT b.vec_id AS pid, b.bk, CAST(e.embedding AS DOUBLE[]) AS pe
-                       FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
-                       WHERE b.vec_id % 10 = 0),
-            cand AS (SELECT p.pid,
-                       FLOOR((list_cosine_similarity(p.pe, s.se)) * 10000 + 0.5) / 10000 AS cos,
-                       s.nb
-                     FROM probes p JOIN store s ON p.bk = s.bk),
-            ranked AS (SELECT pid, cos, nb,
-                         row_number() OVER (PARTITION BY pid ORDER BY cos DESC, nb) AS rn
-                       FROM cand)
+    Some(s"""WITH ${annProbeCtes("vec_id % 10 >= 2")},
+            ${rankedCte("ranked")}
             SELECT pid AS probe_id, CAST(rn AS INT) AS rn, nb, cos,
               CASE WHEN nb % 10 = 1 THEN 'delta1' ELSE 'base' END AS src
             FROM ranked WHERE rn <= 3 ORDER BY probe_id, rn"""))
@@ -992,73 +974,18 @@ object VectorQueries {
         Stores.compact(spark.table(srcT).select(col("vec_id"), col("bk"), col("embedding")),
           cT, ws.path("index"), "bk")
       }
-      val e = Tables(spark, dir, "embeddings")
-      val bucket = annIngestBucket(spark, dir)
       val probes = graft.Caches.persisted(
-        e.filter(col("vec_id") % 10 === 0)
-          .select(col("vec_id").as("pid"), bucket.as("bk"), col("embedding").as("pe")))
-      def arm(t: String, phase: String): org.apache.spark.sql.DataFrame = {
-        val store = spark.table(t)
-          .select(col("vec_id").as("nb"), col("bk"), col("embedding").as("se"))
-        val cand = probes.join(store.hint("merge"), "bk")
-          .select(col("pid"),
-            pround(VectorOps.cosine(col("pe"), col("se")), 4).as("cos"), col("nb"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("pid")).orderBy(col("cos").desc, col("nb"))
-        cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-          .select(lit(phase).as("phase"), col("pid").as("probe_id"),
-            col("rn").cast("int").as("rn"), col("nb"), col("cos"),
-            when(col("nb") % 10 === 1, lit("delta1")).otherwise(lit("base")).as("src"))
-      }
-      arm(srcT, "pre").unionAll(arm(cT, "post"))
+        annProbes(Tables(spark, dir, "embeddings"), annIngestBucket(spark, dir)))
+      phaseTop3(probes, srcT, "pre", deltaSrc)
+        .unionAll(phaseTop3(probes, cT, "post", deltaSrc))
         .orderBy(col("phase"), col("probe_id"), col("rn"))
     },
-    Some("""WITH bcnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings
-                          WHERE vec_id % 10 >= 2),
-            np AS (SELECT MIN(k) AS np
-                   FROM UNNEST(generate_series(4, 20)) AS t(k), bcnt
-                   WHERE (CAST(32 AS BIGINT) << k) >= bcnt.n OR k = 20),
-            dims AS (SELECT CAST(COALESCE(MAX(len(embedding)), 0) AS BIGINT) AS nd
-                     FROM embeddings),
-            planes AS (
-              SELECT p, d,
-                CASE WHEN substr(md5('p' || CAST(p AS VARCHAR) || '-' || CAST(d AS VARCHAR)), 1, 1)
-                     IN ('8','9','a','b','c','d','e','f') THEN 1.0 ELSE -1.0 END AS sgn
-              FROM np, dims, UNNEST(generate_series(0, np.np - 1)) AS a(p),
-                   UNNEST(generate_series(1, dims.nd)) AS b(d)),
-            dots AS (SELECT e.vec_id, pl.p,
-                       SUM(pl.sgn * CAST(e.embedding[pl.d] AS DOUBLE)) AS dp
-                     FROM embeddings e CROSS JOIN planes pl GROUP BY e.vec_id, pl.p),
-            buckets AS (SELECT vec_id,
-                          string_agg(CASE WHEN dp > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bk
-                        FROM dots GROUP BY vec_id),
-            store AS (SELECT b.vec_id AS nb, b.bk, CAST(e.embedding AS DOUBLE[]) AS se
-                      FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
-                      WHERE b.vec_id % 10 <> 0),
-            probes AS (SELECT b.vec_id AS pid, b.bk, CAST(e.embedding AS DOUBLE[]) AS pe
-                       FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
-                       WHERE b.vec_id % 10 = 0),
-            cand AS (SELECT p.pid,
-                       FLOOR((list_cosine_similarity(p.pe, s.se)) * 10000 + 0.5) / 10000 AS cos,
-                       s.nb
-                     FROM probes p JOIN store s ON p.bk = s.bk),
-            ranked AS (SELECT pid, cos, nb,
-                         row_number() OVER (PARTITION BY pid ORDER BY cos DESC, nb) AS rn
-                       FROM cand),
-            top AS (SELECT pid, rn, nb, cos,
-                      CASE WHEN nb % 10 = 1 THEN 'delta1' ELSE 'base' END AS src
-                    FROM ranked WHERE rn <= 3)
-            SELECT phase, pid AS probe_id, CAST(rn AS INT) AS rn, nb, cos, src
-            FROM (SELECT 'pre' AS phase, * FROM top
-                  UNION ALL SELECT 'post', * FROM top)
-            ORDER BY phase, probe_id, rn"""))
+    Some(samePhasesOracle("vec_id % 10 >= 2", "b.vec_id % 10 <> 0",
+      "CASE WHEN nb % 10 = 1 THEN 'delta1' ELSE 'base' END", ("pre", "post"))))
 
-  /** q_ann_delete's post-deletion catalog table and path (for the
-    * layout pins and file assertions). */
+  /** q_ann_delete's post-deletion catalog table. */
   private[graft] def annDeleteTable(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = deleteStore(spark, dir).table("ann_del")
-  private[graft] def annDeletePath(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = deleteStore(spark, dir).path("index")
 
   private def deleteStore(spark: org.apache.spark.sql.SparkSession, dir: String): Store =
     Stores(spark, dir, "anndel")
@@ -1100,69 +1027,16 @@ object VectorQueries {
             .select(col("vec_id"), col("bk"), col("embedding")),
           dT, ws.path("index"), Some("bk"))
       }
-      val e = Tables(spark, dir, "embeddings")
-      val bucket = annIngestBucket(spark, dir)
       val probes = graft.Caches.persisted(
-        e.filter(col("vec_id") % 10 === 0)
-          .select(col("vec_id").as("pid"), bucket.as("bk"), col("embedding").as("pe")))
-      def arm(t: String, phase: String): org.apache.spark.sql.DataFrame = {
-        val store = spark.table(t)
-          .select(col("vec_id").as("nb"), col("bk"), col("embedding").as("se"))
-        val cand = probes.join(store.hint("merge"), "bk")
-          .select(col("pid"),
-            pround(VectorOps.cosine(col("pe"), col("se")), 4).as("cos"), col("nb"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("pid")).orderBy(col("cos").desc, col("nb"))
-        cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-          .select(lit(phase).as("phase"), col("pid").as("probe_id"),
-            col("rn").cast("int").as("rn"), col("nb"), col("cos"),
-            when(col("nb") % 10 === 5, lit(1)).otherwise(lit(0)).cast("int")
-              .as("purge_set"))
-      }
-      arm(srcT, "pre").unionAll(arm(dT, "post"))
+        annProbes(Tables(spark, dir, "embeddings"), annIngestBucket(spark, dir)))
+      def purgeSet: Column =
+        when(col("nb") % 10 === 5, lit(1)).otherwise(lit(0)).cast("int").as("purge_set")
+      phaseTop3(probes, srcT, "pre", purgeSet)
+        .unionAll(phaseTop3(probes, dT, "post", purgeSet))
         .orderBy(col("phase"), col("probe_id"), col("rn"))
     },
-    Some("""WITH bcnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings
-                          WHERE vec_id % 10 >= 2),
-            np AS (SELECT MIN(k) AS np
-                   FROM UNNEST(generate_series(4, 20)) AS t(k), bcnt
-                   WHERE (CAST(32 AS BIGINT) << k) >= bcnt.n OR k = 20),
-            dims AS (SELECT CAST(COALESCE(MAX(len(embedding)), 0) AS BIGINT) AS nd
-                     FROM embeddings),
-            planes AS (
-              SELECT p, d,
-                CASE WHEN substr(md5('p' || CAST(p AS VARCHAR) || '-' || CAST(d AS VARCHAR)), 1, 1)
-                     IN ('8','9','a','b','c','d','e','f') THEN 1.0 ELSE -1.0 END AS sgn
-              FROM np, dims, UNNEST(generate_series(0, np.np - 1)) AS a(p),
-                   UNNEST(generate_series(1, dims.nd)) AS b(d)),
-            dots AS (SELECT e.vec_id, pl.p,
-                       SUM(pl.sgn * CAST(e.embedding[pl.d] AS DOUBLE)) AS dp
-                     FROM embeddings e CROSS JOIN planes pl GROUP BY e.vec_id, pl.p),
-            buckets AS (SELECT vec_id,
-                          string_agg(CASE WHEN dp > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bk
-                        FROM dots GROUP BY vec_id),
-            store AS (SELECT b.vec_id AS nb, b.bk, CAST(e.embedding AS DOUBLE[]) AS se
-                      FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
-                      WHERE b.vec_id % 10 <> 0),
-            probes AS (SELECT b.vec_id AS pid, b.bk, CAST(e.embedding AS DOUBLE[]) AS pe
-                       FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
-                       WHERE b.vec_id % 10 = 0),
-            cand AS (SELECT p.pid,
-                       FLOOR((list_cosine_similarity(p.pe, s.se)) * 10000 + 0.5) / 10000 AS cos,
-                       s.nb
-                     FROM probes p JOIN store s ON p.bk = s.bk),
-            rpre AS (SELECT pid, cos, nb,
-                       row_number() OVER (PARTITION BY pid ORDER BY cos DESC, nb) AS rn
-                     FROM cand),
-            rpost AS (SELECT pid, cos, nb,
-                        row_number() OVER (PARTITION BY pid ORDER BY cos DESC, nb) AS rn
-                      FROM cand WHERE nb % 10 <> 5)
-            SELECT phase, pid AS probe_id, CAST(rn AS INT) AS rn, nb, cos,
-              CASE WHEN nb % 10 = 5 THEN 1 ELSE 0 END AS purge_set
-            FROM (SELECT 'pre' AS phase, pid, rn, nb, cos FROM rpre WHERE rn <= 3
-                  UNION ALL
-                  SELECT 'post', pid, rn, nb, cos FROM rpost WHERE rn <= 3)
-            ORDER BY phase, probe_id, rn"""))
+    Some(prePostOracle("nb % 10 <> 5",
+      "CASE WHEN nb % 10 = 5 THEN 1 ELSE 0 END AS purge_set")))
 
   /** q_store_lifecycle's tables and workspace: the laddered store, its
     * compacted successor, and the rung ledger path. */
@@ -1171,19 +1045,6 @@ object VectorQueries {
     val ws = Stores(spark, dir, "lcstore")
     (ws.table("lc_store"), ws.table("lc_compact"), ws.dir)
   }
-
-  /** The lifecycle ladder's ingest-time bucket expression: plane depth
-    * from ITS base population (vec_id ≡ 4..9 mod 10 — fixed at ingest,
-    * like every store's model state). */
-  private def lifecycleBucket(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Column =
-    ingestBucketCache.computeIfAbsent(StoreToken(spark, dir) + ":lc", _ => {
-      val e = Tables(spark, dir, "embeddings")
-      val nBase = e.filter(col("vec_id") % 10 >= 4).count()
-      val signs = planeSigns(planesFor(nBase), embeddingDim(spark, dir))
-      concat(signs.map(s =>
-        when(signedDot(col("embedding"), s) > 0, lit("1")).otherwise(lit("0"))): _*)
-    })
 
   /** THE DAY-N LIFECYCLE LADDER (VERDICT r13 task 4): every store verb
     * was proven on a base+delta1 store in isolation; day-365 operation
@@ -1217,7 +1078,9 @@ object VectorQueries {
     (spark, dir) => {
       val (lT, cT, wh) = lifecycleStore(spark, dir)
       val e = Tables(spark, dir, "embeddings")
-      val bucket = lifecycleBucket(spark, dir)
+      // the ladder's ingest-time planes: depth from ITS base population
+      // (vec_id ≡ 4..9 mod 10 — fixed at ingest, like every store's model)
+      val bucket = ingestBucket(spark, dir, 4, ":lc")
       StoreOnce(wh) {
         val ledger = new Stores.Ledger(spark)
         def rung(name: String): Unit = ledger.rung(name, lT, s"$wh/index")
@@ -1253,67 +1116,17 @@ object VectorQueries {
         ledger.rung("compact", cT, s"$wh/compact")
         ledger.write(s"$wh/ledger.txt")
       }
-      val probes = graft.Caches.persisted(
-        e.filter(col("vec_id") % 10 === 0)
-          .select(col("vec_id").as("pid"), bucket.as("bk"), col("embedding").as("pe")))
-      def arm(t: String, phase: String): org.apache.spark.sql.DataFrame = {
-        val store = spark.table(t)
-          .select(col("vec_id").as("nb"), col("bk"), col("embedding").as("se"))
-        val cand = probes.join(store.hint("merge"), "bk")
-          .select(col("pid"),
-            pround(VectorOps.cosine(col("pe"), col("se")), 4).as("cos"), col("nb"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("pid")).orderBy(col("cos").desc, col("nb"))
-        cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-          .select(lit(phase).as("phase"), col("pid").as("probe_id"),
-            col("rn").cast("int").as("rn"), col("nb"), col("cos"),
-            when(col("nb") % 10 === 1, lit("delta1"))
-              .when(col("nb") % 10 === 2, lit("delta2"))
-              .otherwise(lit("base")).as("src"))
-      }
-      arm(lT, "grown").unionAll(arm(cT, "compact"))
+      val probes = graft.Caches.persisted(annProbes(e, bucket))
+      def src: Column = when(col("nb") % 10 === 1, lit("delta1"))
+        .when(col("nb") % 10 === 2, lit("delta2"))
+        .otherwise(lit("base")).as("src")
+      phaseTop3(probes, lT, "grown", src)
+        .unionAll(phaseTop3(probes, cT, "compact", src))
         .orderBy(col("phase"), col("probe_id"), col("rn"))
     },
-    Some("""WITH bcnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings
-                          WHERE vec_id % 10 >= 4),
-            np AS (SELECT MIN(k) AS np
-                   FROM UNNEST(generate_series(4, 20)) AS t(k), bcnt
-                   WHERE (CAST(32 AS BIGINT) << k) >= bcnt.n OR k = 20),
-            dims AS (SELECT CAST(COALESCE(MAX(len(embedding)), 0) AS BIGINT) AS nd
-                     FROM embeddings),
-            planes AS (
-              SELECT p, d,
-                CASE WHEN substr(md5('p' || CAST(p AS VARCHAR) || '-' || CAST(d AS VARCHAR)), 1, 1)
-                     IN ('8','9','a','b','c','d','e','f') THEN 1.0 ELSE -1.0 END AS sgn
-              FROM np, dims, UNNEST(generate_series(0, np.np - 1)) AS a(p),
-                   UNNEST(generate_series(1, dims.nd)) AS b(d)),
-            dots AS (SELECT e.vec_id, pl.p,
-                       SUM(pl.sgn * CAST(e.embedding[pl.d] AS DOUBLE)) AS dp
-                     FROM embeddings e CROSS JOIN planes pl GROUP BY e.vec_id, pl.p),
-            buckets AS (SELECT vec_id,
-                          string_agg(CASE WHEN dp > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bk
-                        FROM dots GROUP BY vec_id),
-            store AS (SELECT b.vec_id AS nb, b.bk, CAST(e.embedding AS DOUBLE[]) AS se
-                      FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
-                      WHERE b.vec_id % 10 IN (1, 2, 4, 6, 7, 8, 9)),
-            probes AS (SELECT b.vec_id AS pid, b.bk, CAST(e.embedding AS DOUBLE[]) AS pe
-                       FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
-                       WHERE b.vec_id % 10 = 0),
-            cand AS (SELECT p.pid,
-                       FLOOR((list_cosine_similarity(p.pe, s.se)) * 10000 + 0.5) / 10000 AS cos,
-                       s.nb
-                     FROM probes p JOIN store s ON p.bk = s.bk),
-            ranked AS (SELECT pid, cos, nb,
-                         row_number() OVER (PARTITION BY pid ORDER BY cos DESC, nb) AS rn
-                       FROM cand),
-            top AS (SELECT pid, rn, nb, cos,
-                      CASE WHEN nb % 10 = 1 THEN 'delta1'
-                           WHEN nb % 10 = 2 THEN 'delta2' ELSE 'base' END AS src
-                    FROM ranked WHERE rn <= 3)
-            SELECT phase, pid AS probe_id, CAST(rn AS INT) AS rn, nb, cos, src
-            FROM (SELECT 'grown' AS phase, * FROM top
-                  UNION ALL SELECT 'compact', * FROM top)
-            ORDER BY phase, probe_id, rn"""))
+    Some(samePhasesOracle("vec_id % 10 >= 4", "b.vec_id % 10 IN (1, 2, 4, 6, 7, 8, 9)",
+      "CASE WHEN nb % 10 = 1 THEN 'delta1' WHEN nb % 10 = 2 THEN 'delta2' ELSE 'base' END",
+      ("grown", "compact"))))
 
   /** q_ann_expire's expire-private store (table, workspace). */
   private[graft] def annExpireStore(spark: org.apache.spark.sql.SparkSession,
@@ -1367,22 +1180,8 @@ object VectorQueries {
       val (eT, wh) = annExpireStore(spark, dir)
       val e = Tables(spark, dir, "embeddings")
       val bucket = annIngestBucket(spark, dir)
-      val probes = graft.Caches.persisted(
-        e.filter(col("vec_id") % 10 === 0)
-          .select(col("vec_id").as("pid"), bucket.as("bk"), col("embedding").as("pe")))
-      def arm(phase: String): org.apache.spark.sql.DataFrame = {
-        val store = spark.table(eT)
-          .select(col("vec_id").as("nb"), col("bk"), col("embedding").as("se"))
-        val cand = probes.join(store.hint("merge"), "bk")
-          .select(col("pid"),
-            pround(VectorOps.cosine(col("pe"), col("se")), 4).as("cos"), col("nb"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("pid")).orderBy(col("cos").desc, col("nb"))
-        cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-          .select(lit(phase).as("phase"), col("pid").as("probe_id"),
-            col("rn").cast("int").as("rn"), col("nb"), col("cos"),
-            when(col("nb") % 10 === 1, lit("delta1")).otherwise(lit("base")).as("src"))
-      }
+      val probes = graft.Caches.persisted(annProbes(e, bucket))
+      def arm(phase: String) = phaseTop3(probes, eT, phase, deltaSrc)
       StoreOnce(wh) {
         Stores.create(e.filter(col("vec_id") % 10 >= 2)
             .select(col("vec_id"), bucket.as("bk"), col("embedding"))
@@ -1403,47 +1202,8 @@ object VectorQueries {
         .unionAll(arm("post"))
         .orderBy(col("phase"), col("probe_id"), col("rn"))
     },
-    Some("""WITH bcnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings
-                          WHERE vec_id % 10 >= 2),
-            np AS (SELECT MIN(k) AS np
-                   FROM UNNEST(generate_series(4, 20)) AS t(k), bcnt
-                   WHERE (CAST(32 AS BIGINT) << k) >= bcnt.n OR k = 20),
-            dims AS (SELECT CAST(COALESCE(MAX(len(embedding)), 0) AS BIGINT) AS nd
-                     FROM embeddings),
-            planes AS (
-              SELECT p, d,
-                CASE WHEN substr(md5('p' || CAST(p AS VARCHAR) || '-' || CAST(d AS VARCHAR)), 1, 1)
-                     IN ('8','9','a','b','c','d','e','f') THEN 1.0 ELSE -1.0 END AS sgn
-              FROM np, dims, UNNEST(generate_series(0, np.np - 1)) AS a(p),
-                   UNNEST(generate_series(1, dims.nd)) AS b(d)),
-            dots AS (SELECT e.vec_id, pl.p,
-                       SUM(pl.sgn * CAST(e.embedding[pl.d] AS DOUBLE)) AS dp
-                     FROM embeddings e CROSS JOIN planes pl GROUP BY e.vec_id, pl.p),
-            buckets AS (SELECT vec_id,
-                          string_agg(CASE WHEN dp > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bk
-                        FROM dots GROUP BY vec_id),
-            store AS (SELECT b.vec_id AS nb, b.bk, CAST(e.embedding AS DOUBLE[]) AS se
-                      FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
-                      WHERE b.vec_id % 10 <> 0),
-            probes AS (SELECT b.vec_id AS pid, b.bk, CAST(e.embedding AS DOUBLE[]) AS pe
-                       FROM buckets b JOIN embeddings e ON e.vec_id = b.vec_id
-                       WHERE b.vec_id % 10 = 0),
-            cand AS (SELECT p.pid,
-                       FLOOR((list_cosine_similarity(p.pe, s.se)) * 10000 + 0.5) / 10000 AS cos,
-                       s.nb
-                     FROM probes p JOIN store s ON p.bk = s.bk),
-            rpre AS (SELECT pid, cos, nb,
-                       row_number() OVER (PARTITION BY pid ORDER BY cos DESC, nb) AS rn
-                     FROM cand),
-            rpost AS (SELECT pid, cos, nb,
-                        row_number() OVER (PARTITION BY pid ORDER BY cos DESC, nb) AS rn
-                      FROM cand WHERE nb % 10 = 1)
-            SELECT phase, pid AS probe_id, CAST(rn AS INT) AS rn, nb, cos,
-              CASE WHEN nb % 10 = 1 THEN 'delta1' ELSE 'base' END AS src
-            FROM (SELECT 'pre' AS phase, pid, rn, nb, cos FROM rpre WHERE rn <= 3
-                  UNION ALL
-                  SELECT 'post', pid, rn, nb, cos FROM rpost WHERE rn <= 3)
-            ORDER BY phase, probe_id, rn"""))
+    Some(prePostOracle("nb % 10 = 1",
+      "CASE WHEN nb % 10 = 1 THEN 'delta1' ELSE 'base' END AS src")))
 
   val all: Seq[Q] = Seq(arrayFuncs, knnBrute, knnLsh, dedupEmbed, embedCentroid,
     knnJoin, annRecall, dedupSemantic, knnPq, hardNegatives, multiprobeLsh,

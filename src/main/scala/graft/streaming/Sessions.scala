@@ -54,13 +54,16 @@ object Sessions {
       .flatMapGroups((uid: Long, it: Iterator[SessionEvent]) => split(uid, it))(
         Encoders.product[SessionSummary])
 
-  private def stateFn(userId: Long, events: Iterator[SessionEvent],
-      state: GroupState[Vector[SessionEvent]]): Iterator[SessionSummary] = {
+  /** The streaming state step shared by the gap-session operators: buffer
+    * the user's events, and once the watermark passes the last event +
+    * gap (the event-time timeout) emit `seal` of the buffered events. */
+  private[streaming] def sealOnGap[E, O](events: Iterator[E], state: GroupState[Vector[E]],
+      tsUs: E => Long)(seal: Iterator[E] => Iterator[O]): Iterator[O] =
     if (state.hasTimedOut) {
       // Watermark passed the gap horizon: every buffered session is sealed.
       val buffered = state.getOption.getOrElse(Vector.empty)
       state.remove()
-      split(userId, buffered.iterator)
+      seal(buffered.iterator)
     } else {
       val buffered = state.getOption.getOrElse(Vector.empty) ++ events
       state.update(buffered)
@@ -68,12 +71,15 @@ object Sessions {
       // event (flatMapGroupsWithState does NOT drop late rows) could put
       // last+gap at or below the watermark, which setTimeoutTimestamp
       // rejects — clamp just above it so the group seals next batch.
-      val candidate = buffered.map(_.ts_us / 1000).max + GapUs / 1000
+      val candidate = buffered.map(tsUs(_) / 1000).max + GapUs / 1000
       val floor = state.getCurrentWatermarkMs() + 1000
       state.setTimeoutTimestamp(math.max(candidate, floor))
       Iterator.empty
     }
-  }
+
+  private def stateFn(userId: Long, events: Iterator[SessionEvent],
+      state: GroupState[Vector[SessionEvent]]): Iterator[SessionSummary] =
+    sealOnGap(events, state, (e: SessionEvent) => e.ts_us)(split(userId, _))
 
   /** Streaming sessionization — requires a watermark on the source's
     * event-time column; sessions emit when the watermark passes the last
@@ -102,7 +108,7 @@ final case class SessionPath(user_id: Long, session_id: Long, path: String)
   * because a global top-k over an unbounded stream is a different
   * (complete-output) contract; path emission is append-safe.
   *
-  * State discipline is identical to [[Sessions.stateFn]]: per-user event
+  * State discipline is [[Sessions.sealOnGap]], shared: per-user event
   * buffer, sealed by an event-time timeout at last-event + gap, late
   * events clamped just above the watermark so the group re-seals next
   * batch. The agreement spec (StreamingSpec) runs both realizations over
@@ -142,20 +148,8 @@ object SessionPaths {
         Encoders.product[SessionPath])
 
   private def stateFn(userId: Long, events: Iterator[PathEvent],
-      state: GroupState[Vector[PathEvent]]): Iterator[SessionPath] = {
-    if (state.hasTimedOut) {
-      val buffered = state.getOption.getOrElse(Vector.empty)
-      state.remove()
-      pathsOf(userId, buffered.iterator)
-    } else {
-      val buffered = state.getOption.getOrElse(Vector.empty) ++ events
-      state.update(buffered)
-      val candidate = buffered.map(_.ts_us / 1000).max + GapUs / 1000
-      val floor = state.getCurrentWatermarkMs() + 1000
-      state.setTimeoutTimestamp(math.max(candidate, floor))
-      Iterator.empty
-    }
-  }
+      state: GroupState[Vector[PathEvent]]): Iterator[SessionPath] =
+    Sessions.sealOnGap(events, state, (e: PathEvent) => e.ts_us)(pathsOf(userId, _))
 
   /** Streaming realization — requires a watermark on `ts`. */
   def sessionPathsStream(ds: Dataset[PathEvent]): Dataset[SessionPath] =

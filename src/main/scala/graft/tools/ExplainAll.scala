@@ -6,13 +6,14 @@ import graft.Session
 
 /** Dumps the formatted physical plan of every declared query to a
   * markdown file — the plan-audit artifact (are filters pushed, joins
-  * broadcast, aggregates partial?). Usage:
-  *   sbt "runMain graft.tools.ExplainAll [sfDir] [outFile]"
+  * broadcast, aggregates partial?). Generated on demand, not committed;
+  * PlanSpec holds the structural pins. Usage:
+  *   sbt "runMain graft.tools.ExplainAll <sfDir> <outFile>"
   */
 object ExplainAll {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = if (args.length > 1) args(1) else "PLANS.md"
+    require(args.length == 2, "usage: ExplainAll <sfDir> <outFile>")
+    val Array(dir, out) = args
     val spark = Session(4)
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by graft.tools.ExplainAll at ")

@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.ExplainMode
 import graft.Session
 
 /** Dumps `.explain("formatted")` of the named queries to
-  * <outDir>/<query>_<tag>.txt — the per-change plan evidence the
-  * optimization rounds commit under plans/r16/. Usage:
+  * <outDir>/<query>_<tag>.txt — per-change plan evidence (before/after
+  * pairs, as commit 9de9dbf recorded for round 16). Usage:
   *   sbt "runMain graft.tools.ExplainSome <sfDir> <outDir> <tag> q_a q_b ..."
   * Runs each query once first so the dumped plan is the AQE-final one.
   */

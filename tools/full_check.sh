@@ -12,6 +12,9 @@ rm -rf spark-warehouse
 count_tmp() { find "${TMPDIR:-/tmp}" -maxdepth 1 -name 'graft-*' 2>/dev/null | wc -l; }
 TMP_BEFORE=$(count_tmp)
 
+echo "=== duplicated lines in src/main (report only, never gates) ==="
+python3 tools/dup_lines.py || true
+
 echo "=== compile + tests ==="
 sbt -batch test 2>&1 | grep -aE "Tests: succeeded|All tests passed|TESTS FAILED|Failed tests" | head -5
 TMP_AFTER=$(count_tmp)
