@@ -38,6 +38,10 @@ object Session {
       // the pinned UTC session timezone
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      // nanos-vintage events.parquet reads `ts` as a raw long (Tables.events);
+      // pinned here so no read writes the conf of a live session, and the
+      // schema memo's conf key stays the same before and after events
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", warehouse)
       .getOrCreate()
@@ -51,11 +55,10 @@ object Session {
   /** Cache every input table of `dir`, as the reference engine holds its
     * whole input in memory. Spark's CacheManager then substitutes the
     * InMemoryRelation into every query that scans the same file. A table
-    * missing from `dir` is skipped.
+    * whose file is absent from `dir` is skipped; any other failure
+    * (a corrupt footer, OOM, an interrupt) propagates.
     */
   def cacheTables(spark: SparkSession, dir: String): Unit =
-    Tables.names.foreach { n =>
-      try Tables(spark, dir, n).cache().count()
-      catch { case _: Throwable => () }
-    }
+    Tables.names.filter(Tables.exists(spark, dir, _))
+      .foreach(n => Tables(spark, dir, n).cache().count())
 }

@@ -1,14 +1,34 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md / FIXTURES.md).
   *
-  * All queries read tables exclusively through this object so that scan-level
-  * concerns (the events nanosecond-timestamp quirk, future bucketing /
+  * Every fixture read goes through this object, the streaming events
+  * source included, so that scan-level concerns (the events
+  * nanosecond-timestamp quirk, the schema memo, future bucketing /
   * partition layout decisions) live in exactly one place.
+  *
+  * Schema memo: a parquet read without a schema starts a one-task Spark
+  * job to read the file footer, on every query build, cached table or
+  * not. Each read here supplies the file schema instead, from one
+  * JVM-wide memo keyed on
+  *   - the path exactly as the caller gave it (a symlink is an entry of
+  *     its own),
+  *   - the (name, length, mtime) of every leaf file under that path, so
+  *     a rewritten file or an overwritten directory misses, and
+  *   - the session's `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*`
+  *     confs, which decide how a footer maps to Spark types.
+  * This is catalog metadata, the schema a metastore would hold for the
+  * table. It is not result caching: no data is kept, and every scan
+  * reads the files as before. The memo holds strings and schemas only,
+  * never a session.
   */
 object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
@@ -17,8 +37,69 @@ object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, sfDir)
-      case n        => spark.read.parquet(s"$sfDir/$n.parquet")
+      case n        => parquet(spark, path(sfDir, n))
     }
+
+  private def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
+
+  /** Whether table `name` has a file in `sfDir`. */
+  def exists(spark: SparkSession, sfDir: String, name: String): Boolean =
+    leaves(spark, path(sfDir, name)).nonEmpty
+
+  private final case class Leaf(name: String, length: Long, mtime: Long)
+
+  /** (path, parquet confs) → (the leaf files the schema was read from, schema).
+    * A changed listing replaces the entry, so a path holds one entry per
+    * conf set however often its files are rewritten.
+    */
+  private val schemas =
+    new ConcurrentHashMap[(String, Map[String, String]), (Seq[Leaf], StructType)]()
+
+  /** The files under `path` (the file itself for a plain file), sorted by
+    * name; empty when nothing exists there.
+    */
+  private def leaves(spark: SparkSession, path: String): Seq[Leaf] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val st = fs.getFileStatus(p)
+      if (st.isFile) Seq(Leaf(st.getPath.toString, st.getLen, st.getModificationTime))
+      else {
+        val it = fs.listFiles(p, true)
+        val out = Seq.newBuilder[Leaf]
+        while (it.hasNext) {
+          val f = it.next()
+          out += Leaf(f.getPath.toString, f.getLen, f.getModificationTime)
+        }
+        out.result().sortBy(_.name)
+      }
+    } catch { case _: FileNotFoundException => Nil }
+  }
+
+  private def parquetConfs(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+
+  /** `path` read as parquet with its schema taken from the memo. When
+    * nothing exists at `path`, Spark's own read raises its usual error.
+    */
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val files = leaves(spark, path)
+    if (files.isEmpty) spark.read.parquet(path)
+    else {
+      val key = (path, parquetConfs(spark))
+      val memo = schemas.get(key)
+      val schema =
+        if (memo != null && memo._1 == files) memo._2
+        else {
+          val inferred = spark.read.parquet(path).schema
+          schemas.put(key, (files, inferred))
+          inferred
+        }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
 
   /** Spread a relation across the session's shuffle parallelism WHEN the
     * source gave it fewer splits — the small-unsplittable-file fix for
@@ -65,6 +146,8 @@ object Tables {
     else df
   }
 
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** Driver-generated events.parquet has shipped `ts` in two vintages:
     * TIMESTAMP(NANOS), which Spark's vectorized reader rejects — read nanos
     * as a raw long (legacy flag) and truncate to microseconds, the identical
@@ -73,12 +156,23 @@ object Tables {
     * session-wide `parquet.inferTimestampNTZ.enabled=false` + UTC pins, so
     * oracle comparisons stay exact either way.
     */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+  def events(spark: SparkSession, sfDir: String): DataFrame = withMicrosTs(eventsFile(spark, sfDir))
+
+  /** events.parquet as its file holds it: `ts` is a raw long in the nanos
+    * vintage. `Session` pins the legacy flag at build; a session built
+    * elsewhere gets it set once, on its first events read.
+    */
+  private[graft] def eventsFile(spark: SparkSession, sfDir: String): DataFrame = {
+    if (!spark.conf.getOption(NanosAsLong).contains("true")) spark.conf.set(NanosAsLong, "true")
+    parquet(spark, path(sfDir, "events"))
+  }
+
+  /** Truncate a nanos-vintage raw-long `ts` to a microsecond TIMESTAMP;
+    * a µs-vintage `ts` already is one and passes through.
+    */
+  private[graft] def withMicrosTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case _        => raw
     }
-  }
 }

@@ -29,9 +29,9 @@ object MapReduce {
       reduceFn: (K, Iterator[V]) => IterableOnce[O])(
       implicit kvEnc: Encoder[(K, V)], kEnc: Encoder[K], oEnc: Encoder[O]): Dataset[O] =
     input
-      .flatMap(mapFn)
-      .groupByKey(_._1)
-      .flatMapGroups((k: K, it: Iterator[(K, V)]) => reduceFn(k, it.map(_._2)))
+      .mapPartitions(new MapSide(mapFn))
+      .groupByKey(new KeyOf[K, V])
+      .flatMapGroups(new ReduceSide(reduceFn))
 
   /** Aggregating form — the combiner the reference lacks: an associative
     * fold runs map-side (partial aggregation) before the shuffle, so only
@@ -50,6 +50,28 @@ object MapReduce {
       override def bufferEncoder: Encoder[B] = bEnc
       override def outputEncoder: Encoder[O] = oEnc
     }
-    input.flatMap(mapFn).groupByKey(_._1).agg(agg.toColumn)
+    input.mapPartitions(new MapSide(mapFn)).groupByKey(new KeyOf[K, V]).agg(agg.toColumn)
+  }
+
+  // The facade's functions as named classes. A plan prints a function
+  // argument by its toString, and a JDK lambda's carries a hidden-class
+  // address that differs on every run, so plan text could not be
+  // compared across runs.
+
+  private final class MapSide[I, K, V](f: I => IterableOnce[(K, V)])
+      extends (Iterator[I] => Iterator[(K, V)]) with Serializable {
+    def apply(in: Iterator[I]): Iterator[(K, V)] = in.flatMap(f)
+    override def toString: String = "MapReduce.map"
+  }
+
+  private final class KeyOf[K, V] extends (((K, V)) => K) with Serializable {
+    def apply(kv: (K, V)): K = kv._1
+    override def toString: String = "MapReduce.key"
+  }
+
+  private final class ReduceSide[K, V, O](f: (K, Iterator[V]) => IterableOnce[O])
+      extends ((K, Iterator[(K, V)]) => IterableOnce[O]) with Serializable {
+    def apply(k: K, group: Iterator[(K, V)]): IterableOnce[O] = f(k, group.map(_._2))
+    override def toString: String = "MapReduce.reduce"
   }
 }

@@ -19,23 +19,15 @@ import org.apache.spark.sql.functions._
   */
 object Streams {
 
-  /** events.parquet as a bounded stream, with the same timestamp
-    * normalization as `Tables.events`: nanos-vintage files surface `ts` as
-    * a raw long (legacy flag) and need the µs truncation; µs-vintage files
-    * already read as TIMESTAMP and pass through.
+  /** events.parquet as a bounded stream, with the file schema and the
+    * timestamp normalization of `Tables.events`: nanos-vintage files
+    * surface `ts` as a raw long and need the µs truncation; µs-vintage
+    * files already read as TIMESTAMP and pass through.
     */
-  def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val raw = spark.readStream
-      .schema(fileSchema)
-      .parquet(s"$sfDir/events.parq*") // glob: the file source wants a dir/glob
-    fileSchema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ => raw
-    }
-  }
+  def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.withMicrosTs(spark.readStream
+      .schema(Tables.eventsFile(spark, sfDir).schema)
+      .parquet(s"$sfDir/events.parq*")) // glob: the file source wants a dir/glob
 
   /** Tumbling 1-hour windowed counts with a 1-hour watermark — the
     * streaming twin of q_time_window.

@@ -67,4 +67,12 @@ class MapReduceFacadeSpec extends AnyFunSuite {
     assert(out.count(_._1 == "b") === 2)
     assert(!out.exists(_._1 == "a"))
   }
+
+  test("q_mr_char_count's plan text names the facade's functions, not per-run lambda classes") {
+    val df = Registry.byName("q_mr_char_count").build(spark, TestSpark.sf0001)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("$Lambda"), plan)
+    assert(plan.contains("MapReduce.reduce"), plan)
+  }
 }

@@ -41,6 +41,10 @@ SPARK_GRAFT_EXTRA_JAVA_OPTS="-Dspark.sql.adaptive.enabled=false" \
   | grep -a "\[verify\].*failed" || true
 python3 tools/check.py /root/testdata/sf0.001 /tmp/graft_vnoaqe | tail -1
 
+echo "=== build-time Spark jobs, every registry id @ sf0.001 (report only, never gates) ==="
+sbt -batch "runMain graft.tools.ProfileQueries $HOME/testdata/sf0.001" 2>&1 \
+  | grep -a '"total_build_jobs"' || true
+
 echo "=== bench @ sf0.1 ==="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" 2>&1 \
   | grep -a '"metric"' | head -1
