@@ -60,7 +60,11 @@ final class QueryMetrics private (private val sc: SparkContext) extends SparkLis
   override def onJobStart(ev: SparkListenerJobStart): Unit = synchronized {
     val g = groupOf(ev.properties)
     if (g != null) {
-      g.jobStarted(ev.jobId, ev.properties.getProperty("callSite.short", "?"), ev.time)
+      // Spark passes a job's call site as its result stage's name; the
+      // property is there only when a caller set it explicitly
+      val site = Option(ev.properties.getProperty("callSite.short"))
+        .orElse(ev.stageInfos.maxByOption(_.stageId).map(_.name))
+      g.jobStarted(ev.jobId, site.getOrElse("?"), ev.time)
       // a stage an earlier job of the group already lists keeps its entry
       val fresh = ev.stageInfos.zipWithIndex.flatMap { case (si, i) =>
         progressOwner.put(si.stageId, g)

@@ -18,7 +18,15 @@ import org.apache.spark.sql.functions._
   * is iteration-order independent, so the output is deterministic even
   * though the loop runs a data-dependent number of rounds.
   *
-  * Scale posture (100 TB): each round is a join + min-aggregate + one
+  * Scale posture (100 TB): a candidate graph of at most
+  * `spark.sql.autoBroadcastJoinThreshold / 16` pairs (16 bytes per
+  * (doc_a, doc_b) pair: 655,360 pairs at the default 10 MB) is collected
+  * once and labelled by a union-find on the driver, with no rounds. That
+  * is the broadcast bound because every round of the loop below already
+  * ships its whole label table through the driver as a broadcast join
+  * side under it; a graph that fits it gains nothing from the rounds, and
+  * a threshold <= 0 (broadcasts off) turns the driver path off too.
+  * Larger graphs run the loop: each round is a join + min-aggregate + one
   * pointer-jumping self-join, all hash-partitioned on node id — no
   * driver-side graph state. The jump step (lbl ← min(lbl, lbl(lbl)))
   * halves the remaining pointer depth every round, so round count is
@@ -126,24 +134,79 @@ object GraphQueries {
   }
 
   /** Symmetrize candidate pairs and label their connected components:
-    * (doc_a, doc_b) → (node, component). Materializes the candidate set
-    * once so the propagation loop's repeated scans reuse it. Single home
-    * for the wiring shared by q_cc_dedup and q_corpus_pipeline.
+    * (doc_a, doc_b) → (node, component). Single home for the dedup
+    * closure shared by q_cc_dedup, q_corpus_pipeline and the pipeline
+    * store. The candidate set is persisted and computed once. If it fits
+    * the broadcast bound (the object's scale posture), it is collected and
+    * labelled on the driver by [[minLabels]]; otherwise the
+    * [[connectedComponents]] loop runs over the persisted candidates.
     */
   private[graft] def componentsOf(candPairs: DataFrame): DataFrame = {
-    // persisted lazily: the cc loop's first convergence count (one job
-    // away) materializes the cache; the old eager count() here was a
-    // whole extra job per consumer (r17, guide §1.2)
+    val spark = candPairs.sparkSession
     val cand = candPairs.persist()
-    val edges = cand.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(cand.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    // The propagation loop has materialized its final labels by the time
-    // connectedComponents returns, so the candidate cache can be released
-    // even though `cc` executes later (a cache miss would recompute
-    // candPairs, still correctly).
-    val cc = connectedComponents(edges)
-    cand.unpersist()
-    cc
+    val bound = spark.sessionState.conf.autoBroadcastJoinThreshold / 16
+    val pairs =
+      if (bound <= 0) None
+      else {
+        val got = cand.select(col("doc_a"), col("doc_b"))
+          .limit(math.min(bound + 1, Int.MaxValue.toLong).toInt).collect()
+        if (got.length <= bound) Some(got) else None
+      }
+    pairs match {
+      case Some(rows) =>
+        val (node, component) = minLabels(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+        import spark.implicits._
+        val labels = node.indices.map(i => (node(i), component(i)))
+          .toDF("node", "component")
+        cand.unpersist()
+        labels
+      case None =>
+        val edges = cand.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+          .union(cand.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+        // The propagation loop has materialized its final labels by the
+        // time connectedComponents returns, so the candidate cache can be
+        // released even though `cc` executes later (a cache miss would
+        // recompute candPairs, still correctly).
+        val cc = connectedComponents(edges)
+        cand.unpersist()
+        cc
+    }
+  }
+
+  /** Union-find over the undirected edges (a(i), b(i)): every distinct
+    * endpoint, ascending, beside its component's minimum id — the labels
+    * hash-min converges to. Nodes are indexed by their position in the
+    * sorted id array and the lower index always becomes the root, so a
+    * root is its component's minimum; path compression keeps finds flat.
+    */
+  private def minLabels(a: Array[Long], b: Array[Long]): (Array[Long], Array[Long]) = {
+    val all = new Array[Long](a.length + b.length)
+    System.arraycopy(a, 0, all, 0, a.length)
+    System.arraycopy(b, 0, all, a.length, b.length)
+    java.util.Arrays.sort(all)
+    var n = 0
+    var i = 0
+    while (i < all.length) {
+      if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(all, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (parent(y) != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    i = 0
+    while (i < a.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, a(i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, b(i)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 1
+    }
+    (ids, Array.tabulate(n)(x => ids(find(x))))
   }
 
   /** Dedup clustering: minhash-LSH candidate pairs → connected components

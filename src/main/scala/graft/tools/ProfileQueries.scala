@@ -20,9 +20,10 @@ import graft.{Caches, QueryMetrics, Registry, Session}
   * latency (sequential stage chains); task_ms ≈ exec_ms × cores = real
   * compute. Usage:
   *   sbt "runMain graft.tools.ProfileQueries <sfDir> [q_a q_b ...]"
-  * With no ids it profiles every registry id. Either way it ends with one
-  * `{"total_build_jobs":…}` line summed over the ids. Reports the SECOND
-  * run of each query (warm caches, JIT done), matching Bench's
+  * With no ids it times the build only, of every registry id: no action
+  * runs, and each line carries just the build fields. Either way it ends
+  * with one `{"total_build_jobs":…}` line summed over the ids. Reports
+  * the SECOND run of each query (warm caches, JIT done), matching Bench's
   * steady-state protocol; only the measured pass's own job groups are
   * counted. A query that fails prints an `error` line and is left out of
   * the total.
@@ -43,25 +44,30 @@ object ProfileQueries {
 
   def main(args: Array[String]): Unit = {
     val dir = args.head
-    val ids = if (args.length > 1) args.tail.toSeq else Registry.all.map(_.name).sorted
+    val buildsOnly = args.length == 1
+    val ids = if (buildsOnly) Registry.all.map(_.name).sorted else args.tail.toSeq
     val spark = Session(Session.cpus(Session.allCores))
     Session.cacheTables(spark, dir)
     var buildJobs, profiled = 0
     ids.foreach { id =>
       val q = Registry.byName(id)
       // pass 1: warm-up (JIT, codegen, footer caches), untimed
-      try { q.build(spark, dir).count(); () }
+      try { val df = q.build(spark, dir); if (!buildsOnly) df.count(); () }
       catch { case e: Throwable => System.err.println(s"[profile] $id warm-up: ${e.getMessage}") }
       Caches.releaseAll()
       try {
         val ((df, buildMs), b) = QueryMetrics.measure(spark)(timed(q.build(spark, dir)))
-        val ((_, execMs), r) = QueryMetrics.measure(spark)(timed(df.count()))
-        val phases = df.queryExecution.tracker.phases
-          .map { case (k, v) => s""""$k":${v.durationMs}""" }.mkString("{", ",", "}")
-        println(s"""{"id":"$id","build_ms":$buildMs,"build_jobs":${b.jobs.size},""" +
-          s""""exec_ms":$execMs,"phases":$phases,"jobs":${r.jobs.size},"stages":${r.stagesCompleted},""" +
-          s""""tasks":${r.tasks},"task_ms":${r.taskMs},"shuffle_w":${r.shuffleWriteBytes},""" +
-          s""""shuffle_r":${r.shuffleReadBytes},"per_job":${jobList(r)},""" +
+        val action =
+          if (buildsOnly) ""
+          else {
+            val ((_, execMs), r) = QueryMetrics.measure(spark)(timed(df.count()))
+            val phases = df.queryExecution.tracker.phases
+              .map { case (k, v) => s""""$k":${v.durationMs}""" }.mkString("{", ",", "}")
+            s""""exec_ms":$execMs,"phases":$phases,"jobs":${r.jobs.size},"stages":${r.stagesCompleted},""" +
+              s""""tasks":${r.tasks},"task_ms":${r.taskMs},"shuffle_w":${r.shuffleWriteBytes},""" +
+              s""""shuffle_r":${r.shuffleReadBytes},"per_job":${jobList(r)},"""
+          }
+        println(s"""{"id":"$id","build_ms":$buildMs,"build_jobs":${b.jobs.size},""" + action +
           s""""build_per_job":${jobList(b)}}""")
         buildJobs += b.jobs.size
         profiled += 1

@@ -122,6 +122,75 @@ class DedupPropertiesSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  private val threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  // The loop's one driver-thread action is its per-round convergence
+  // count(); its broadcast and exchange jobs run on AQE threads and carry
+  // no call site of ours.
+  private def loopJobs(r: QueryMetrics.Reading): Int =
+    r.jobs.count(_.callSite.startsWith("count at GraphQueries.scala"))
+
+  test("componentsOf == driver union-find on both paths, a 300-node path included") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import spark.implicits._
+    def agrees(es: List[(Long, Long)]): Boolean = {
+      // reference: min-label union-find over a plain map
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      es.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val want = es.flatMap(e => Seq(e._1, e._2)).distinct.map(v => v -> find(v)).toMap
+      val cand = es.toDF("doc_a", "doc_b")
+      def got = graft.operators.GraphQueries.componentsOf(cand).as[(Long, Long)].collect().toMap
+      got == want && TestSpark.withConf(threshold, "-1")(got) == want
+    }
+    assert(agrees((1L until 300L).map(i => (i, i + 1)).toList))
+    val edgeGen = for {
+      n <- Gen.choose(2, 40)
+      m <- Gen.choose(1, 60)
+      es <- Gen.listOfN(m, Gen.zip(Gen.choose(0L, n - 1L), Gen.choose(0L, n - 1L)))
+    } yield es.filter { case (a, b) => a != b }
+    val prop = Prop.forAll(edgeGen)(es => es.isEmpty || agrees(es))
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
+    Caches.releaseAll()
+    assert(res.passed, res.status.toString)
+  }
+
+  test("componentsOf runs on the driver up to exactly autoBroadcastJoinThreshold / 16 pairs") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L))
+    val cand = pairs.toDF("doc_a", "doc_b")
+    def run(bytes: Long): (Map[Long, Long], QueryMetrics.Reading) =
+      TestSpark.withConf(threshold, bytes.toString) {
+        val (rows, r) = QueryMetrics.measure(spark)(
+          graft.operators.GraphQueries.componentsOf(cand).as[(Long, Long)].collect())
+        (rows.toMap, r)
+      }
+    val (atBound, driver) = run(16L * pairs.size)
+    val (overBound, loop) = run(16L * (pairs.size - 1))
+    Caches.releaseAll()
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L)
+    assert(atBound === want)
+    assert(overBound === want)
+    assert(loopJobs(driver) === 0, driver.jobs)
+    assert(driver.jobs.map(_.callSite).forall(_.startsWith("collect at ")), driver.jobs)
+    assert(loopJobs(loop) > 0, loop.jobs)
+    assert(loop.jobs.size > driver.jobs.size)
+  }
+
+  test("q_cc_dedup builds without a connectedComponents round under the default bound") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (_, r) = QueryMetrics.measure(spark)(Registry.byName("q_cc_dedup").build(spark, dir))
+    assert(loopJobs(r) === 0, r.jobs)
+    // the candidate cache is released on return, not left to releaseAll
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(before))
+  }
+
   test("cc_dedup: exactly one canonical doc per component") {
     val cc = Registry.byName("q_cc_dedup").build(spark, dir)
     val perComp = cc.groupBy(col("component"))

@@ -30,7 +30,7 @@ for SF in 0.001 0.01 0.1; do
   python3 tools/check.py "/root/testdata/sf$SF" "/tmp/graft_v$SF" | tail -1
 done
 
-echo "=== determinism probes @ sf0.001 (7 shuffle partitions; AQE off) ==="
+echo "=== determinism probes @ sf0.001 (7 shuffle partitions; AQE off; broadcasts off) ==="
 rm -rf /tmp/graft_v7p
 SPARK_GRAFT_CPUS=7 sbt -batch "runMain graft.Verify /root/testdata/sf0.001 /tmp/graft_v7p" 2>&1 \
   | grep -a "\[verify\].*failed" || true
@@ -40,8 +40,15 @@ SPARK_GRAFT_EXTRA_JAVA_OPTS="-Dspark.sql.adaptive.enabled=false" \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.001 /tmp/graft_vnoaqe" 2>&1 \
   | grep -a "\[verify\].*failed" || true
 python3 tools/check.py /root/testdata/sf0.001 /tmp/graft_vnoaqe | tail -1
+# broadcasts off also turns off the dedup closure's driver union-find, so
+# every connected-components caller runs its loop
+rm -rf /tmp/graft_vnobc
+SPARK_GRAFT_EXTRA_JAVA_OPTS="-Dspark.sql.autoBroadcastJoinThreshold=-1" \
+  sbt -batch "runMain graft.Verify $HOME/testdata/sf0.001 /tmp/graft_vnobc" 2>&1 \
+  | grep -a "\[verify\].*failed" || true
+python3 tools/check.py $HOME/testdata/sf0.001 /tmp/graft_vnobc | tail -1
 
-echo "=== build-time Spark jobs, every registry id @ sf0.001 (report only, never gates) ==="
+echo "=== build-time Spark jobs, every registry id, builds only (no action) @ sf0.001 (report only, never gates) ==="
 sbt -batch "runMain graft.tools.ProfileQueries $HOME/testdata/sf0.001" 2>&1 \
   | grep -a '"total_build_jobs"' || true
 
