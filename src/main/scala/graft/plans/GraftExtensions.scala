@@ -3,6 +3,8 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
 /** SparkSessionExtensions hook registering the engine's native expressions
   * for SQL use: pass it to a session builder's `withExtensions`, or call
@@ -14,6 +16,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    GraftExtensions.codegenCache
     e.injectFunction(GraftExtensions.cosineSim)
     e.injectFunction(GraftExtensions.wordNGrams)
     e.injectFunction(GraftExtensions.tokenStats)
@@ -49,8 +52,44 @@ object GraftExtensions {
     new ExpressionInfo(classOf[TokenStats].getName, "token_stats"),
     (exprs: Seq[Expression]) => TokenStats(exprs(0)))
 
-  /** Register the engine's SQL functions on an existing session. */
+  /** Entries of the JVM's codegen class cache: 15 times the ~124 and ~134
+    * classes a warm pass of either perfbench workload cycles through.
+    */
+  private val CodegenCacheEntries = 2048
+
+  /** Sizes Spark's codegen class cache once per JVM, from either way of
+    * registering graft.
+    *
+    * Spark compiles every whole-stage and expression codegen class with
+    * Janino into one JVM-wide LRU cache, sized by the static conf
+    * `spark.sql.codegen.cache.maxEntries` (default 100). `CodeGenerator`'s
+    * module initializer reads it, from `SQLConf.get`, once: at the JVM's
+    * first compile. A warm pass of sql_analytics uses ~124 classes and one
+    * of llm_ingest ~134; a cycle longer than an LRU almost never hits, so
+    * at 100 entries each warm pass recompiled 97 and 103 of them, about a
+    * third of a warm sql_analytics pass. The whole registry uses ~5000, so
+    * a full-registry pass still recompiles.
+    *
+    * `SQLConf.get` returns the thread's existing conf before the active
+    * session's, so initializing the module under a conf holding
+    * [[CodegenCacheEntries]] sizes the cache. The module itself is touched
+    * (a constant `final val` of it is inlined and would not initialize it).
+    * This holds only where the JVM has compiled no class before graft
+    * registers; otherwise the cache keeps the size it was built with.
+    * `local[N]` is one JVM; the executors of a real cluster compile in
+    * JVMs of their own and keep Spark's default.
+    */
+  private lazy val codegenCache: AnyRef = {
+    val conf = new SQLConf
+    conf.setConf(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES, CodegenCacheEntries)
+    SQLConf.withExistingConf(conf)(CodeGenerator)
+  }
+
+  /** Register the engine's SQL functions on an existing session, sizing
+    * the JVM's codegen cache first (see [[codegenCache]]).
+    */
   def register(spark: SparkSession): Unit = {
+    codegenCache
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction(
       "cosine_sim", exprs => cosineSim._3(exprs), "built-in")

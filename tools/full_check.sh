@@ -48,7 +48,7 @@ SPARK_GRAFT_EXTRA_JAVA_OPTS="-Dspark.sql.autoBroadcastJoinThreshold=-1" \
   | grep -a "\[verify\].*failed" || true
 python3 tools/check.py $HOME/testdata/sf0.001 /tmp/graft_vnobc | tail -1
 
-echo "=== build-time Spark jobs, every registry id, builds only (no action) @ sf0.001 (report only, never gates) ==="
+echo "=== build-time Spark jobs and codegen compiles, every registry id, builds only (no action) @ sf0.001 (report only, never gates) ==="
 sbt -batch "runMain graft.tools.ProfileQueries $HOME/testdata/sf0.001" 2>&1 \
   | grep -a '"total_build_jobs"' || true
 
